@@ -6,8 +6,6 @@ increasing modification times (relative to the moment of generation) so a
 file-stream source discovers them in generation order.
 
   backfill(seed, out)        agents + IDE feed backlog and a report dir
-  live(seed, out, seconds)   sf0.025-shaped events: an 80% prefix backlog and
-                             a trickle of small files to publish on a schedule
   tables(seed, out)          sf0.01-shaped analytics tables for the queries
 """
 import json
@@ -42,7 +40,11 @@ def _rng(seed, stream):
 
 
 def _write(table, path, schema, mtime):
-    pq.write_table(pa.Table.from_pylist(table, schema=schema), path)
+    # plain, uncompressed and without statistics: compression and min/max
+    # stats of multi-KB payloads depend on how a seed's sessions fall into
+    # files, and the input bytes the storage ratio divides by should not
+    pq.write_table(pa.Table.from_pylist(table, schema=schema), path, compression="none",
+                   use_dictionary=False, write_statistics=False)
     os.utime(path, (mtime, mtime))
 
 
@@ -64,14 +66,18 @@ def _split(rows, n_files):
 # cdc_backfill
 # --------------------------------------------------------------------------
 
-BACKFILL = dict(sessions=160, ide_sessions=48, agent_files=64, ide_files=16,
+# Pipeline.run takes 64 files per trigger: the agents feed drains in three
+# micro-batches and the IDE feed in two, so later batches merge into state
+# that earlier ones left and rewrite sink buckets that already hold rows
+BACKFILL = dict(sessions=160, ide_sessions=48, agent_files=192, ide_files=128, start_window_s=3600,
                 report_sessions=40, bad_per_mille=5, max_messages=20, max_length=160)
 
 
 def backfill(seed, out):
     """Agents feed (growing conversation-JSON checkpoints, heavy-tailed
-    session lengths), IDE feed (growing editor-state blobs), per-session
-    report files, and planted malformed rows on both feeds.
+    session lengths, sessions starting within one hour so they run side by
+    side), IDE feed (growing editor-state blobs), per-session report files,
+    and planted malformed rows on both feeds.
     Returns a dict of counts the benchmark checks against."""
     p = BACKFILL
     rng = _rng(seed, 1)
@@ -84,7 +90,7 @@ def backfill(seed, out):
     with_ide = set(rng.choice(p["sessions"], p["ide_sessions"], replace=False).tolist())
     for s in range(p["sessions"]):
         uid = 1000 + s
-        t = EPOCH_2024_US + int(rng.integers(0, 7 * DAY_US))
+        t = EPOCH_2024_US + int(rng.integers(0, p["start_window_s"] * 1_000_000))
         history = {task: [] for task in AGENT_TASKS}
         for step in range(int(lengths[s])):
             t += int(rng.exponential(20e6)) + 1
@@ -173,80 +179,6 @@ def _plant_bad_ide(rng, rows, per_mille):
             r["checkpoint_ts"] = "not-a-timestamp"
         rows.insert(int(i) + j + 1, r)
     return n
-
-
-# --------------------------------------------------------------------------
-# cdc_live
-# --------------------------------------------------------------------------
-
-LIVE = dict(rows=25_000, users=375, prefix_share=0.8, prefix_files=16,
-            files_per_s=5, late_per_file=3, moved_per_file=3, bad_per_file=2)
-
-
-def live(seed, out, seconds):
-    """sf0.025-shaped events (375 users, 30 days, 9-byte props). The first
-    80% by event time is the prefix backlog; the rest is cut into
-    `files_per_s * seconds` small files staged for publication, with late
-    redeliveries, rows delayed into the next file, and malformed rows."""
-    p = LIVE
-    rng = _rng(seed, 2)
-    n = p["rows"]
-    ts = np.sort(EPOCH_2024_US + rng.integers(0, 30 * DAY_US, n))
-    users = rng.integers(0, p["users"], n)
-    types = rng.integers(0, len(EVENT_TYPES), n)
-    ks = rng.integers(0, 100, n)
-    values = np.round(rng.random(n) * 560, 2)
-    rows = [dict(event_id=i, ts=int(ts[i]), user_id=int(users[i]), event_type=EVENT_TYPES[types[i]],
-                 value=float(values[i]), props='{"k": %d}' % ks[i]) for i in range(n)]
-    cut = int(n * p["prefix_share"])
-    prefix, rest = rows[:cut], rows[cut:]
-    n_files = max(1, p["files_per_s"] * seconds)
-    files = [list(f) for f in _split(rest, n_files)]
-    next_id = n
-    late = moved = bad = 0
-    for k, f in enumerate(files):
-        # out of order: a user's last row in this file arrives one file later,
-        # behind rows of other users with later event times
-        if k + 1 < len(files):
-            last = {}
-            for i, r in enumerate(f):
-                if r["user_id"] not in last or r["ts"] >= f[last[r["user_id"]]]["ts"]:
-                    last[r["user_id"]] = i
-            pick = sorted(rng.choice(sorted(last.values()), size=min(p["moved_per_file"], len(last)),
-                                     replace=False), reverse=True)
-            for i in pick:
-                files[k + 1].append(f.pop(int(i)))
-                moved += 1
-        # late: redeliveries of an already-sent non-signup row, 1 us after
-        # the original; the engine skips or absorbs them without a diff
-        sent = prefix if k == 0 else prefix + [r for g in files[:k] for r in g]
-        for _ in range(p["late_per_file"]):
-            while True:
-                src = sent[int(rng.integers(0, len(sent)))]
-                if src["event_type"] not in ("signup", None) and None not in (src["user_id"], src["props"]):
-                    break
-            f.append(dict(src, event_id=next_id, ts=src["ts"] + 1))
-            next_id += 1
-            late += 1
-        for j in range(p["bad_per_file"]):
-            r = dict(f[int(rng.integers(0, len(f)))], event_id=next_id)
-            r[("user_id", "event_type", "props")[(k + j) % 3]] = None
-            f.append(r)
-            next_id += 1
-            bad += 1
-    base = _mtime_base()
-    os.makedirs(f"{out}/feed")
-    os.makedirs(f"{out}/staged")
-    _to_ts(prefix)
-    for i, chunk in enumerate(_split(prefix, p["prefix_files"])):
-        _write(chunk, f"{out}/feed/part-{i:05d}.parquet", EVENTS_SCHEMA, base + i)
-    staged_rows = 0
-    for k, f in enumerate(files):
-        _to_ts(f)
-        _write(f, f"{out}/staged/trickle-{k:05d}.parquet", EVENTS_SCHEMA, base + 100 + k)
-        staged_rows += len(f)
-    return dict(prefix_rows=len(prefix), staged_rows=staged_rows, staged_files=len(files),
-                files_per_s=p["files_per_s"], late=late, moved=moved, malformed=bad)
 
 
 # --------------------------------------------------------------------------

@@ -4,9 +4,7 @@ End-to-end metrics are reported on every workload. Per-layer metrics come
 from the traced run (`--trace 1`); a layer that does no work on a workload
 reports 0.
 """
-import json
 import math
-import os
 import re
 import statistics
 
@@ -85,39 +83,17 @@ def median(values):
     return statistics.median(values) if values else 0.0
 
 
-def source_log(ckpt):
-    """path -> batchId from a file stream source's log under `ckpt`
-    (plain batch files and `.compact` files alike)."""
-    d = os.path.join(ckpt, "sources", "0")
-    out = {}
-    if not os.path.isdir(d):
-        return out
-    for name in os.listdir(d):
-        if name.startswith("."):
-            continue
-        with open(os.path.join(d, name)) as fh:
-            for line in fh.read().splitlines()[1:]:
-                if line.startswith("{"):
-                    entry = json.loads(line)
-                    out[_local(entry["path"])] = entry["batchId"]
-    return out
-
-
-def _local(path):
-    return re.sub(r"^file:(//)?", "", path).replace("%20", " ")
-
-
-def file_latencies(published, ckpt, query_id, batches):
+def file_latencies(published, batch_of, query_id, batches):
     """Seconds from each file's due time to the progress event of the batch
-    whose source log lists it. Returns (latencies, unconsumed files)."""
-    batch_of = source_log(ckpt)
+    that read it. `batch_of` maps a file's path to its batch id, as the
+    engine read it from the stream's source log. Returns (latencies,
+    unconsumed files)."""
     seen = {b["batch"]: b["seen_ms"] for b in batches if b["query"] == query_id}
     lat, missing = [], []
     for p in published:
-        b = batch_of.get(_local(p["file"]))
+        b = batch_of.get(p["file"])
         if b is None or b not in seen:
             missing.append(p["file"])
         else:
             lat.append((seen[b] - p["due_ms"]) / 1000.0)
     return lat, missing
-

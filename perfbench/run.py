@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """graft lifecycle benchmark.
 
-  python3 perfbench/run.py --workload <cdc_backfill|cdc_live|query_suite>
+  python3 perfbench/run.py --workload <cdc_backfill|query_suite>
                            --seed <n> --seconds <s> --trace <0|1>
 
 Run from the repository root. Builds the engine plus the benchmark harness
@@ -12,7 +12,6 @@ metrics are the end-to-end ones, with --trace 1 the per-layer ones. The
 line before it carries details: the named lifecycle metrics, the
 calibration probe, the effective Spark conf and every failure.
 
-Set PERFBENCH_KEEP=1 to keep the run's work dir under perfbench/.work.
 With --artifact DIR a traced run also writes DIR/<workload>.json: the
 detail and result lines plus every recorded span.
 """
@@ -34,7 +33,7 @@ import gen  # noqa: E402
 import metrics as M  # noqa: E402
 import oracle  # noqa: E402
 
-WORKLOADS = ("cdc_backfill", "cdc_live", "query_suite")
+WORKLOADS = ("cdc_backfill", "query_suite")
 RUN_LIMIT_S = 170
 BUILD_LIMIT_S = 840
 ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
@@ -91,11 +90,9 @@ def build():
     return lines[-1]
 
 
-def make_inputs(workload, seed, seconds, input_dir):
+def make_inputs(workload, seed, input_dir):
     if workload == "cdc_backfill":
         counts = gen.backfill(seed, input_dir)
-    elif workload == "cdc_live":
-        counts = gen.live(seed, input_dir, seconds)
     else:
         counts = gen.tables(seed, input_dir)
         with open(os.path.join(input_dir, "queries.json"), "w") as fh:
@@ -143,24 +140,14 @@ def end_to_end(workload, res, work, detail):
         lat = []
         for d in drains:
             for feed in ("cdc", "ide"):
-                ckpt = f"{d['dir']}/w/ckpt_{feed}"
                 files = [dict(file=os.path.join(work, "input", f"feed_{feed}", f), due_ms=d["start_ms"])
                          for f in sorted(os.listdir(os.path.join(work, "input", f"feed_{feed}")))]
-                got, missing = M.file_latencies(files, ckpt, d["queries"][f"ckpt_{feed}"], raw["batches"])
+                got, missing = M.file_latencies(files, d["batch_of"][feed], d["queries"][f"ckpt_{feed}"],
+                                                raw["batches"])
                 lat += got
                 failed += len(missing)
         detail.update(events_per_s=throughput, drains=len(drains),
                       drain_wall_s=[d["wall_s"] for d in drains])
-    elif workload == "cdc_live":
-        lat, missing = M.file_latencies(raw["published"], raw["checkpoint"], raw["query"], raw["batches"])
-        attempted += len(raw["published"])
-        failed += len(missing)
-        late = [(p["done_ms"] - p["due_ms"]) / 1000.0 for p in raw["published"]]
-        throughput = raw["busy_events_per_s"]
-        label, value = M.tail(lat) if lat else ("p50", 0.0)
-        detail.update(freshness_p50_s=M.median(lat), freshness_tail_s=value, freshness_tail_pct=label,
-                      events_per_s=throughput, published=len(raw["published"]), unconsumed=missing,
-                      generator_late_p50_s=M.median(late), generator_late_max_s=max(late, default=0.0))
     else:
         samples = raw["samples"]
         lat = [s["s"] for s in samples]
@@ -173,7 +160,8 @@ def end_to_end(workload, res, work, detail):
         for s in samples:
             per_query.setdefault(s["query"], []).append(s["s"])
         detail.update(suite_pass_s=M.median([p["s"] for p in raw["passes"]]), query_p50_s=M.median(lat),
-                      passes=len(raw["passes"]), oracle_checked=checked,
+                      passes=len(raw["passes"]), pass_s=[p["s"] for p in raw["passes"]],
+                      oracle_checked=checked,
                       query_s={q: M.median(v) for q, v in per_query.items()})
     label, tail_value = M.tail(lat)
     detail.update(latency_tail_s=tail_value, latency_tail_pct=label, latency_samples=len(lat))
@@ -187,15 +175,9 @@ def end_to_end(workload, res, work, detail):
     return attempted, failed, values
 
 
-def per_layer(workload, res):
+def per_layer(res):
     layers = dict(res["layers"])
     layers["host.calibration_s"] = res["raw"]["calibration_s"]
-    if workload == "cdc_live":
-        raw = res["raw"]
-        on, off = ([M.file_latencies([p for p in raw["published"] if p["traced"] == t], raw["checkpoint"],
-                                     raw["query"], raw["batches"])[0] for t in (True, False)])
-        if on and off:
-            layers["trace.overhead_ratio"] = M.median(on) / M.median(off) - 1.0
     return {name: {"value": float(layers.get(name, 0.0)), "unit": unit} for name, unit in M.PER_LAYER}
 
 
@@ -214,7 +196,7 @@ def main():
     work = os.path.join(HERE, ".work", f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     try:
-        make_inputs(args.workload, args.seed, args.seconds, os.path.join(work, "input"))
+        make_inputs(args.workload, args.seed, os.path.join(work, "input"))
         res = run_engine(cp, args, work, deadline)
         detail = {"workload": args.workload, "seed": args.seed, "cpus": res["raw"]["cpus"],
                   "calibration_s": res["raw"]["calibration_s"], "engine_marks_s": res["marks"]}
@@ -222,7 +204,7 @@ def main():
         detail.update(failed_ratio=failed / max(1, attempted), failures=res["failures"],
                       conf=res["raw"]["conf"])
         if args.trace:
-            out = per_layer(args.workload, res)
+            out = per_layer(res)
         else:
             out = {k: {"value": float(v), "unit": M.END_TO_END[k][0]} for k, v in values.items()}
         result = {"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": out}
@@ -237,8 +219,7 @@ def main():
         print(json.dumps({"detail": detail}))
         print(json.dumps(result))
     finally:
-        if os.environ.get("PERFBENCH_KEEP") != "1":
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

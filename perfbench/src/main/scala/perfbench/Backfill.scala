@@ -14,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * time is up (two drains at least). Set-up is the session start plus one
   * untimed drain of the first few files of each feed.
   *
-  * Traced runs alternate untraced and traced drains, so the wall-time
-  * difference between the two is the tracing overhead.
+  * Traced runs follow `Schedule`: after one warm drain, untraced and
+  * traced drains alternate, and the wall-time difference between a traced
+  * drain and its untraced neighbours is the tracing overhead.
   */
 object Backfill {
   private val Ckpts = Seq("ckpt_cdc", "ckpt_ide", "ckpt_cdc_dl", "ckpt_ide_dl")
@@ -40,8 +41,10 @@ object Backfill {
       val wall = Common.secondsSince(t)
       val endMs = Clock.ms
       val ids = Ckpts.map(c => c -> Common.checkpointQueryId(s"$dir/w/$c")).toMap
+      // which batch read each feed file, for the runner's latency samples
+      val batchOf = Seq("cdc", "ide").map(f => f -> Replay.sourceLog(s"$dir/w/ckpt_$f")).toMap
       Map("dir" -> dir, "start_ms" -> startMs, "end_ms" -> endMs, "wall_s" -> wall,
-        "events" -> feedRows, "queries" -> ids)
+        "events" -> feedRows, "queries" -> ids, "batch_of" -> batchOf)
     }
 
     // warm-up: the same lifecycle over the first few files of each feed
@@ -59,10 +62,10 @@ object Backfill {
     val traced = mutable.Set.empty[Int]
     val deadline = System.nanoTime() + ctx.seconds * 1_000_000_000L
     var i = 1
-    // at least two drains: the first still warms the engine, and a fixed
-    // floor keeps the median from switching between one and two samples
-    while (drains.size < 2 || System.nanoTime() < deadline) {
-      val on = ctx.trace && drains.size % 2 == 1
+    // a floor of two drains keeps the median from switching between one and
+    // two samples
+    while (!Schedule.done(ctx.trace, drains.size, System.nanoTime() >= deadline)) {
+      val on = Schedule.traced(ctx.trace, drains.size)
       tracer.enabled = on
       if (on) sc.addSparkListener(counters)
       out.attempt(s"drain $i") { drains += drain(i); true }
@@ -104,8 +107,6 @@ object Backfill {
       counters: SparkCounters, drains: Seq[Map[String, Any]], traced: Set[Int],
       out: Outcome): Unit = {
     def idx(d: Map[String, Any]) = d("dir").toString.stripPrefix(s"${ctx.work}/drain").toInt
-    def wall(on: Boolean) = Common.median(drains.filter(d => traced(idx(d)) == on)
-      .map(_("wall_s").asInstanceOf[Double]))
     val d = drains.filter(x => traced(idx(x))).last
     val w = s"${d("dir")}/w"
     val ids = d("queries").asInstanceOf[Map[String, String]]
@@ -135,7 +136,7 @@ object Backfill {
       "state.checkpoint_bytes" -> Seq("ckpt_cdc", "ckpt_ide").map(c => Common.du(s"$w/$c")).sum.toDouble,
       "sources.enrich_s" -> enrichS,
       "sources.report_files" -> ctx.counts("report_files").toDouble,
-      "trace.overhead_ratio" -> (wall(true) / wall(false) - 1.0))
+      "trace.overhead_ratio" -> Schedule.overhead(drains.map(_("wall_s").asInstanceOf[Double]).toIndexedSeq))
   }
 
   /** Time the enrichment layer alone: read-once report ingest on a fresh

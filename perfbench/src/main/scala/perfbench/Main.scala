@@ -41,7 +41,6 @@ object Main {
     try {
       workload match {
         case "cdc_backfill" => Backfill.run(ctx, spark, log, tracer, t0, out)
-        case "cdc_live" => Live.run(ctx, spark, log, tracer, t0, out)
         case "query_suite" => Suite.run(ctx, spark, tracer, t0, out)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }

@@ -10,12 +10,13 @@ import scala.jdk.CollectionConverters._
 /** query_suite: closed loop, one client. Round-robin passes over a slice of
   * `SparkEntry` queries in a seed-permuted order, each result materialised
   * with a noop write as `Bench` does. Set-up is the session, a neutral
-  * warm-up and one cold pass, which builds the standing artifacts and
-  * writes every result for the oracle check.
+  * warm-up, one cold pass, which builds the standing artifacts and writes
+  * every result for the oracle check, and one untimed warm pass.
   *
   * Passes repeat until the measuring time is up, two at least. Traced runs
-  * alternate untraced and traced passes; the difference in pass wall is the
-  * tracing overhead.
+  * follow `Schedule`: after one warm pass, untraced and traced passes
+  * alternate; the difference in pass wall between a traced pass and its
+  * untraced neighbours is the tracing overhead.
   */
 object Suite {
   def run(ctx: Ctx, spark: SparkSession, tracer: Tracer, t0: Long, out: Outcome): Unit = {
@@ -40,6 +41,10 @@ object Suite {
       }
       if (out.failures.exists(_.startsWith(s"$name cold"))) dead += name
     }
+    // one untimed pass as the measured ones run: passes right after the cold
+    // one still get faster by up to a tenth each as the JIT warms
+    order.filterNot(dead).foreach(name =>
+      SparkEntry.queries(name)(spark, tables).write.format("noop").mode("overwrite").save())
     Files.writeString(Paths.get(s"${ctx.work}/oracle_sql.json"),
       Json.write(order.map(q => q -> SparkEntry.oracleSql.getOrElse(q, "")).toMap))
     out.raw("setup_s") = Common.secondsSince(t0)
@@ -53,8 +58,8 @@ object Suite {
     val deadline = System.nanoTime() + ctx.seconds * 1_000_000_000L
     var p = 0
     // two passes at least, so every run's median rests on the same count
-    while (p < 2 || System.nanoTime() < deadline) {
-      val traced = ctx.trace && p % 2 == 1
+    while (!Schedule.done(ctx.trace, p, System.nanoTime() >= deadline)) {
+      val traced = Schedule.traced(ctx.trace, p)
       if (traced) {
         tracer.enabled = true
         sc.addSparkListener(counters)
@@ -122,7 +127,6 @@ object Suite {
       out.layers(s"operators.$fam.driver_jobs") = ss.flatMap(acc).map(_.jobs).sum / per
     }
     out.layers ++= Streams.sparkMetrics(counters, nPasses)
-    def wall(on: Boolean) = Common.median(passes.filter(_("traced") == on).map(_("s").asInstanceOf[Double]))
-    out.layers("trace.overhead_ratio") = wall(true) / wall(false) - 1.0
+    out.layers("trace.overhead_ratio") = Schedule.overhead(passes.map(_("s").asInstanceOf[Double]).toIndexedSeq)
   }
 }

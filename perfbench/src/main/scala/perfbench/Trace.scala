@@ -20,6 +20,33 @@ object Clock {
   def ms: Double = baseMs + (System.nanoTime() - baseNs) / 1e6
 }
 
+/** Which units of work (drains, passes) a run traces, and when it may stop.
+  * Untraced runs measure two units at least. In traced runs unit 0 only
+  * warms up; after it untraced and traced units alternate (1 off, 2 on,
+  * 3 off, ...), at least six units, ending on an untraced one.
+  */
+object Schedule {
+  def traced(trace: Boolean, unit: Int): Boolean = trace && unit >= 2 && unit % 2 == 0
+
+  def done(trace: Boolean, units: Int, pastDeadline: Boolean): Boolean =
+    pastDeadline && (if (trace) units >= 6 && units % 2 == 0 else units >= 2)
+
+  /** Tracing overhead from the walls of a traced run's units, in order:
+    * median over traced units of wall / expected untraced wall, minus one.
+    * The expectation is the parabola through the three nearest untraced
+    * units, which follows the run's warm-up drift (larger than the overhead
+    * and curved, so a mean of two neighbours would not).
+    */
+  def overhead(walls: IndexedSeq[Double]): Double = {
+    val n = walls.length
+    Common.median((2 until n - 1 by 2).map { u =>
+      val xs = if (u + 3 < n) Seq(u - 1, u + 1, u + 3) else Seq(u - 3, u - 1, u + 1)
+      val expected = xs.map(x => walls(x) * xs.filter(_ != x).map(o => (u - o).toDouble / (x - o)).product).sum
+      walls(u) / expected
+    }) - 1.0
+  }
+}
+
 /** One traced interval. `group` ties the spans of one batch or pass. */
 final case class Span(id: Int, name: String, layer: String, start: Double, end: Double,
     parent: Int, group: String)
@@ -177,12 +204,12 @@ final class PlanTimes extends QueryExecutionListener {
 }
 
 /** Every micro-batch progress event and query termination, stamped with
-  * the wall time the listener saw it. The streaming workloads read
-  * freshness, batch phases, state and row accounting from here.
+  * the wall time the listener saw it. `cdc_backfill` reads file latency,
+  * batch phases, state and row accounting from here.
   */
 object ProgressLog {
-  final case class Batch(query: String, batchId: Long, seenMs: Double, startMs: Double,
-      inputRows: Long, durations: Map[String, Long], state: Option[StateInfo], dropped: Long)
+  final case class Batch(query: String, batchId: Long, seenMs: Double, inputRows: Long,
+      durations: Map[String, Long], state: Option[StateInfo], dropped: Long)
   final case class StateInfo(total: Long, updated: Long, removed: Long, memory: Long, commitMs: Long)
 }
 
@@ -209,7 +236,7 @@ final class ProgressLog(tracer: Tracer) extends StreamingQueryListener {
     val dropped = p.observedMetrics.asScala.values.headOption
       .filter(_.schema.fieldNames.contains("rows_dropped"))
       .map(_.getAs[Long]("rows_dropped")).getOrElse(0L)
-    batches.add(Batch(p.id.toString, p.batchId, now, start, p.numInputRows, dur, st, dropped))
+    batches.add(Batch(p.id.toString, p.batchId, now, p.numInputRows, dur, st, dropped))
     val trig = dur.getOrElse("triggerExecution", 0L).toDouble
     if (p.numInputRows > 0)
       tracer.record("streaming.batch", "streaming", start, start + trig, s"${p.id}:${p.batchId}")

@@ -42,9 +42,6 @@ class InputsAreSeeded(unittest.TestCase):
     def test_backfill(self):
         self.check(gen.backfill)
 
-    def test_live(self):
-        self.check(lambda seed, out: gen.live(seed, out, 2))
-
     def test_tables(self):
         self.check(gen.tables)
 
@@ -58,26 +55,6 @@ class InputsAreSeeded(unittest.TestCase):
             bad += sum(1 for r in ide if r["blob"] is None or r["checkpoint_ts"] == "not-a-timestamp")
             self.assertEqual(bad, counts["malformed"])
             self.assertEqual(len(agents), counts["agent_rows"])
-
-    def test_live_keeps_per_key_order_across_files(self):
-        """A session task's rows never go back in event time from one trickle
-        file to a later one; late redeliveries (ids past the generated rows)
-        are the planted exception."""
-        import pyarrow.parquet as pq
-        with tempfile.TemporaryDirectory() as t:
-            gen.live(5, t, 3)
-            seen = {}
-            staged = sorted(os.listdir(os.path.join(t, "staged")))
-            for name in staged:
-                rows = pq.read_table(os.path.join(t, "staged", name)).to_pylist()
-                rows = [r for r in rows if r["event_id"] < gen.LIVE["rows"]]
-                for r in rows:
-                    key = (r["user_id"], r["event_type"])
-                    if key in seen and r["ts"] < seen[key]:
-                        self.fail(f"{name}: {key} went back in time")
-                for r in rows:
-                    key = (r["user_id"], r["event_type"])
-                    seen[key] = max(seen.get(key, r["ts"]), r["ts"])
 
 
 class TailRule(unittest.TestCase):
@@ -118,47 +95,28 @@ class MetricNames(unittest.TestCase):
 
 
 class FreshnessMapping(unittest.TestCase):
-    """A toy stream's checkpoint: three batches, the third written as a
-    compacted log; files map to the progress event of the batch whose
-    source log lists them."""
+    """A toy stream: three batches as its source log cut the files (the
+    engine hands the runner this path -> batch id map); each file maps to
+    the progress event of the batch that read it."""
 
-    def toy(self, root):
-        src = os.path.join(root, "ckpt", "sources", "0")
-        os.makedirs(src)
-
-        def log(name, entries):
-            with open(os.path.join(src, name), "w") as fh:
-                fh.write("v1\n" + "".join(json.dumps(e) + "\n" for e in entries))
-
-        def entry(f, b):
-            return {"path": f"file://{root}/feed/{f}", "timestamp": 0, "batchId": b}
-
-        log("0", [entry("a.parquet", 0), entry("b.parquet", 0)])
-        log("1", [entry("c.parquet", 1)])
-        log("2.compact", [entry("a.parquet", 0), entry("b.parquet", 0), entry("c.parquet", 1),
-                          entry("d.parquet", 2)])
-        return os.path.join(root, "ckpt")
+    BATCH_OF = {"/feed/a.parquet": 0, "/feed/b.parquet": 0, "/feed/c.parquet": 1, "/feed/d.parquet": 2}
 
     def test_latency_is_progress_minus_due(self):
-        with tempfile.TemporaryDirectory() as t:
-            ckpt = self.toy(t)
-            published = [{"file": f"{t}/feed/{f}", "due_ms": due}
-                         for f, due in [("a.parquet", 1000), ("b.parquet", 1500), ("c.parquet", 2000),
-                                        ("d.parquet", 2500), ("e.parquet", 3000)]]
-            batches = [{"query": "q", "batch": 0, "seen_ms": 4000},
-                       {"query": "q", "batch": 1, "seen_ms": 5000},
-                       {"query": "q", "batch": 2, "seen_ms": 6500},
-                       {"query": "other", "batch": 3, "seen_ms": 9000}]
-            lat, missing = M.file_latencies(published, ckpt, "q", batches)
-            self.assertEqual(lat, [3.0, 2.5, 3.0, 4.0])
-            self.assertEqual(missing, [f"{t}/feed/e.parquet"])
+        published = [{"file": f"/feed/{f}", "due_ms": due}
+                     for f, due in [("a.parquet", 1000), ("b.parquet", 1500), ("c.parquet", 2000),
+                                    ("d.parquet", 2500), ("e.parquet", 3000)]]
+        batches = [{"query": "q", "batch": 0, "seen_ms": 4000},
+                   {"query": "q", "batch": 1, "seen_ms": 5000},
+                   {"query": "q", "batch": 2, "seen_ms": 6500},
+                   {"query": "other", "batch": 3, "seen_ms": 9000}]
+        lat, missing = M.file_latencies(published, self.BATCH_OF, "q", batches)
+        self.assertEqual(lat, [3.0, 2.5, 3.0, 4.0])
+        self.assertEqual(missing, ["/feed/e.parquet"])
 
     def test_batch_without_progress_is_unconsumed(self):
-        with tempfile.TemporaryDirectory() as t:
-            ckpt = self.toy(t)
-            lat, missing = M.file_latencies([{"file": f"{t}/feed/d.parquet", "due_ms": 0}], ckpt, "q",
-                                            [{"query": "q", "batch": 0, "seen_ms": 1}])
-            self.assertEqual((lat, len(missing)), ([], 1))
+        lat, missing = M.file_latencies([{"file": "/feed/d.parquet", "due_ms": 0}], self.BATCH_OF, "q",
+                                        [{"query": "q", "batch": 0, "seen_ms": 1}])
+        self.assertEqual((lat, len(missing)), ([], 1))
 
 
 if __name__ == "__main__":
