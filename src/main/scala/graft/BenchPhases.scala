@@ -16,18 +16,6 @@ package graft
 object BenchPhases {
   private val acc = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
-  /** True only inside the measurement harnesses (Bench/Profile call
-    * `enable()`). Operators whose phase ATTRIBUTION needs a persist +
-    * count that the query itself does not (q201/q204: the synthetic
-    * corpus is consumed exactly once downstream) gate that bookkeeping
-    * here, so a production run never pays a whole-corpus MEMORY_AND_DISK
-    * materialization for the sake of a bench sub-timing (r21 verdict
-    * item 10). Timed bench behavior is unchanged — the harness always
-    * enables it.
-    */
-  @volatile var enabled: Boolean = false
-  def enable(): Unit = { enabled = true }
-
   def add(phase: String, sec: Double): Unit = {
     acc.merge(phase, Double.box(sec),
       (a: java.lang.Double, b: java.lang.Double) => Double.box(a + b))

@@ -32,7 +32,6 @@ object Profile {
     val outDir = Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r22"))
     Files.createDirectories(outDir)
-    BenchPhases.enable() // turn on phase-attribution bookkeeping (see BenchPhases.enabled)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -2031,8 +2031,8 @@ object SparkEntry {
         |FROM b ORDER BY doc_id""".stripMargin),
     // .warc.zst archive (q185): the q135 contract over one-zstd-frame-
     // per-record archives (the ecosystem's next production shape) —
-    // frame boundaries from the non-decompressing header+block walk,
-    // payloads through the full RFC 8878 decoder; identical oracle, so
+    // frame boundaries from the non-decompressing frame-size walk,
+    // payloads inflated by libzstd; identical oracle, so
     // a boundary or inflate slip changes rows
     "q185_warc_zst_extract" -> (htmlExtractCtes(
       " ||\n    '<p>" + operators.WarcOps.Utf8Marker +
@@ -2073,9 +2073,9 @@ object SparkEntry {
         |  true AS ratio_lt_60
         |FROM b ORDER BY doc_id""".stripMargin),
     // multistream .xml.bz2 dump (q196): the Wikipedia-dump staple —
-    // shards written by the repo's own conforming bzip2 encoder (one
-    // stream per 10-page batch, streams concatenated), walked by the
-    // libbz2-fixture-proven decoder stream-at-a-time; title/text
+    // shards written with commons-compress bzip2 (one stream per
+    // 10-page batch, streams concatenated), walked stream-at-a-time;
+    // title/text
     // recovered through the XML entity round-trip. The oracle replays
     // the stream ordinal with the same row_number arithmetic and the
     // text sha from documents directly.
@@ -2087,8 +2087,8 @@ object SparkEntry {
         |  sha256(text) AS text_sha
         |FROM documents ORDER BY doc_id""".stripMargin,
     // .jsonl.lz4 dataset shards (q197): one LZ4 frame per shard of
-    // JSON lines, written by the repo's frame encoder and walked by
-    // the liblz4-fixture-proven decoder; JSON escaping round-trips
+    // JSON lines, written and walked with commons-compress; JSON
+    // escaping round-trips
     // Spark-side so the oracle replays ordinals and shas directly
     "q197_lz4_shard" ->
       """SELECT doc_id,
@@ -2405,9 +2405,9 @@ object SparkEntry {
         |    chr(10) || 'marker.txt') AS names_sha,
         |  sha256(a.ptxt || chr(10) || 'Tar № ' || a.doc_id) AS text_sha
         |FROM agg a, ld ORDER BY a.doc_id""".stripMargin,
-    // .tar.xz ingestion (q201): the q147 member layout in a conformant
-    // xz stream (stored LZMA2 chunks; LZMA core foreign-proven
-    // decode-side), walked back through the container door
+    // .tar.xz ingestion (q201): the q147 member layout in an xz
+    // stream (LZMA2 or stored chunks behind BCJ/delta filters), walked
+    // back through the container door
     "q201_tar_xz" ->
       """WITH d AS (SELECT doc_id, (1 + doc_id % 3)::INT AS k,
         |    list_filter(string_split_regex(text, '[ \t\r\n]+'), x -> x <> '') AS ws

@@ -156,9 +156,6 @@ object DedupOps {
       array_min(transform(baseHashes, h => xxhash64(lit(splitmix(i.toLong)), h)))
     }: _*)
 
-  def minhashSignature(shingleArr: Column, k: Int): Column =
-    minhashSignatureFromHashes(transform(shingleArr, s => xxhash64(s)), k)
-
   /** LSH band keys: the signature cut into `bands` rows of `rowsPerBand`,
     * each band hashed (band index mixed in so buckets never collide across
     * bands).

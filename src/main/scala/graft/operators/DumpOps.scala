@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * article batches each compressed as an independent bzip2 STREAM,
   * streams concatenated into one file so an index can seek to a batch
   * and decompress it alone. The engine both WRITES the shape (with
-  * its own conforming bzip2 encoder) and WALKS it (per-stream decode,
-  * page parse, entity unescape) — so q196's oracle pins the whole
-  * loop from `documents` text arithmetic.
+  * commons-compress bzip2) and WALKS it (per-stream decode, page
+  * parse, entity unescape) — so q196's oracle pins the whole loop
+  * from `documents` text arithmetic.
   *
   * Scale shape (100 TB): shard construction and the walk are both
   * per-row executor work around one group-by (the corpus-construction
@@ -57,7 +57,7 @@ object DumpOps {
           val xml = batch.map { case (id, text) =>
             buildPage(id, s"Doc $id", text)
           }.mkString
-          out.write(Bzip2.encode(xml.getBytes(utf8)))
+          out.write(Codecs.bzip2Encode(xml.getBytes(utf8)))
         }
         (gid, out.toByteArray)
       }
@@ -76,7 +76,7 @@ object DumpOps {
     * unescape. Malformed shards surface as one typed row.
     */
   private[graft] def parseDump(gid: Long, bytes: Array[Byte]): Seq[DumpPage] =
-    Bzip2.decodeStreams(bytes) match {
+    Codecs.bzip2Streams(bytes) match {
       case Left(r) => Seq(DumpPage(gid, -1, "bad-bzip2:" + r, -1L, "", ""))
       case Right(streams) =>
         val utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -88,13 +88,12 @@ object DumpOps {
         }
     }
 
-  /** q196: multistream `.xml.bz2` dump round-trip — write with the
-    * repo's own conforming bzip2 encoder, walk with the
-    * foreign-fixture-proven decoder, per-page title/text recovered
-    * through the XML entity round-trip. The oracle replays doc_id,
-    * title, the stream ordinal (row_number arithmetic over the same
-    * grouping), and the text sha straight from `documents` — a BWT,
-    * Huffman, RLE, stream-boundary, or escaping slip changes rows.
+  /** q196: multistream `.xml.bz2` dump round-trip — write and walk
+    * stream-at-a-time with commons-compress bzip2, per-page title/text
+    * recovered through the XML entity round-trip. The oracle replays
+    * doc_id, title, the stream ordinal (row_number arithmetic over the
+    * same grouping), and the text sha straight from `documents` — a
+    * stream-boundary or escaping slip changes rows.
     */
   def q196DumpMultistream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -112,11 +111,11 @@ object DumpOps {
   /** q197: `.jsonl.lz4` dataset shards — the other shard codec a
     * training pipeline meets (beside gzip WET, zstd WARC, TFRecord,
     * WebDataset): one LZ4 frame per shard of JSON lines, written by
-    * the repo's own frame encoder (independent 64 KiB blocks, content
-    * checksum) and walked back by the liblz4-fixture-proven decoder;
-    * JSON string escaping round-trips through Spark's own
-    * `to_json`/`get_json_object`, so the oracle replays doc_id, the
-    * line ordinal, and the text sha from `documents` directly.
+    * commons-compress (independent 64 KiB blocks, content checksum)
+    * and walked back the same way; JSON string escaping round-trips
+    * through Spark's own `to_json`/`get_json_object`, so the oracle
+    * replays doc_id, the line ordinal, and the text sha from
+    * `documents` directly.
     *
     * Scale shape (100 TB): per-shard executor work around the one
     * corpus-construction group-by; decode is byte-linear with the
@@ -134,12 +133,12 @@ object DumpOps {
       .as[(Long, Seq[String])]
       .map { case (gid, lines) =>
         val utf8 = java.nio.charset.StandardCharsets.UTF_8
-        (gid, Lz4.encode((lines.mkString("\n") + "\n").getBytes(utf8)))
+        (gid, Codecs.lz4Encode((lines.mkString("\n") + "\n").getBytes(utf8)))
       }
       .toDF("group_id", "shard")
     shards.as[(Long, Array[Byte])]
       .flatMap { case (gid, shard) =>
-        Lz4.decode(shard) match {
+        Codecs.lz4Decode(shard) match {
           case Left(r) => Seq((gid, -1L, "bad-lz4:" + r, ""))
           case Right(b) =>
             new String(b, java.nio.charset.StandardCharsets.UTF_8)

@@ -81,11 +81,6 @@ object MarkdownOps {
       b => b =!= "")
   }
 
-  /** Prose as ONE newline-joined string — the `documents.text` shape
-    * the rest of the pipeline consumes.
-    */
-  def markdownToText(md: Column): Column = array_join(proseBlocks(md), "\n")
-
   /** Deterministic synthetic Markdown over the documents table — the
     * q69/q122 constructed-corpus trick: the oracle rebuilds the
     * identical markup from (doc_id, text), so extraction is checked
@@ -109,16 +104,6 @@ object MarkdownOps {
       lit("\n\n- item one "), id,
       lit("\n- item two\n\n"), col("text")).as("md"))
   }
-
-  /** Exploded (doc_id, block_idx, block) prose rows — the
-    * documents-shape segmentation for per-block downstream processing
-    * (feeds `HtmlOps.mainContentBlocks` unchanged).
-    */
-  def markdownBlockRows(docs: DataFrame, mdCol: String = "md"): DataFrame =
-    docs
-      .select(col("doc_id"), posexplode(proseBlocks(col(mdCol))))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("block_idx"),
-        col("col").as("block"))
 
   /** q134: Markdown → prose + code extraction over the synthetic
     * corpus — per document the prose block count/length/sha, the first

@@ -35,10 +35,6 @@ object SentenceOps {
   private val Sentinel = "\u0001"
   private[graft] val Abbrevs = Seq("Dr.", "Prof.", "e.g.", "i.e.", "vs.")
 
-  private[graft] def plantedBlock(id: Long): String =
-    s"Dr. Smith met Prof. Jones at ${id % 10}.5 km. They left early. " +
-      s"Did they return? Yes! End $id."
-
   /** The rewrite chain over a composed text column. */
   def sentences(text: Column): Column = {
     val protectedAbbrev = Abbrevs.foldLeft(text) { (acc, a) =>

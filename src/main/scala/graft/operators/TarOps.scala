@@ -163,7 +163,7 @@ object TarOps {
       }
     } else if (isXz(bytes)) {
       // kernel/source-mirror shape: whole tar in an xz stream
-      Xz.decode(bytes) match {
+      Codecs.xzDecode(bytes) match {
         case Left(_) => ("tar.xz", "bad-xz", Nil)
         case Right(tar) =>
           val (st, ms) = parseTar(tar)
@@ -172,7 +172,7 @@ object TarOps {
     } else if (isBzip2(bytes)) {
       // the Gutenberg/dump-mirror shape: whole tar in (possibly
       // multistream) bzip2 — streams concatenate back into one stream
-      Bzip2.decode(bytes) match {
+      Codecs.bzip2Decode(bytes) match {
         case Left(_) => ("tar.bz2", "bad-bzip2", Nil)
         case Right(tar) =>
           val (st, ms) = parseTar(tar)
@@ -275,7 +275,7 @@ object TarOps {
   private[graft] def buildArchive(id: Long, text: String): Array[Byte] = {
     val tar = buildTar(archiveMembers(id, text))
     if (id % 2 == 0) tar
-    else if (id % 4 == 3) Bzip2.encode(tar) // .tar.bz2 (round 19)
+    else if (id % 4 == 3) Codecs.bzip2Encode(tar) // .tar.bz2 (round 19)
     else {
       val mid = tar.length / 2
       WarcOps.gzipBytes(java.util.Arrays.copyOfRange(tar, 0, mid)) ++
@@ -299,53 +299,30 @@ object TarOps {
   }
 
   /** q201: `.tar.xz` ingestion — the source-mirror / kernel-tarball
-    * shape: the q147 member layout wrapped in a conformant xz stream
-    * (stored LZMA2 chunks — xz is an archival INPUT; the LZMA core is
-    * foreign-fixture-proven decode-side in XzSpec) and walked back
-    * through the container door. Same per-doc arithmetic as q147 with
-    * the container pinned `tar.xz` on every row. Round 20: a third of
-    * the corpus travels through each filter-chain shape — plain
-    * LZMA2, BCJ x86 (id % 3 == 1, the compiled-binary-mirror case),
-    * delta dist 4 (id % 3 == 2) — and even ids are REALLY compressed
-    * by the LZMA encoder (odd ids keep the stored-chunk writer), so
-    * the oracle replays only if the reader reverses every filter AND
-    * the full LZMA core byte-exactly.
+    * shape: the q147 member layout wrapped in an xz stream and walked
+    * back through the container door. Same per-doc arithmetic as q147
+    * with the container pinned `tar.xz` on every row. A third of the
+    * corpus travels through each filter-chain shape — plain LZMA2, BCJ
+    * x86 (id % 3 == 1, the compiled-binary-mirror case), delta dist 4
+    * (id % 3 == 2) — and even ids are LZMA-compressed while odd ids
+    * keep stored chunks, so the oracle replays only if the reader
+    * reverses every filter and the LZMA core byte-exactly.
     *
     * Scale shape (100 TB): per-row build + walk, no exchange before
     * the output sort (the q147 contract).
     */
   def q201TarXz(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // the per-row build and walk are split by a persisted shard frame
-    // (r20 verdict item 5) so BENCH.json attributes writer-side cost
-    // (tar + filter-chain + LZMA encode — the deliberate r20 per-row
-    // work increase) separately from the reader walk; no exchange is
-    // added, so the zero-exchange-before-sort pin holds
-    val shards0 = Tables.documents(spark, dir)
+    Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
         val tar = buildTar(archiveMembers(id, t))
         val bcj = id % 3 == 1
         val dd = if (id % 3 == 2) 4 else 0
-        val xz =
-          if (id % 2 == 0) Xz.encode(tar, bcj = bcj, deltaDist = dd)
-          else Xz.encodeStored(tar, bcj = bcj, deltaDist = dd)
-        (id, xz)
+        extractArchive(id,
+          Codecs.xzEncode(tar, bcj = bcj, deltaDist = dd, stored = id % 2 == 1))
       })
-    // the shard frame is consumed exactly ONCE downstream, so the
-    // persist + count exist only for the bench's corpus_build phase
-    // attribution — gated on the harness (r22, verdict item 10): a
-    // production run never spills the whole corpus for bookkeeping
-    val shards =
-      if (graft.BenchPhases.enabled) {
-        val pinned = shards0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.BenchPhases.timed("corpus_build") { pinned.count(); () }
-        pinned
-      } else shards0
-    shards
-      .map { case (id, xz) => extractArchive(id, xz) }
       .toDF()
       .select(col("doc_id"), col("status"), col("container"),
         col("n_members").cast("long").as("n_members"),

@@ -302,7 +302,6 @@ object TiffOps {
     def entryShort(tag: Int, v: Int): Unit = {
       u16(tag); u16(3); u32(1L); u16(v); u16(0)
     }
-    def entryLong(tag: Int, v: Long): Unit = { u16(tag); u16(4); u32(1L); u32(v) }
     def entryAscii(tag: Int, len: Int, off: Long): Unit = {
       u16(tag); u16(2); u32(len.toLong); u32(off)
     }

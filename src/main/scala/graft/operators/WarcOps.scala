@@ -484,10 +484,10 @@ object WarcOps {
     * record — the format the web-archive ecosystem is migrating to),
     * with each frame's BYTE EXTENT `(offset, compressedLength)` — the
     * CDX numbers a replayer range-reads. Boundaries come from
-    * `Zstd.frameLength` (a header+block walk that never decompresses);
-    * a corrupt frame drops and the walk RESYNCS at the next frame
-    * magic — the intact frames around it all survive (the gzip-member
-    * discipline). A leading `0x184D2A5D` skippable frame is the
+    * `Zstd.frameLength` (libzstd's frame-size walk, which never
+    * decompresses); a corrupt frame drops and the walk RESYNCS at the
+    * next frame magic — the intact frames around it all survive (the
+    * gzip-member discipline). A leading `0x184D2A5D` skippable frame is the
     * webrecorder shared-dictionary convention: its content (inflated
     * first if itself a zstd frame) is parsed as an RFC 8878 §5
     * dictionary and supplied to every record-frame decode; a malformed
@@ -880,23 +880,8 @@ object WarcOps {
     */
   def q204SeekableFetch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val archives0 = syntheticWarcZstCompressed(Tables.documents(spark, dir))
-    // corpus_build phase (r20 verdict item 5): q204's bench cost was
-    // dominated by rebuilding the shards inside the timed run; the
-    // phase split makes the writer/reader attribution readable from
-    // BENCH.json alone. Adds no exchange (the plan pin holds: the one
-    // corpus-construction group-by, no join). The archives are consumed
-    // exactly ONCE downstream, so the persist + count exist only for
-    // that attribution — gated on the harness (r22, verdict item 10):
-    // a production run never spills the corpus for bookkeeping.
-    val archives =
-      if (graft.BenchPhases.enabled) {
-        val pinned = archives0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.BenchPhases.timed("corpus_build") { pinned.count(); () }
-        pinned
-      } else archives0
-    val recs = archives.select(col("group_id"), col("warc"))
+    val recs = syntheticWarcZstCompressed(Tables.documents(spark, dir))
+      .select(col("group_id"), col("warc"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (gid, warc) =>
         val (dict, _) = warcZstDict(warc) // once per archive
@@ -1193,9 +1178,9 @@ object WarcOps {
 
   /** q185: the q135 contract over a `.warc.zst` archive — one zstd
     * frame per record (the ecosystem's next production shape), walked
-    * by `Zstd.frameLength` extents and inflated by the full RFC 8878
-    * decoder; the output contract (and oracle) is exactly q135's, so
-    * any frame-boundary or inflate slip changes rows.
+    * by `Zstd.frameLength` extents and inflated by libzstd; the output
+    * contract (and oracle) is exactly q135's, so any frame-boundary or
+    * inflate slip changes rows.
     */
   def q185WarcZstExtract(spark: SparkSession, dir: String): DataFrame =
     extractToDocs(extractRecords(spark,

@@ -1,39 +1,32 @@
 package graft.operators
 
-/** Zstandard (RFC 8878) decoder — with `Brotli` this completes the
-  * modern HTTP content-coding set (`zstd` is the fourth registered
-  * coding after gzip/deflate/br). Dependency-free implementation of
-  * the complete frame format:
+import scala.util.control.NonFatal
+
+import com.github.luben.zstd.{ZstdDecompressCtx, ZstdDictDecompress, ZstdException, ZstdIOException, ZstdInputStreamNoFinalizer, Zstd => Lib}
+
+/** Zstandard (RFC 8878) — with `Brotli` this completes the modern HTTP
+  * content-coding set (`zstd` is the fourth registered coding after
+  * gzip/deflate/br).
   *
-  *   - frames (magic, header descriptor, window descriptor, optional
-  *     dictionary id / frame content size, content checksum) plus
-  *     skippable frames;
-  *   - raw / RLE / compressed blocks with cross-block entropy state
-  *     (treeless literals, repeat FSE modes, the repeated-offset
-  *     history);
-  *   - literals: raw / RLE / Huffman-compressed in 1 or 4 streams,
-  *     the tree description in both the direct (4-bit nibbles) and
-  *     FSE-compressed-weights forms, the implied last weight;
-  *   - sequences: FSE normalized-count headers (zero-run repeat flags,
-  *     the shrinking-threshold read), predefined / RLE / FSE / repeat
-  *     modes per category, the interleaved 3-state backward bitstream
-  *     with its asymmetric orders (extras OF→ML→LL, updates LL→ML→OF),
-  *     the 3-slot repeated-offset logic with the litLength-0 quirk;
-  *   - XXH64 content checksum verification.
-  *
-  * The predefined FSE distributions and the LL/ML code tables are the
-  * RFC's published constants (verified bit-exactly by the conformance
-  * fixtures: `ZstdSpec` decodes foreign libzstd streams at levels
-  * 1/3/9/19 over nine input kinds byte-exactly — reference
-  * conformance, not self-consistency).
+  * DECODING runs on libzstd (zstd-jni, shipped with Spark). This file
+  * keeps only the frame walk around it that types the errors: skippable
+  * frames, the Dictionary_ID handshake, and the output cap, checked
+  * against each frame's declared content size before anything is
+  * allocated. The foreign libzstd fixtures under
+  * `src/test/resources/zstd` are the parity gate.
   *
   * Error-as-value: `decode` returns Left(reason) on any malformed,
   * truncated, checksum-failing, or bomb-exceeding stream — never a
   * throw, never partial garbage. Scale shape: called per record
-  * inside `mapPartitions` walkers; allocation bounded by `maxOut`
-  * BEFORE trusting any header field.
+  * inside `mapPartitions` walkers, on one reused libzstd context per
+  * thread.
+  *
+  * ENCODING is hand-written: raw, dictionary-prefix and general LZ77
+  * writers, structured dictionaries (Dictionary_ID handshake, trained
+  * treeless-literals tables) and the seekable-format table.
   */
 object Zstd {
+
 
   // ------------------------------------------------------------ constants
 
@@ -67,54 +60,6 @@ object Zstd {
 
   private final case class Bail(reason: String)
       extends RuntimeException(null, null, false, false)
-
-  // ----------------------------------------------------------- bit readers
-
-  /** FORWARD LSB-first reader (FSE table descriptions). */
-  private final class FwdBits(b: Array[Byte], var bytePos: Int, val end: Int) {
-    private var bitPos = 0
-    def readBits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        if (bytePos >= end) throw Bail("truncated")
-        v |= ((b(bytePos) >> bitPos) & 1) << i
-        bitPos += 1
-        if (bitPos == 8) { bitPos = 0; bytePos += 1 }
-        i += 1
-      }
-      v
-    }
-    def alignByte(): Unit = if (bitPos != 0) { bitPos = 0; bytePos += 1 }
-  }
-
-  /** BACKWARD reader (Huffman + sequence bitstreams): the stream is
-    * read from the end; the last byte's highest set bit is the
-    * padding marker. `read` may drive `pos` negative (the FSE flush
-    * convention — missing bits are zeros); `pos` must end at exactly 0
-    * for a well-formed stream.
-    */
-  private final class BackBits(b: Array[Byte], off: Int, len: Int) {
-    if (len <= 0) throw Bail("empty-bitstream")
-    private val last = b(off + len - 1) & 0xff
-    if (last == 0) throw Bail("bitstream-marker")
-    var pos: Long = 8L * (len - 1) + (31 - Integer.numberOfLeadingZeros(last))
-    def read(n: Int): Int = {
-      pos -= n
-      if (n == 0) return 0
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val bit = pos + i
-        if (bit >= 0) {
-          val by = b(off + (bit >> 3).toInt) & 0xff
-          v |= ((by >> (bit & 7).toInt) & 1) << i
-        }
-        i += 1
-      }
-      v
-    }
-  }
 
   // ------------------------------------------------------------------ FSE
 
@@ -161,333 +106,67 @@ object Zstd {
     new FseTable(accLog, sym, nb, bs)
   }
 
-  /** One-symbol RLE "table": state 0 always emits `s` with 0 bits. */
-  private def fseRle(s: Int): FseTable =
-    new FseTable(0, Array(s), Array(0), Array(0))
-
-  /** Read an FSE table description (RFC §4.1.1) from the FORWARD
-    * stream: normalized counts with the shrinking threshold and
-    * zero-run repeat flags; ends byte-aligned.
-    */
-  private def fseReadCounts(
-      fw: FwdBits, maxSymbol: Int, maxLog: Int): (Array[Int], Int) = {
-    val accLog = fw.readBits(4) + 5
-    if (accLog > maxLog) throw Bail("fse-acclog")
-    val counts = new Array[Int](maxSymbol + 1)
-    var remaining = (1 << accLog) + 1
-    var threshold = 1 << accLog
-    var nbBits = accLog + 1
-    var charnum = 0
-    var previous0 = false
-    while (remaining > 1 && charnum <= maxSymbol) {
-      if (previous0) {
-        // zero-run: 2-bit groups, value 3 = continue
-        var go = true
-        while (go) {
-          val rep = fw.readBits(2)
-          charnum += rep
-          if (rep < 3) go = false
-          if (charnum > maxSymbol + 1) throw Bail("fse-zero-run")
-        }
-        previous0 = false
-      } else {
-        val max = (2 * threshold - 1) - remaining
-        val low = fw.readBits(nbBits - 1)
-        var count =
-          if ((low & (threshold - 1)) < max) low
-          else {
-            val v = low | (fw.readBits(1) << (nbBits - 1))
-            if (v >= threshold) v - max else v
-          }
-        count -= 1 // -1 encodes "less than 1"
-        remaining -= (if (count < 0) -count else count)
-        if (charnum > maxSymbol) throw Bail("fse-symbol-overflow")
-        counts(charnum) = count
-        charnum += 1
-        previous0 = count == 0
-        while (remaining > 1 && remaining < threshold) {
-          nbBits -= 1; threshold >>= 1
-        }
-      }
-    }
-    if (remaining != 1) throw Bail("fse-counts")
-    fw.alignByte()
-    (counts, accLog)
-  }
-
-  private def fseInit(bb: BackBits, t: FseTable): Int = bb.read(t.accLog)
-  private def fseSymbol(t: FseTable, state: Int): Int = t.symbol(state)
-  private def fseUpdate(bb: BackBits, t: FseTable, state: Int): Int =
-    t.base(state) + bb.read(t.nbBits(state))
-
-  // -------------------------------------------------------------- huffman
-
-  /** A Huffman decode table: index by the next `log` backward bits. */
-  private final class HufTable(
-      val log: Int, val symbol: Array[Byte], val nbBits: Array[Byte])
-
-  /** Weights → the single-symbol decode table (RFC §4.2.1): the last
-    * weight is implied so the total reaches a power of two.
-    */
-  private def hufFromWeights(weights0: Array[Int], nSym: Int): HufTable = {
-    var total = 0L
-    for (i <- 0 until nSym) {
-      val w = weights0(i)
-      if (w > 11) throw Bail("huf-weight")
-      if (w > 0) total += 1L << (w - 1)
-    }
-    if (total == 0) throw Bail("huf-empty")
-    // the table log is one past the highest bit of the explicit total;
-    // the gap to 2^tlog is the implied LAST weight (must be a power of
-    // two or the description is corrupt)
-    val tlog = 64 - java.lang.Long.numberOfLeadingZeros(total)
-    val target = 1L << tlog
-    val rest = target - total
-    // rest must itself be a power of two — the implied last weight
-    if (rest <= 0 || (rest & (rest - 1)) != 0) throw Bail("huf-total")
-    val lastW = (64 - java.lang.Long.numberOfLeadingZeros(rest)).toInt
-    val weights = java.util.Arrays.copyOf(weights0, nSym + 1)
-    weights(nSym) = lastW
-    if (tlog > 11) throw Bail("huf-tablelog")
-    val size = 1 << tlog
-    val sym = new Array[Byte](size)
-    val nb = new Array[Byte](size)
-    // rank start positions: weight 1 first (longest codes at the low
-    // end of the table), symbols in natural order within a weight
-    val rankCount = new Array[Int](13)
-    weights.foreach(w => if (w > 0) rankCount(w) += 1)
-    val rankStart = new Array[Int](14)
-    var acc = 0
-    for (w <- 1 to 12) {
-      rankStart(w) = acc
-      acc += rankCount(w) << (w - 1)
-    }
-    if (acc != size) throw Bail("huf-fill")
-    for (s <- weights.indices) {
-      val w = weights(s)
-      if (w > 0) {
-        val len = 1 << (w - 1)
-        var k = rankStart(w)
-        val until = k + len
-        while (k < until) {
-          sym(k) = s.toByte
-          nb(k) = (tlog + 1 - w).toByte
-          k += 1
-        }
-        rankStart(w) = until
-      }
-    }
-    new HufTable(tlog.toInt, sym, nb)
-  }
-
-  /** Read a Huffman tree description (RFC §4.2.1.1/2): direct nibble
-    * weights (first byte ≥ 128) or FSE-compressed weights. Returns
-    * (table, bytes consumed).
-    */
-  private def hufReadTable(b: Array[Byte], off: Int, end: Int): (HufTable, Int) = {
-    if (off >= end) throw Bail("truncated")
-    val h = b(off) & 0xff
-    if (h >= 128) {
-      val nSym = h - 127
-      val nBytes = (nSym + 1) / 2
-      if (off + 1 + nBytes > end) throw Bail("truncated")
-      val w = new Array[Int](nSym)
-      for (i <- 0 until nSym) {
-        val by = b(off + 1 + i / 2) & 0xff
-        w(i) = if (i % 2 == 0) by >> 4 else by & 15
-      }
-      (hufFromWeights(w, nSym), 1 + nBytes)
-    } else {
-      // FSE-compressed weights: h = compressed size
-      if (off + 1 + h > end) throw Bail("truncated")
-      val fw = new FwdBits(b, off + 1, off + 1 + h)
-      val (counts, accLog) = fseReadCounts(fw, 12, 6)
-      val table = fseBuild(counts, accLog)
-      val bitsOff = fw.bytePos
-      val bitsLen = off + 1 + h - bitsOff
-      val bb = new BackBits(b, bitsOff, bitsLen)
-      var s1 = fseInit(bb, table)
-      var s2 = fseInit(bb, table)
-      val w = new Array[Int](256)
-      var n = 0
-      var parity = 0
-      var go = true
-      while (go) {
-        if (n >= 255) throw Bail("huf-weights-overflow")
-        val st = if (parity == 0) s1 else s2
-        w(n) = fseSymbol(table, st)
-        n += 1
-        val next = fseUpdate(bb, table, st)
-        if (bb.pos < 0) {
-          // the update over-read: flush the OTHER state and stop
-          if (n >= 255) throw Bail("huf-weights-overflow")
-          w(n) = fseSymbol(table, if (parity == 0) s2 else s1)
-          n += 1
-          go = false
-        } else {
-          if (parity == 0) s1 = next else s2 = next
-          parity ^= 1
-        }
-      }
-      (hufFromWeights(w, n), 1 + h)
-    }
-  }
-
-  /** Decode `count` symbols from one backward Huffman stream: each
-    * step PEEKS the next `log` bits (zero-padded past the start — the
-    * tail convention) and consumes the decoded symbol's bit length;
-    * a well-formed stream lands on exactly zero bits.
-    */
-  private def hufDecodeStream(
-      t: HufTable, b: Array[Byte], off: Int, len: Int,
-      out: Array[Byte], outOff: Int, count: Int): Unit = {
-    val bb = new BackBits(b, off, len)
-    var i = 0
-    while (i < count) {
-      val p = bb.pos
-      if (p < 0) throw Bail("huf-stream-overrun")
-      var idx = 0
-      var k = 0
-      while (k < t.log) {
-        val bit = p - t.log + k
-        if (bit >= 0) {
-          val by = b(off + (bit >> 3).toInt) & 0xff
-          idx |= ((by >> (bit & 7).toInt) & 1) << k
-        }
-        k += 1
-      }
-      out(outOff + i) = t.symbol(idx)
-      bb.pos = p - t.nbBits(idx)
-      i += 1
-    }
-    if (bb.pos != 0) throw Bail("huf-stream-imbalance")
-  }
-
-  // ---------------------------------------------------------------- xxh64
-
-  private def xxh64(b: Array[Byte], len: Int): Long = {
-    val P1 = 0x9E3779B185EBCA87L; val P2 = 0xC2B2AE3D27D4EB4FL
-    val P3 = 0x165667B19E3779F9L; val P4 = 0x85EBCA77C2B2AE63L
-    val P5 = 0x27D4EB2F165667C5L
-    def le64(o: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def le32(o: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def round(acc: Long, in: Long): Long = {
-      val a = acc + in * P2
-      java.lang.Long.rotateLeft(a, 31) * P1
-    }
-    var p = 0
-    var h =
-      if (len >= 32) {
-        var v1 = P1 + P2; var v2 = P2; var v3 = 0L; var v4 = -P1
-        while (p + 32 <= len) {
-          v1 = round(v1, le64(p)); v2 = round(v2, le64(p + 8))
-          v3 = round(v3, le64(p + 16)); v4 = round(v4, le64(p + 24))
-          p += 32
-        }
-        var x = java.lang.Long.rotateLeft(v1, 1) +
-          java.lang.Long.rotateLeft(v2, 7) +
-          java.lang.Long.rotateLeft(v3, 12) +
-          java.lang.Long.rotateLeft(v4, 18)
-        def merge(acc: Long, v: Long): Long =
-          (acc ^ round(0L, v)) * P1 + P4
-        x = merge(x, v1); x = merge(x, v2); x = merge(x, v3); x = merge(x, v4)
-        x
-      } else P5
-    h += len.toLong
-    while (p + 8 <= len) {
-      h = java.lang.Long.rotateLeft(h ^ round(0L, le64(p)), 27) * P1 + P4
-      p += 8
-    }
-    if (p + 4 <= len) {
-      h = java.lang.Long.rotateLeft(h ^ (le32(p) * P1), 23) * P2 + P3
-      p += 4
-    }
-    while (p < len) {
-      h = java.lang.Long.rotateLeft(h ^ ((b(p) & 0xffL) * P5), 11) * P1
-      p += 1
-    }
-    h ^= h >>> 33; h *= P2; h ^= h >>> 29; h *= P3; h ^= h >>> 32
-    h
-  }
-
   // ----------------------------------------------------------- dictionary
 
-  /** A parsed zstd dictionary (RFC 8878 §5). Two forms:
-    *
-    *   - STRUCTURED (magic 0xEC30A437): id, entropy tables (Huffman
-    *     literals table, then FSE tables in OF→ML→LL order) that seed
-    *     the frame's repeat-mode state, the three repeated-offset
-    *     seeds, and the content (the window prefix matches may copy
-    *     from);
-    *   - RAW CONTENT (no magic): the whole blob is content; id 0, no
-    *     entropy, default rep offsets — RFC 8878 §5 ¶2's prefix form.
+  /** A zstd dictionary (RFC 8878 §5): the blob as shipped and its id.
+    * A blob without the dictionary magic is RAW CONTENT (id 0): the
+    * whole blob is the window prefix. Serializable, so it travels in
+    * closures; the native dictionary is built by the decoding thread.
     */
-  final class Dictionary private[Zstd] (
-      val id: Long,
-      private[Zstd] val content: Array[Byte],
-      private[Zstd] val huf: HufTable,
-      private[Zstd] val ll: FseTable,
-      private[Zstd] val ml: FseTable,
-      private[Zstd] val of: FseTable,
-      private[Zstd] val reps: Array[Long]) {
-    def contentLength: Int = content.length
-  }
+  final class Dictionary private[Zstd] (val bytes: Array[Byte], val id: Long)
+      extends Serializable
 
   val DictMagic = 0xEC30A437L
 
-  /** Parse a dictionary blob; a blob without the dictionary magic is a
-    * raw-content dictionary (id 0). Left(reason) on a malformed
-    * structured dictionary.
+  /** Wrap a dictionary blob; Left(reason) on a structured dictionary
+    * libzstd refuses to load.
     */
   def parseDictionary(b: Array[Byte]): Either[String, Dictionary] =
-    try Right(parseDictOrThrow(b))
-    catch {
-      case x: Bail => Left(x.reason)
-      case _: ArrayIndexOutOfBoundsException => Left("dict-malformed")
-    }
-
-  private def parseDictOrThrow(b: Array[Byte]): Dictionary = {
-    if (b.length < 8 || le32(b, 0) != DictMagic)
-      return new Dictionary(0L, b.clone(), null, null, null, null,
-        Array(1L, 4L, 8L))
-    val id = le32(b, 4)
-    var ip = 8
-    val (huf, hufUsed) = hufReadTable(b, ip, b.length)
-    ip += hufUsed
-    // FSE table descriptions in OF → ML → LL order (§5), each ending
-    // byte-aligned; built eagerly so a bad description is a parse
-    // error, not a first-use decode error
-    def readFse(maxSym: Int, maxLog: Int): FseTable = {
-      val fw = new FwdBits(b, ip, b.length)
-      val (counts, log) = fseReadCounts(fw, maxSym, maxLog)
-      ip = fw.bytePos
-      fseBuild(counts, log)
-    }
-    val of = readFse(31, 8)
-    val ml = readFse(52, 9)
-    val ll = readFse(35, 9)
-    if (ip + 12 > b.length) throw Bail("dict-truncated")
-    val reps = Array(le32(b, ip), le32(b, ip + 4), le32(b, ip + 8))
-    ip += 12
-    val content = java.util.Arrays.copyOfRange(b, ip, b.length)
-    // §5: each repeated offset must point inside the content
-    reps.foreach { r =>
-      if (r <= 0 || r > content.length) throw Bail("dict-rep-offset")
-    }
-    new Dictionary(id, content, huf, ll, ml, of, reps)
-  }
+    try {
+      new ZstdDictDecompress(b).close()
+      Right(new Dictionary(b.clone(), Lib.getDictIdFromDict(b)))
+    } catch { case NonFatal(_) => Left("dict-malformed") }
 
   // --------------------------------------------------------------- decode
+
+  /** One libzstd context per decoding thread, with the dictionary it
+    * last loaded: the records of one archive share its Dictionary, so
+    * the dictionary loads once per archive, not once per record. The
+    * cleaner frees the native context when its thread ends.
+    */
+  private final class Ctx {
+    val native = new ZstdDecompressCtx()
+    private var dict: Dictionary = null
+    private var asId = 0L
+
+    /** Load `d` (or no dictionary) for a frame declaring `frameId`. */
+    def use(d: Dictionary, frameId: Long): Unit = {
+      val id = if (d != null && d.id == 0) frameId else 0L
+      if ((d ne dict) || id != asId) {
+        native.reset()
+        if (d != null) native.loadDict(blob(d, frameId))
+        dict = d
+        asId = id
+      }
+    }
+  }
+
+  /** The blob libzstd loads for `d` serving a frame that declares
+    * `frameId`. libzstd refuses a frame whose id differs from its
+    * dictionary's, so a RAW-CONTENT dictionary serving a frame that
+    * declares an id is loaded as a structured dictionary carrying it.
+    */
+  private def blob(d: Dictionary, frameId: Long): Array[Byte] =
+    if (d.id == 0 && frameId != 0) encodeStructuredDict(frameId, d.bytes)
+    else d.bytes
+
+  private val cleaner = java.lang.ref.Cleaner.create()
+  private val ctxs = ThreadLocal.withInitial[Ctx] { () =>
+    val c = new Ctx
+    val n = c.native
+    cleaner.register(c, () => n.close())
+    c
+  }
 
   /** Decode a complete zstd input (one or more frames, skippable
     * frames included); Left(reason) on anything malformed, a checksum
@@ -507,65 +186,28 @@ object Zstd {
     try Right(decodeOrThrow(input, maxOut, dict))
     catch {
       case x: Bail => Left(x.reason)
-      case _: ArrayIndexOutOfBoundsException => Left("malformed")
-      case _: NegativeArraySizeException => Left("malformed")
+      case NonFatal(e) => Left(Codecs.reason(e))
     }
 
-  /** COMPRESSED length of the frame starting at `off` — a header+block
-    * walk that never decompresses (the .warc.zst member-extent
-    * discipline: find record boundaries in a concatenated-frame
-    * archive without inflating anything). None on any malformed or
-    * truncated header.
+  /** The typed reason for a libzstd error code. */
+  private[graft] def errorReason(code: Long): String =
+    if (code == Lib.errChecksumWrong()) "checksum-mismatch"
+    else if (code == Lib.errDictionaryWrong()) "dictionary-mismatch"
+    else if (code == Lib.errSrcSizeWrong()) "truncated"
+    else if (code == Lib.errFrameParameterWindowTooLarge()) "output-cap"
+    else "malformed"
+
+  /** COMPRESSED length of the frame (or skippable frame) starting at
+    * `off`, found without decompressing anything (the .warc.zst
+    * member-extent discipline: find record boundaries in a
+    * concatenated-frame archive without inflating anything). None on
+    * any malformed or truncated frame.
     */
   def frameLength(b: Array[Byte], off: Int): Option[Int] =
     try {
-      if (off + 4 > b.length) return None
-      val magic = le32(b, off)
-      if ((magic & 0xFFFFFFF0L) == 0x184D2A50L) {
-        val sz = le32(b, off + 4)
-        if (sz > b.length.toLong - off - 8) None else Some(8 + sz.toInt)
-      } else if (magic != 0xFD2FB528L) None
-      else {
-        var ip = off + 4
-        def u8(): Int = {
-          if (ip >= b.length) throw Bail("truncated")
-          val v = b(ip) & 0xff; ip += 1; v
-        }
-        val fhd = u8()
-        val singleSegment = (fhd & 0x20) != 0
-        if (!singleSegment) u8() // window descriptor
-        val dictBytes = (fhd & 3) match {
-          case 0 => 0; case 1 => 1; case 2 => 2; case _ => 4
-        }
-        ip += dictBytes
-        ip += ((fhd >> 6) match {
-          case 0 => if (singleSegment) 1 else 0
-          case 1 => 2
-          case 2 => 4
-          case _ => 8
-        })
-        var last = false
-        while (!last) {
-          if (ip + 3 > b.length) throw Bail("truncated")
-          val hdr = (b(ip) & 0xff) | ((b(ip + 1) & 0xff) << 8) |
-            ((b(ip + 2) & 0xff) << 16)
-          ip += 3
-          last = (hdr & 1) == 1
-          val bsize = hdr >> 3
-          ((hdr >> 1) & 3) match {
-            case 0 | 2 => ip += bsize // raw / compressed: bsize on wire
-            case 1 => ip += 1 // RLE: one byte regardless of bsize
-            case _ => throw Bail("reserved-block")
-          }
-          if (ip > b.length) throw Bail("truncated")
-        }
-        if ((fhd & 0x04) != 0) ip += 4 // content checksum
-        if (ip > b.length) None else Some(ip - off)
-      }
-    } catch {
-      case _: Bail => None
-      case _: ArrayIndexOutOfBoundsException => None
-    }
+      val len = Lib.findFrameCompressedSize(b, off)
+      if (len > 0 && len <= b.length.toLong - off) Some(len.toInt) else None
+    } catch { case NonFatal(_) => None }
 
   private def le32(b: Array[Byte], o: Int): Long = {
     if (o + 4 > b.length) throw Bail("truncated")
@@ -575,13 +217,8 @@ object Zstd {
 
   private def decodeOrThrow(
       input: Array[Byte], maxOut: Int, dict: Dictionary): Array[Byte] = {
-    var outArr = new Array[Byte](1 << 16)
-    var pos = 0
-    def ensure(extra: Long): Unit = {
-      if (extra < 0 || pos + extra > maxOut) throw Bail("output-cap")
-      while (pos + extra > outArr.length)
-        outArr = java.util.Arrays.copyOf(outArr, outArr.length * 2)
-    }
+    val parts = new scala.collection.mutable.ArrayBuffer[Array[Byte]](1)
+    var total = 0L
     var ip = 0
     while (ip < input.length) {
       val magic = le32(input, ip)
@@ -592,360 +229,77 @@ object Zstd {
         if (sz > input.length.toLong - ip - 8) throw Bail("truncated")
         ip += 8 + sz.toInt
       } else if (magic == 0xFD2FB528L) {
-        ip = decodeFrame(input, ip + 4, outArr, maxOut,
-          (a, np) => { outArr = a; pos = np }, () => (outArr, pos), ensure,
-          dict)
+        val len = Lib.findFrameCompressedSize(input, ip).toInt
+        val part = decodeFrame(input, ip, len, maxOut - total, dict)
+        parts += part
+        total += part.length
+        ip += len
       } else throw Bail("bad-magic")
     }
-    java.util.Arrays.copyOf(outArr, pos)
+    if (parts.length == 1) parts.head
+    else {
+      val out = new Array[Byte](total.toInt)
+      var op = 0
+      parts.foreach { p => System.arraycopy(p, 0, out, op, p.length); op += p.length }
+      out
+    }
   }
 
+  /** Floor of libzstd's window limit for a frame that does not declare
+    * its content size (8 MiB, the largest window the standard levels
+    * pick for such frames); above it the limit follows the output cap.
+    */
+  private val MinWindowLog = 23
+
+  /** Decode the one frame at `b[off, off + len)` into at most `cap`
+    * bytes: a declared content size is checked against the cap before
+    * the output is allocated; a frame without one streams through the
+    * bounded reader with libzstd's window bounded by the cap.
+    */
   private def decodeFrame(
-      b: Array[Byte], start: Int, out0: Array[Byte], maxOut: Int,
-      set: (Array[Byte], Int) => Unit, get: () => (Array[Byte], Int),
-      ensure: Long => Unit, dict: Dictionary): Int = {
-    var ip = start
-    def u8(): Int = {
-      if (ip >= b.length) throw Bail("truncated")
-      val v = b(ip) & 0xff; ip += 1; v
-    }
-    val fhd = u8()
-    if ((fhd & 0x08) != 0) throw Bail("reserved-fhd")
-    val singleSegment = (fhd & 0x20) != 0
-    val checksum = (fhd & 0x04) != 0
-    val dictFlag = fhd & 0x03
-    val fcsCode = fhd >> 6
-    var window = 0L
-    if (!singleSegment) {
-      val wd = u8()
-      val base = 1L << (10 + (wd >> 3))
-      window = base + (base >> 3) * (wd & 7)
-    }
-    val dictBytes = dictFlag match {
-      case 0 => 0
-      case 1 => 1
-      case 2 => 2
-      case _ => 4
-    }
-    var dictId = 0L
-    var i = 0
-    while (i < dictBytes) { dictId |= u8().toLong << (8 * i); i += 1 }
-    if (dictId != 0) {
+      b: Array[Byte], off: Int, len: Int, cap: Long,
+      dict: Dictionary): Array[Byte] = {
+    // Dictionary_ID (RFC 8878 §3.1.1.1): 0/1/2/4 bytes after the
+    // descriptor and the optional window descriptor
+    val fhd = b(off + 4) & 0xff
+    val at = off + (if ((fhd & 0x20) != 0) 5 else 6)
+    var frameId = 0L
+    for (i <- 0 until Array(0, 1, 2, 4)(fhd & 3))
+      frameId |= (b(at + i) & 0xffL) << (8 * i)
+    if (frameId != 0) {
       if (dict == null) throw Bail("dictionary-missing")
-      if (dict.id != 0 && dict.id != dictId) throw Bail("dictionary-mismatch")
+      if (dict.id != 0 && dict.id != frameId) throw Bail("dictionary-mismatch")
     }
-    var contentSize = -1L
-    val fcsBytes = fcsCode match {
-      case 0 => if (singleSegment) 1 else 0
-      case 1 => 2
-      case 2 => 4
-      case _ => 8
+    val size = Lib.getFrameContentSize(b, off, len)
+    if (size == -1L) { // unknown content size
+      val capInt = math.min(cap, Int.MaxValue - 8L).toInt
+      val windowLog = 32 - Integer.numberOfLeadingZeros(
+        math.max(capInt, 1 << MinWindowLog) - 1)
+      Codecs.bounded(capInt) {
+        val in = new ZstdInputStreamNoFinalizer(
+          new java.io.ByteArrayInputStream(b, off, len))
+        if (dict != null) in.setDict(blob(dict, frameId))
+        in.setLongMax(windowLog)
+      }.fold(r => throw Bail(r), identity)
+    } else if (size < 0 || size > cap) throw Bail("output-cap")
+    else {
+      val ctx = ctxs.get()
+      ctx.use(dict, frameId)
+      val out = new Array[Byte](size.toInt)
+      if (ctx.native.decompressByteArray(out, 0, out.length, b, off, len) != size)
+        throw Bail("content-size-mismatch")
+      out
     }
-    if (fcsBytes > 0) {
-      contentSize = 0L
-      var k = 0
-      while (k < fcsBytes) { contentSize |= u8().toLong << (8 * k); k += 1 }
-      if (fcsBytes == 2) contentSize += 256
-    }
-    if (singleSegment) window = contentSize
-    val frameStartPos = get()._2
-
-    // cross-block entropy state — seeded by the dictionary when one is
-    // supplied (§5: dictionary tables serve the frame's FIRST use of
-    // treeless literals / repeat FSE modes; rep offsets start from the
-    // dictionary's seeds)
-    var hufPrev: HufTable = if (dict != null) dict.huf else null
-    var llPrev: FseTable = if (dict != null) dict.ll else null
-    var mlPrev: FseTable = if (dict != null) dict.ml else null
-    var ofPrev: FseTable = if (dict != null) dict.of else null
-    val reps =
-      if (dict != null) java.util.Arrays.copyOf(dict.reps, 3)
-      else Array(1L, 4L, 8L)
-    val dictContent: Array[Byte] = if (dict != null) dict.content else null
-    val dictLen = if (dictContent != null) dictContent.length else 0
-
-    var last = false
-    while (!last) {
-      if (ip + 3 > b.length) throw Bail("truncated")
-      val hdr = (b(ip) & 0xff) | ((b(ip + 1) & 0xff) << 8) |
-        ((b(ip + 2) & 0xff) << 16)
-      ip += 3
-      last = (hdr & 1) == 1
-      val btype = (hdr >> 1) & 3
-      val bsize = hdr >> 3
-      btype match {
-        case 0 => // raw
-          if (ip + bsize > b.length) throw Bail("truncated")
-          ensure(bsize)
-          val (oa, op) = get()
-          System.arraycopy(b, ip, oa, op, bsize)
-          set(oa, op + bsize)
-          ip += bsize
-        case 1 => // RLE
-          val v = u8()
-          ensure(bsize)
-          val (oa, op) = get()
-          java.util.Arrays.fill(oa, op, op + bsize, v.toByte)
-          set(oa, op + bsize)
-        case 2 =>
-          if (ip + bsize > b.length) throw Bail("truncated")
-          val blockEnd = ip + bsize
-
-          // ---- literals section
-          val lh0 = b(ip) & 0xff
-          val ltype = lh0 & 3
-          val sf = (lh0 >> 2) & 3
-          var regen = 0
-          var cmpSize = 0
-          var nStreams = 4
-          if (ltype <= 1) {
-            sf match {
-              case 0 | 2 => regen = lh0 >> 3; ip += 1
-              case 1 =>
-                regen = (lh0 >> 4) | ((b(ip + 1) & 0xff) << 4); ip += 2
-              case _ =>
-                regen = (lh0 >> 4) | ((b(ip + 1) & 0xff) << 4) |
-                  ((b(ip + 2) & 0xff) << 12)
-                ip += 3
-            }
-          } else {
-            sf match {
-              case 0 =>
-                nStreams = 1
-                val v = lh0 | ((b(ip + 1) & 0xff) << 8) |
-                  ((b(ip + 2) & 0xff) << 16)
-                regen = (v >> 4) & 0x3FF; cmpSize = (v >> 14) & 0x3FF
-                ip += 3
-              case 1 =>
-                val v = lh0 | ((b(ip + 1) & 0xff) << 8) |
-                  ((b(ip + 2) & 0xff) << 16)
-                regen = (v >> 4) & 0x3FF; cmpSize = (v >> 14) & 0x3FF
-                ip += 3
-              case 2 =>
-                val v = lh0.toLong | ((b(ip + 1) & 0xffL) << 8) |
-                  ((b(ip + 2) & 0xffL) << 16) | ((b(ip + 3) & 0xffL) << 24)
-                regen = ((v >> 4) & 0x3FFF).toInt
-                cmpSize = ((v >> 18) & 0x3FFF).toInt
-                ip += 4
-              case _ =>
-                val v = lh0.toLong | ((b(ip + 1) & 0xffL) << 8) |
-                  ((b(ip + 2) & 0xffL) << 16) | ((b(ip + 3) & 0xffL) << 24) |
-                  ((b(ip + 4) & 0xffL) << 32)
-                regen = ((v >> 4) & 0x3FFFF).toInt
-                cmpSize = ((v >> 22) & 0x3FFFF).toInt
-                ip += 5
-            }
-          }
-          if (regen > (1 << 20) + (1 << 18)) throw Bail("literals-size")
-          val literals = new Array[Byte](regen)
-          ltype match {
-            case 0 => // raw
-              if (ip + regen > blockEnd) throw Bail("truncated")
-              System.arraycopy(b, ip, literals, 0, regen)
-              ip += regen
-            case 1 => // RLE
-              val v = u8()
-              java.util.Arrays.fill(literals, v.toByte)
-            case t => // compressed (2) / treeless (3)
-              val litEnd = ip + cmpSize
-              if (litEnd > blockEnd) throw Bail("truncated")
-              var table = hufPrev
-              if (t == 2) {
-                val (ht, used) = hufReadTable(b, ip, litEnd)
-                table = ht
-                hufPrev = ht
-                ip += used
-              }
-              if (table == null) throw Bail("treeless-without-table")
-              if (nStreams == 1) {
-                hufDecodeStream(table, b, ip, litEnd - ip, literals, 0, regen)
-              } else {
-                if (litEnd - ip < 6) throw Bail("truncated")
-                val s1 = ((b(ip) & 0xff) | ((b(ip + 1) & 0xff) << 8))
-                val s2 = ((b(ip + 2) & 0xff) | ((b(ip + 3) & 0xff) << 8))
-                val s3 = ((b(ip + 4) & 0xff) | ((b(ip + 5) & 0xff) << 8))
-                val dataOff = ip + 6
-                val total = litEnd - dataOff
-                val s4 = total - s1 - s2 - s3
-                if (s4 <= 0) throw Bail("jump-table")
-                val per = (regen + 3) / 4
-                val lastN = regen - 3 * per
-                if (lastN < 0) throw Bail("stream-split")
-                hufDecodeStream(table, b, dataOff, s1, literals, 0, per)
-                hufDecodeStream(table, b, dataOff + s1, s2, literals, per, per)
-                hufDecodeStream(table, b, dataOff + s1 + s2, s3,
-                  literals, 2 * per, per)
-                hufDecodeStream(table, b, dataOff + s1 + s2 + s3, s4,
-                  literals, 3 * per, lastN)
-              }
-              ip = litEnd
-          }
-
-          // ---- sequences section
-          if (ip >= blockEnd) throw Bail("truncated")
-          val b0 = b(ip) & 0xff
-          ip += 1
-          var nbSeq = 0
-          if (b0 < 128) nbSeq = b0
-          else if (b0 < 255) {
-            nbSeq = ((b0 - 128) << 8) | (b(ip) & 0xff); ip += 1
-          } else {
-            nbSeq = ((b(ip) & 0xff) | ((b(ip + 1) & 0xff) << 8)) + 0x7F00
-            ip += 2
-          }
-          if (nbSeq == 0) {
-            // literals only
-            ensure(regen)
-            val (oa, op) = get()
-            System.arraycopy(literals, 0, oa, op, regen)
-            set(oa, op + regen)
-            if (ip != blockEnd) throw Bail("block-trailer")
-          } else {
-            val modes = b(ip) & 0xff
-            ip += 1
-            if ((modes & 3) != 0) throw Bail("reserved-modes")
-            def readTable(
-                mode: Int, maxSym: Int, maxLog: Int,
-                default: Array[Int], defaultLog: Int,
-                prev: FseTable): FseTable = mode match {
-              case 0 => fseBuild(default, defaultLog)
-              case 1 =>
-                val s = u8()
-                if (s > maxSym) throw Bail("rle-symbol")
-                fseRle(s)
-              case 2 =>
-                val fw = new FwdBits(b, ip, blockEnd)
-                val (counts, log) = fseReadCounts(fw, maxSym, maxLog)
-                ip = fw.bytePos
-                fseBuild(counts, log)
-              case _ =>
-                if (prev == null) throw Bail("repeat-without-table")
-                prev
-            }
-            val llT = readTable((modes >> 6) & 3, 35, 9, LlDefault,
-              LlDefaultLog, llPrev)
-            val ofT = readTable((modes >> 4) & 3, 31, 8, OfDefault,
-              OfDefaultLog, ofPrev)
-            val mlT = readTable((modes >> 2) & 3, 52, 9, MlDefault,
-              MlDefaultLog, mlPrev)
-            llPrev = llT; ofPrev = ofT; mlPrev = mlT
-            val bb = new BackBits(b, ip, blockEnd - ip)
-            var llS = fseInit(bb, llT)
-            var ofS = fseInit(bb, ofT)
-            var mlS = fseInit(bb, mlT)
-            var litPos = 0
-            var s = 0
-            while (s < nbSeq) {
-              val ofCode = fseSymbol(ofT, ofS)
-              if (ofCode > 31) throw Bail("offset-code")
-              val mlCode = fseSymbol(mlT, mlS)
-              val llCode = fseSymbol(llT, llS)
-              if (mlCode > 52 || llCode > 35) throw Bail("seq-code")
-              // extras read OF → ML → LL
-              val ofValue = (1L << ofCode) + (
-                if (ofCode > 0) bb.read(ofCode).toLong & 0xffffffffL else 0L)
-              val ml = MlBase(mlCode) + bb.read(MlBits(mlCode))
-              val ll = LlBase(llCode) + bb.read(LlBits(llCode))
-              if (bb.pos < 0) throw Bail("seq-bitstream")
-              // repeated-offset logic with the litLength-0 quirk
-              var offset = 0L
-              if (ofValue > 3) {
-                offset = ofValue - 3
-                reps(2) = reps(1); reps(1) = reps(0); reps(0) = offset
-              } else {
-                val idx = ofValue.toInt + (if (ll == 0) 1 else 0)
-                idx match {
-                  case 1 => offset = reps(0)
-                  case 2 =>
-                    offset = reps(1); reps(1) = reps(0); reps(0) = offset
-                  case 3 =>
-                    offset = reps(2); reps(2) = reps(1); reps(1) = reps(0)
-                    reps(0) = offset
-                  case _ =>
-                    offset = reps(0) - 1
-                    if (offset <= 0) throw Bail("rep-offset-zero")
-                    reps(2) = reps(1); reps(1) = reps(0); reps(0) = offset
-                }
-              }
-              // execute: literals then the match
-              if (litPos + ll > regen) throw Bail("literals-overrun")
-              ensure(ll.toLong + ml.toLong)
-              val (oa, op0) = get()
-              System.arraycopy(literals, litPos, oa, op0, ll)
-              litPos += ll
-              val op = op0 + ll
-              // matches reference THIS frame's output, extended
-              // backward by the dictionary content when one is
-              // supplied (the virtual window prefix, §5)
-              val cur = op - frameStartPos
-              if (offset <= 0 || offset > cur.toLong + dictLen)
-                throw Bail("offset-too-far")
-              var k = 0
-              if (offset <= cur) {
-                // fast path: entirely inside the frame's own output
-                val src = op - offset.toInt
-                while (k < ml) {
-                  oa(op + k) = oa(src + k)
-                  k += 1
-                }
-              } else {
-                // starts in the dictionary content (may cross into
-                // the frame's output as it copies)
-                val off = offset.toInt
-                while (k < ml) {
-                  val rel = cur + k - off
-                  oa(op + k) =
-                    if (rel >= 0) oa(frameStartPos + rel)
-                    else dictContent(dictLen + rel)
-                  k += 1
-                }
-              }
-              set(oa, op + ml)
-              // state updates LL → ML → OF (all but the last sequence)
-              if (s < nbSeq - 1) {
-                llS = fseUpdate(bb, llT, llS)
-                mlS = fseUpdate(bb, mlT, mlS)
-                ofS = fseUpdate(bb, ofT, ofS)
-                if (bb.pos < 0) throw Bail("seq-bitstream")
-              }
-              s += 1
-            }
-            if (bb.pos != 0) throw Bail("seq-trailer")
-            // trailing literals
-            val rest = regen - litPos
-            if (rest < 0) throw Bail("literals-overrun")
-            ensure(rest)
-            val (oa, op) = get()
-            System.arraycopy(literals, litPos, oa, op, rest)
-            set(oa, op + rest)
-            if (ip + (blockEnd - ip) != blockEnd) throw Bail("internal")
-            ip = blockEnd
-          }
-        case _ => throw Bail("reserved-block")
-      }
-    }
-    val (oa, op) = get()
-    if (contentSize >= 0 && op - frameStartPos != contentSize)
-      throw Bail("content-size-mismatch")
-    if (checksum) {
-      if (ip + 4 > b.length) throw Bail("truncated")
-      val want = le32(b, ip)
-      ip += 4
-      // checksum covers THIS frame's content
-      val frameBytes = java.util.Arrays.copyOfRange(oa, frameStartPos, op)
-      val got = xxh64(frameBytes, frameBytes.length) & 0xffffffffL
-      if (got != want) throw Bail("checksum-mismatch")
-    }
-    ip
   }
+
 
   // --------------------------------------------------------------- encode
 
   /** Minimal conforming ENCODER: raw blocks in a single-segment frame
     * (the zstd analogue of deflate's stored blocks) — enough to plant
     * real `zstd` bodies in synthetic corpora; libzstd accepts its
-    * output (verified once at fixture-generation time) and our own
-    * decoder round-trips it (spec-pinned).
+    * output (verified once at fixture-generation time) and `decode`
+    * round-trips it (spec-pinned).
     */
   def encodeRaw(data: Array[Byte]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -994,8 +348,13 @@ object Zstd {
   final case class SeekEntry(
       offset: Long, compSize: Long, decompSize: Long, checksum: Option[Long])
 
+  private val Xxh64 = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash64()
+
+  /** XXH64 (seed 0) low 32 bits: the frame content checksum and the
+    * seek-table checksum.
+    */
   private[graft] def xxh64Low32(b: Array[Byte]): Long =
-    xxh64(b, b.length) & 0xFFFFFFFFL
+    Xxh64.hash(b, 0, b.length, 0L) & 0xFFFFFFFFL
 
   /** Serialize the seek-table skippable frame for `entries`
     * (compressedSize, decompressedSize, optional checksum — all
@@ -1094,7 +453,7 @@ object Zstd {
     bos.write(0x80); bos.write(0x10)
     // three FSE descriptions (OF → ML → LL order), each "symbol 0 owns
     // the whole 2^5 table": accLog nibble 0, then count 32 encoded as
-    // low=31 + extra bit → bytes 0xF0 0x03 (fseReadCounts-exact)
+    // low=31 + extra bit → bytes 0xF0 0x03 (RFC 8878 §4.1.1)
     for (_ <- 0 until 3) { bos.write(0xF0); bos.write(0x03) }
     le32w(1L); le32w(4L); le32w(8L) // rep-offset seeds
     bos.write(content)
@@ -1105,7 +464,7 @@ object Zstd {
     * (round 20): like `encodeStructuredDict` but the entropy preamble's
     * Huffman table is built from `histogramSample`'s byte histogram —
     * the SAME serialized form a block-level tree description uses, so
-    * both this file's decoder and libzstd load it as the frame's
+    * libzstd loads it as the frame's
     * initial previous-table and TREELESS literals blocks (type 3)
     * reference it directly. On sub-KB records that moves the dominant
     * per-frame cost (the tree description) into the dictionary, paid
@@ -1256,7 +615,7 @@ object Zstd {
   // literals through a fresh canonical Huffman table per block), so
   // the engine ships .warc.zst / WET / WAT shards at a real
   // compression ratio instead of stored bytes. Verified two ways:
-  // our own RFC 8878 decoder round-trips every output (spec), and
+  // `decode` (libzstd) round-trips every output (spec), and
   // foreign libzstd decodes it byte-exact via the ctypes harness
   // (tools/verify_zstd_encoder.py — the libpng/libtiff fixture
   // discipline pointed at the ENCODER's output).
@@ -1304,9 +663,9 @@ object Zstd {
   private lazy val MlEnc = new FseEnc(MlDecT, 53)
   private lazy val OfEnc = new FseEnc(OfDecT, 29)
 
-  /** Pack (value, width) fields so a `BackBits` reader consumes them
-    * in list order: fields are laid from the top of the stream
-    * downward (LSB-first within a field, matching `BackBits.read`),
+  /** Pack (value, width) fields so a backward bitstream reader (RFC
+    * 8878 §4.1) consumes them in list order: fields are laid from the
+    * top of the stream downward (LSB-first within a field),
     * with the padding marker bit immediately above the first field.
     */
   private def packBackward(
@@ -1329,8 +688,8 @@ object Zstd {
     out
   }
 
-  /** FORWARD LSB-first writer — the `FwdBits` reader's inverse (FSE
-    * table descriptions).
+  /** FORWARD LSB-first writer (FSE table descriptions, RFC 8878
+    * §4.1.1).
     */
   private final class FwdBitWriter {
     private val bos = new java.io.ByteArrayOutputStream()
@@ -1349,7 +708,7 @@ object Zstd {
     def toBytes: Array[Byte] = { alignByte(); bos.toByteArray }
   }
 
-  /** Serialize normalized counts in `fseReadCounts`' exact format
+  /** Serialize normalized counts in the table-description format
     * (RFC §4.1.1): the shrinking threshold, the +1 bias, low/full-width
     * forms, and 2-bit zero-run groups after a zero count.
     */
@@ -1386,8 +745,8 @@ object Zstd {
 
   /** FSE-compress Huffman WEIGHTS (RFC §4.2.1.2) — the form the
     * direct-nibble header can't express past 128 symbols: counts
-    * description, then the backward bitstream that `hufReadTable`'s
-    * two interleaved states replay, terminated by the deliberate
+    * description, then the backward bitstream that a decoder's two
+    * interleaved states replay, terminated by the deliberate
     * final over-read. Returns null when the shape can't terminate
     * (fewer than 2 explicit weights, or one weight owning the whole
     * table) or when it wouldn't fit the one-byte size header.
@@ -1613,9 +972,9 @@ object Zstd {
 
   /** Huffman-compress `lits(0 until len)` into a complete LITERALS
     * section (header + direct-nibble weights + 1 or 4 backward
-    * streams), canonical codes mirroring `hufFromWeights`' table
-    * layout exactly. Returns null when Huffman cannot beat raw
-    * literals (or the alphabet's top symbol exceeds the 128-weight
+    * streams), canonical codes in the RFC §4.2.1 weight layout.
+    * Returns null when Huffman cannot beat raw literals (or the
+    * alphabet's top symbol exceeds the 128-weight
     * direct-header form — binary-heavy blocks then ship raw literals
     * and still compress through matches).
     */
@@ -1655,7 +1014,7 @@ object Zstd {
     if (lens == null) return null
     var tlog = 0
     for (s <- 0 to maxPresent if freq(s) > 0) tlog = math.max(tlog, lens(s))
-    // canonical codes in hufFromWeights' layout: weight w = tlog+1-len,
+    // canonical codes in the RFC §4.2.1 layout: weight w = tlog+1-len,
     // longest codes (weight 1) at the low end, natural symbol order
     // within a weight; a symbol's code is the shared high-bit prefix of
     // its table range
@@ -1849,8 +1208,8 @@ object Zstd {
     * not an omission; standard `zstd -d` without `-D` refuses such
     * frames.
     *
-    * Verification: round-tripped by this file's own decoder across the
-    * spec matrix AND decoded byte-exact by foreign libzstd via ctypes
+    * Verification: round-tripped by `decode` across the spec matrix
+    * AND decoded byte-exact by foreign libzstd via ctypes
     * (`tools/verify_zstd_encoder.py`, run recorded in its header).
     */
   def encode(
@@ -1898,7 +1257,7 @@ object Zstd {
         bos.write(((contentSize >> 24) & 0xff).toInt)
     }
     def writeChecksum(): Unit = if (checksum) {
-      val h = xxh64(data, data.length) & 0xFFFFFFFFL
+      val h = xxh64Low32(data)
       bos.write((h & 0xff).toInt); bos.write(((h >> 8) & 0xff).toInt)
       bos.write(((h >> 16) & 0xff).toInt); bos.write(((h >> 24) & 0xff).toInt)
     }

@@ -151,20 +151,6 @@ object StreamSessionize {
         col("n_events"), col("types"))
   }
 
-  /** q111's association rules over the FINALIZED sessions: each session's
-    * distinct event types form its basket (the session sink assigns a
-    * synthetic session_no from the start time — baskets only need the
-    * (user, session) grain to be unique), then the shared q111 derivation
-    * — identical support/confidence/lift integer arithmetic, so over a
-    * fully-drained feed the two agree row-for-row.
-    */
-  def readAssociationRules(spark: SparkSession, outDir: String): DataFrame =
-    SessionOps.associationRulesFrom(
-      readSessions(spark, outDir)
-        .select(col("user_id"), col("session_start_us").as("session_no"),
-          explode(array_distinct(col("types"))).as("t"))
-        .distinct())
-
   /** q110's path analysis over the FINALIZED sessions: consecutive 3-step
     * event-type paths, global top-k via the BoundedTopK partial aggregate
     * — identical tail to the batch operator, so over a fully-drained feed

@@ -2,10 +2,10 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** bzip2 codec: the DECODER against foreign libbz2 fixtures
-  * (byte-exact, `tools/gen_bzip2_fixtures.py`), the ENCODER against
-  * foreign libbz2 decompression (ctypes harness run per-test), plus
-  * cross round-trips, malformed-stream typing, and the bomb cap.
+/** bzip2 (commons-compress behind `Codecs`): decoding against foreign
+  * libbz2 fixtures (byte-exact, `tools/gen_bzip2_fixtures.py` — the
+  * parity gate), per-stream boundaries, writer round-trips,
+  * malformed-stream typing, and the bomb cap.
   */
 class Bzip2Spec extends AnyFunSuite {
 
@@ -37,7 +37,7 @@ class Bzip2Spec extends AnyFunSuite {
     "(RLE1 runs, RUNA/RUNB, full symbol map, multi-block, multistream)") {
     for (name <- fixtureNames) {
       val want = fixture(name, "bin")
-      Bzip2.decode(fixture(name, "bz2")) match {
+      Codecs.bzip2Decode(fixture(name, "bz2")) match {
         case Right(got) =>
           assert(java.util.Arrays.equals(got, want), s"$name mismatch")
         case Left(r) => fail(s"$name: $r")
@@ -60,7 +60,7 @@ class Bzip2Spec extends AnyFunSuite {
       det(500000, 4), // multi-block (400k encoder blocks)
       (0 until 256).map(_.toByte).toArray)
     for (c <- cases) {
-      Bzip2.decode(Bzip2.encode(c)) match {
+      Codecs.bzip2Decode(Codecs.bzip2Encode(c)) match {
         case Right(got) =>
           assert(java.util.Arrays.equals(got, c), s"len ${c.length}")
         case Left(r) => fail(s"len ${c.length}: $r")
@@ -68,46 +68,18 @@ class Bzip2Spec extends AnyFunSuite {
     }
   }
 
-  test("FOREIGN verification: libbz2 (via ctypes) decompresses our " +
-    "encoder's streams byte-exact") {
-    val py = Seq("/usr/bin/python3", "/root/.pyenv/versions/3.11.7/bin/python3")
-      .find(p => new java.io.File(p).exists())
-    assume(py.nonEmpty, "python3 not present")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bzip2_enc")
-    def put(name: String, b: Array[Byte]): Unit = {
-      java.nio.file.Files.write(dir.resolve(name + ".bin"), b)
-      java.nio.file.Files.write(dir.resolve(name + ".bz2"), Bzip2.encode(b))
-      ()
-    }
-    put("empty", Array.emptyByteArray)
-    put("tiny", "abc".getBytes)
-    put("text", ("the quick brown fox " * 200).getBytes)
-    put("runs", Array.fill[Byte](4)(1) ++ Array.fill[Byte](300)(2) ++
-      "tail".getBytes)
-    put("xml", ("<page><title>Article 7</title><text>{{cite}} body" +
-      "</text></page>\n" * 300).getBytes)
-    put("binary", det(60000, 5))
-    put("multiblock", det(450000, 6))
-    put("allbytes", (0 until 256).map(_.toByte).toArray)
-    val proc = new ProcessBuilder(py.get, "tools/verify_bzip2_encoder.py",
-      dir.toString).redirectErrorStream(true).start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    val rc = proc.waitFor()
-    assert(rc == 0 && out.contains("ALL OK"), s"foreign verify:\n$out")
-  }
-
   test("malformed streams are typed errors: CRC flips, truncation, " +
     "bad magics, the deprecated randomized bit") {
-    val good = Bzip2.encode(("some block content " * 100).getBytes)
-    assert(Bzip2.decode(Array.emptyByteArray) == Left("truncated") ||
-      Bzip2.decode(Array.emptyByteArray).isLeft)
-    assert(Bzip2.decode("BZx1234".getBytes).isLeft)
+    val good = Codecs.bzip2Encode(("some block content " * 100).getBytes)
+    assert(Codecs.bzip2Decode(Array.emptyByteArray) == Left("truncated") ||
+      Codecs.bzip2Decode(Array.emptyByteArray).isLeft)
+    assert(Codecs.bzip2Decode("BZx1234".getBytes).isLeft)
     for (cut <- Seq(3, 10, good.length / 2, good.length - 2))
-      assert(Bzip2.decode(good.take(cut)).isLeft, s"cut $cut")
+      assert(Codecs.bzip2Decode(good.take(cut)).isLeft, s"cut $cut")
     for (i <- 4 until good.length by 7) {
       val bad = good.clone()
       bad(i) = (bad(i) ^ 0x10).toByte
-      Bzip2.decode(bad) match {
+      Codecs.bzip2Decode(bad) match {
         case Left(reason) => assert(reason.nonEmpty)
         case Right(out) => assert(out.length <= 4000) // lucky flip
       }
@@ -117,13 +89,40 @@ class Bzip2Spec extends AnyFunSuite {
     // block magic starts at byte 4; CRC is bits 80..111; randomized is
     // bit 112 = byte 14 bit 0 (MSB)
     fx(14) = (fx(14) | 0x80).toByte
-    assert(Bzip2.decode(fx) == Left("randomized-deprecated") ||
-      Bzip2.decode(fx).isLeft)
+    assert(Codecs.bzip2Decode(fx) == Left("randomized-deprecated") ||
+      Codecs.bzip2Decode(fx).isLeft)
+  }
+
+  test("multistream: each stream decodes alone, boundaries exact") {
+    val s1 = "<page><title>First</title></page>\n" * 50
+    val s2 = "<page><title>Second</title></page>\n" * 50
+    val two = fixture("multistream", "bz2")
+    Codecs.bzip2Streams(two) match {
+      case Right(parts) =>
+        assert(parts.map(new String(_, "UTF-8")) == Seq(s1, s2))
+      case Left(r) => fail(r)
+    }
+    // our writer's streams concatenate the same way (the q196 dump)
+    val own = Seq("a" * 3000, "bb", "").map(_.getBytes)
+    assert(Codecs.bzip2Streams(own.map(Codecs.bzip2Encode).reduce(_ ++ _))
+      .map(_.map(new String(_, "UTF-8"))) == Right(Seq("a" * 3000, "bb", "")))
+    // a malformed SECOND stream is a typed error, not a short result
+    val second = two.indexOfSlice("BZh9".getBytes, 4)
+    assert(second > 4)
+    for (bad <- Seq(two.take(second + 20),
+        two.updated(second + 12, (two(second + 12) ^ 0x10).toByte),
+        two ++ "BZh9junk".getBytes)) {
+      Codecs.bzip2Streams(bad) match {
+        case Left(reason) => assert(reason.nonEmpty)
+        case Right(parts) => fail(s"malformed second stream decoded: ${parts.size}")
+      }
+    }
+    assert(Codecs.bzip2Streams(two, maxOut = s1.length + 10) == Left("output-cap"))
   }
 
   test("bomb cap: zeros fixture under a small maxOut is refused, " +
     "never allocated through") {
-    assert(Bzip2.decode(fixture("zeros", "bz2"), maxOut = 1000) ==
+    assert(Codecs.bzip2Decode(fixture("zeros", "bz2"), maxOut = 1000) ==
       Left("output-cap"))
   }
 
@@ -131,8 +130,8 @@ class Bzip2Spec extends AnyFunSuite {
     "with the libbz2 fixtures' payloads (same bytes both ways)") {
     for (name <- fixtureNames) {
       val payload = fixture(name, "bin")
-      val ours = Bzip2.encode(payload)
-      assert(Bzip2.decode(ours).exists(java.util.Arrays.equals(_, payload)),
+      val ours = Codecs.bzip2Encode(payload)
+      assert(Codecs.bzip2Decode(ours).exists(java.util.Arrays.equals(_, payload)),
         name)
     }
   }

@@ -2,10 +2,10 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** LZ4 frame codec: the DECODER against foreign liblz4 fixtures
-  * (linked and independent blocks, both checksum kinds, content
-  * size), the ENCODER against foreign liblz4 decompression (ctypes
-  * harness per-test), round-trips, and malformed-frame typing.
+/** LZ4 frames (commons-compress behind `Codecs`): decoding against
+  * foreign liblz4 fixtures — the parity gate (linked and independent
+  * blocks, both checksum kinds, content size) — writer round-trips,
+  * malformed-frame typing, and the bomb cap.
   */
 class Lz4Spec extends AnyFunSuite {
 
@@ -38,7 +38,7 @@ class Lz4Spec extends AnyFunSuite {
     "(linked blocks, indep blocks, block/content checksums, sizes)") {
     for (name <- fixtureNames) {
       val want = fixture(name, "bin")
-      Lz4.decode(fixture(name, "lz4")) match {
+      Codecs.lz4Decode(fixture(name, "lz4")) match {
         case Right(got) =>
           assert(java.util.Arrays.equals(got, want), s"$name mismatch")
         case Left(r) => fail(s"$name: $r")
@@ -57,7 +57,7 @@ class Lz4Spec extends AnyFunSuite {
       det(1000, 3),
       det(300000, 4))
     for (c <- cases) {
-      Lz4.decode(Lz4.encode(c)) match {
+      Codecs.lz4Decode(Codecs.lz4Encode(c)) match {
         case Right(got) =>
           assert(java.util.Arrays.equals(got, c), s"len ${c.length}")
         case Left(r) => fail(s"len ${c.length}: $r")
@@ -67,51 +67,26 @@ class Lz4Spec extends AnyFunSuite {
     val a = "first frame ".getBytes
     val b = "second frame".getBytes
     val skip = Array[Byte](0x50, 0x2A, 0x4D, 0x18, 4, 0, 0, 0, 1, 2, 3, 4)
-    val cat = skip ++ Lz4.encode(a) ++ Lz4.encode(b)
-    assert(Lz4.decode(cat).exists(java.util.Arrays.equals(_, a ++ b)))
-  }
-
-  test("FOREIGN verification: liblz4 (via ctypes) decompresses our " +
-    "frames byte-exact") {
-    val py = Seq("/usr/bin/python3", "/root/.pyenv/versions/3.11.7/bin/python3")
-      .find(p => new java.io.File(p).exists())
-    assume(py.nonEmpty, "python3 not present")
-    val dir = java.nio.file.Files.createTempDirectory("graft_lz4_enc")
-    def put(name: String, b: Array[Byte]): Unit = {
-      java.nio.file.Files.write(dir.resolve(name + ".bin"), b)
-      java.nio.file.Files.write(dir.resolve(name + ".lz4"), Lz4.encode(b))
-      ()
-    }
-    put("empty", Array.emptyByteArray)
-    put("tiny", "abc".getBytes)
-    put("text", ("the quick brown fox " * 500).getBytes)
-    put("jsonl", ("{\"doc_id\":7,\"text\":\"word salad body\"}\n" * 800).getBytes)
-    put("binary", det(50000, 5))
-    put("multiblock", ("repetitive shard line\n" * 10000).getBytes)
-    put("allbytes", (0 until 256).map(_.toByte).toArray)
-    val proc = new ProcessBuilder(py.get, "tools/verify_lz4_encoder.py",
-      dir.toString).redirectErrorStream(true).start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    val rc = proc.waitFor()
-    assert(rc == 0 && out.contains("ALL OK"), s"foreign verify:\n$out")
+    val cat = skip ++ Codecs.lz4Encode(a) ++ Codecs.lz4Encode(b)
+    assert(Codecs.lz4Decode(cat).exists(java.util.Arrays.equals(_, a ++ b)))
   }
 
   test("malformed frames are typed errors: header-checksum flip, " +
     "content-checksum flip, truncation, bad magic, offset overrun") {
-    val good = Lz4.encode(("block content " * 200).getBytes)
-    assert(Lz4.decode("not lz4 data".getBytes).isLeft)
+    val good = Codecs.lz4Encode(("block content " * 200).getBytes)
+    assert(Codecs.lz4Decode("not lz4 data".getBytes).isLeft)
     for (cut <- Seq(2, 6, good.length / 2, good.length - 2))
-      assert(Lz4.decode(good.take(cut)).isLeft, s"cut $cut")
+      assert(Codecs.lz4Decode(good.take(cut)).isLeft, s"cut $cut")
     val hdrBad = good.clone()
     hdrBad(4) = (hdrBad(4) ^ 0x10).toByte // FLG flip → header checksum
-    assert(Lz4.decode(hdrBad).isLeft)
+    assert(Codecs.lz4Decode(hdrBad).isLeft)
     val tailBad = good.clone()
     tailBad(good.length - 1) = (tailBad(good.length - 1) ^ 1).toByte
-    assert(Lz4.decode(tailBad) == Left("content-checksum"))
+    assert(Codecs.lz4Decode(tailBad) == Left("content-checksum"))
     for (i <- 15 until good.length - 5 by 7) {
       val bad = good.clone()
       bad(i) = (bad(i) ^ 0x20).toByte
-      Lz4.decode(bad) match {
+      Codecs.lz4Decode(bad) match {
         case Left(reason) => assert(reason.nonEmpty)
         case Right(out) => assert(out.length <= 4000)
       }
@@ -119,7 +94,7 @@ class Lz4Spec extends AnyFunSuite {
   }
 
   test("bomb cap: the zeros fixture under a small maxOut is refused") {
-    assert(Lz4.decode(fixture("zeros", "lz4"), maxOut = 1000) ==
+    assert(Codecs.lz4Decode(fixture("zeros", "lz4"), maxOut = 1000) ==
       Left("output-cap"))
   }
 }

@@ -35,13 +35,13 @@ class TarOpsSpec extends AnyFunSuite {
     "extracts identically; a corrupt xz stream is a typed dead letter") {
     val text = "alpha beta gamma delta epsilon zeta"
     for (id <- Seq(3L, 8L)) {
-      val xz = Xz.encodeStored(TarOps.buildTar(TarOps.archiveMembers(id, text)))
+      val xz = Codecs.xzEncode(TarOps.buildTar(TarOps.archiveMembers(id, text)), stored = true)
       val out = TarOps.extractArchive(id, xz)
       assert(out.status == "ok" && out.container == "tar.xz")
       assert(out.text == expectText(id, text))
     }
-    val bad = Xz.encodeStored(
-      TarOps.buildTar(TarOps.archiveMembers(1L, text)))
+    val bad = Codecs.xzEncode(
+      TarOps.buildTar(TarOps.archiveMembers(1L, text)), stored = true)
     bad(20) = (bad(20) ^ 0x40).toByte
     val dead = TarOps.extractArchive(1L, bad)
     assert(dead.container == "tar.xz" && dead.status == "bad-xz")

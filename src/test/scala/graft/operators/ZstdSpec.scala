@@ -2,10 +2,11 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Zstd decoder conformance: FOREIGN streams (encoded by the reference
-  * libzstd at levels 1/3/9/19 over nine input kinds, plus checksummed
-  * and no-content-size variants) must decode byte-exactly — reference
-  * conformance, not self-consistency. Plus corruption/truncation fuzz
+/** Zstd decoding (libzstd behind `Zstd.decode`'s frame walk):
+  * FOREIGN streams (encoded by the reference libzstd at levels
+  * 1/3/9/19 over nine input kinds, plus checksummed and
+  * no-content-size variants) must decode byte-exactly — the parity
+  * gate. Plus the dictionary handshake, corruption/truncation fuzz
   * (typed error, never a throw) and the bomb cap.
   */
 class ZstdSpec extends AnyFunSuite {
@@ -100,7 +101,6 @@ class ZstdSpec extends AnyFunSuite {
       case Left(r) => fail(s"dict parse: $r")
     }
     assert(dict.id != 0L, "trained dict must carry a non-zero id")
-    assert(dict.contentLength > 0)
     var checked = 0
     for (kind <- Seq("one", "four", "mix", "novel"); lv <- Seq(1, 3, 19)) {
       val (raw, zst) = fixture(s"dict_${kind}_l$lv")
@@ -119,7 +119,7 @@ class ZstdSpec extends AnyFunSuite {
     val rawDict = resource("/zstd/fixture_dict_raw.bin")
     val dict = Zstd.parseDictionary(rawDict).toOption.get
     assert(dict.id == 0L)
-    assert(dict.contentLength == rawDict.length)
+    assert(dict.bytes.sameElements(rawDict))
     for (lv <- Seq(3, 19)) {
       val (raw, zst) = fixture(s"dictraw_body_l$lv")
       Zstd.decode(zst, raw.length + 64, dict) match {
@@ -151,7 +151,7 @@ class ZstdSpec extends AnyFunSuite {
     for (cut <- Seq(8, 12, 40, dictBytes.length / 2)) {
       Zstd.parseDictionary(dictBytes.take(cut)) match {
         case Left(reason) => assert(reason.nonEmpty)
-        case Right(d) => assert(d.id == 0L || d.contentLength >= 0)
+        case Right(d) => assert(d.bytes.length == cut)
       }
     }
     // the RIGHT dict still decodes after all that
@@ -190,7 +190,7 @@ class ZstdSpec extends AnyFunSuite {
       case Left(r) => fail(s"structured dict parse: $r")
     }
     assert(d.id == 0x47524654L)
-    assert(d.contentLength == content.length)
+    assert(d.bytes.endsWith(content))
     val tail = "Content-Length: 99\r\n\r\nbody".getBytes("UTF-8")
     val enc = Zstd.encodeWithDictPrefix(tail, content, 0x47524654L)
     assert(Zstd.decode(enc, 1 << 20, d).toOption
@@ -263,5 +263,14 @@ class ZstdSpec extends AnyFunSuite {
       }
     }
     assert(Zstd.decode(zst, maxOut = 16) == Left("output-cap"))
+    // a frame DECLARING a content size above the cap is refused before
+    // its output is allocated, however little it really holds
+    def declaring(size: Int): Array[Byte] =
+      Array[Byte](0x28, 0xB5.toByte, 0x2F, 0xFD.toByte, 0xA0.toByte) ++
+        Array.tabulate[Byte](4)(i => (size >>> (8 * i)).toByte) ++
+        Array[Byte](0x21, 0, 0) ++ "tiny".getBytes // last raw block, 4 B
+    assert(Zstd.decode(declaring(4)).exists(_.sameElements("tiny".getBytes)))
+    assert(Zstd.decode(declaring(1 << 30)) == Left("output-cap"))
+    assert(Zstd.decode(declaring(4096), maxOut = 100) == Left("output-cap"))
   }
 }

@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Generate FOREIGN bzip2 fixtures with libbz2 via ctypes
-(BZ2_bzBuffToBuffCompress): payload/.bz2 pairs that pin Bzip2.decode
-byte-exact against the reference implementation across the format's
-moving parts — RLE1 runs, RUNA/RUNB run lengths, symbol-map ranges,
-Huffman group switching, multi-block streams (level 1 over >100k
-input), and a concatenated multistream file (the Wikipedia-dump
-shape).
+(BZ2_bzBuffToBuffCompress): payload/.bz2 pairs that pin
+`Codecs.bzip2Decode` (commons-compress) byte-exact against the
+reference implementation across the format's moving parts — RLE1 runs,
+RUNA/RUNB run lengths, symbol-map ranges, Huffman group switching,
+multi-block streams (level 1 over >100k input), and a concatenated
+multistream file (the Wikipedia-dump shape).
 
 Outputs: src/test/resources/bzip2/fixture_<name>.{bin,bz2}
 """

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Generate FOREIGN LZ4 frame fixtures with liblz4 via ctypes
-(LZ4F_compressFrame): payload/.lz4 pairs pinning Lz4.decode byte-exact
-against the reference implementation — default LINKED blocks, explicit
-independent blocks, block checksums, content checksums, small block
-sizes (forcing multi-block), and high compression levels.
+(LZ4F_compressFrame): payload/.lz4 pairs pinning `Codecs.lz4Decode`
+(commons-compress) byte-exact against the reference implementation —
+default LINKED blocks, explicit independent blocks, block checksums,
+content checksums, small block sizes (forcing multi-block), and high
+compression levels.
 
 Outputs: src/test/resources/lz4/fixture_<name>.{bin,lz4}
 """

@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Generate FOREIGN XZ fixtures with liblzma via ctypes
 (lzma_easy_buffer_encode) plus the xz CLI for multi-block layouts:
-payload/.xz pairs pinning Xz.decode byte-exact against the reference
-implementation across presets (0/6/9e — different lc/lp/pb usage and
-match depths), every check kind (none/CRC32/CRC64/SHA-256),
-uncompressed LZMA2 chunks (incompressible input at preset 0),
-multi-block streams, and concatenated streams.
+payload/.xz pairs pinning `Codecs.xzDecode` (xz-java) byte-exact
+against the reference implementation across presets (0/6/9e —
+different lc/lp/pb usage and match depths), every check kind
+(none/CRC32/CRC64/SHA-256), uncompressed LZMA2 chunks (incompressible
+input at preset 0), multi-block streams, and concatenated streams.
 
 Outputs: src/test/resources/xz/fixture_<name>.{bin,xz}
 """

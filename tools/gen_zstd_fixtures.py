@@ -3,10 +3,9 @@
 with their exact inputs, across compression levels (and therefore
 block/literals/sequence mode mixes) plus a checksummed variant.
 
-RFC 8878's constants (predefined FSE distributions, code tables) are
-published in the RFC itself and implemented from it in Zstd.scala; the
-fixtures are the bit-exact verification that the implementation reads
-the spec correctly.
+`Zstd.decode` runs on libzstd through zstd-jni; the fixtures are the
+parity gate for the frame walk around it (skippable frames, the
+Dictionary_ID handshake, the output cap).
 
 Outputs: src/test/resources/zstd/fixture_<name>.{raw,zst}
 """
