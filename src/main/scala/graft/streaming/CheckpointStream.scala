@@ -5,10 +5,12 @@ import graft.diff.DiffModel.CheckpointData
 import graft.state.SessionMerge
 import graft.state.SessionMerge.SessionState
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.charset.StandardCharsets
 import java.time.Duration
@@ -190,23 +192,6 @@ object CheckpointStream {
       state: GroupState[SessionState]): Iterator[StreamOut] =
     statefulSessionFunc(_ => None, 0L)(userId, events, state)
 
-  /** Hadoop `Configuration` is not `java.io.Serializable`; this is the
-    * standard write/readFields envelope so the reload closure can carry the
-    * driver's filesystem configuration to executors.
-    */
-  private[graft] final class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** Reconstruct an evicted session's `SessionState` from the upsert sink —
     * the revival half of idle eviction. Runs INSIDE the state function on an
     * executor, so it cannot issue a Spark job; instead it reads the one
@@ -273,14 +258,15 @@ object CheckpointStream {
   }
 
   private[graft] def reloadSessionFromSink(
-      sinkDir: String, buckets: Int, conf: SerializableHadoopConf)(
+      sinkDir: String, buckets: Int, conf: Broadcast[SerializableConfiguration])(
       userId: Long): Option[SessionState] = {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
+    val hconf = conf.value.value
     val b = java.lang.Math.floorMod(
       graft.operators.DedupOps.splitmix(userId), buckets.toLong).toInt
     def files(dir: Path): Seq[Path] = {
-      val fs = dir.getFileSystem(conf.value)
+      val fs = dir.getFileSystem(hconf)
       if (!fs.exists(dir)) Seq.empty
       else fs.listStatus(dir).iterator.map(_.getPath)
         .filter { p => val n = p.getName; !n.startsWith("_") && !n.startsWith(".") }
@@ -291,29 +277,37 @@ object CheckpointStream {
     if (toRead.isEmpty) return None
     val pred = FilterCompat.get(
       FilterApi.eq(FilterApi.longColumn("user_id"), java.lang.Long.valueOf(userId)))
+    val opts = org.apache.parquet.HadoopReadOptions.builder(hconf)
+      .withRecordFilter(pred).build()
     val rows = Vector.newBuilder[(String, Long, Long, String, Int)]
     toRead.foreach { f =>
-      val fileSchema = {
-        val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf.value))
-        try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-      }
-      // a copy per file: the shared conf must not leak the projection to
-      // other readers, and each file's projection carries its own footer's
-      // repetitions (see ReloadFields)
-      val readConf = new org.apache.hadoop.conf.Configuration(conf.value)
-      readConf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-        reloadProjectionFor(fileSchema).toString)
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
-        .withConf(readConf).withFilter(pred).build()
+      // one open per file: the footer read here both builds the projection
+      // (each file's own repetitions, see ReloadFields) and drives the
+      // statistics/dictionary pruning of its row groups
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf), opts)
       try {
-        var g = reader.read()
-        while (g != null) {
-          if (g.getLong("user_id", 0) == userId)
-            rows += ((g.getString("task_id", 0), g.getLong("event_id", 0),
-              g.getLong("ts_us", 0), g.getString("payload", 0), g.getInteger("seq", 0)))
-          g = reader.read()
+        val fileMeta = reader.getFooter.getFileMetaData
+        val projection = reloadProjectionFor(fileMeta.getSchema)
+        reader.setRequestedSchema(projection)
+        val columnIO = new org.apache.parquet.io.ColumnIOFactory(fileMeta.getCreatedBy)
+          .getColumnIO(projection, fileMeta.getSchema, true)
+        var store = reader.readNextFilteredRowGroup()
+        while (store != null) {
+          val records = columnIO.getRecordReader(store,
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(projection),
+            pred)
+          var i = 0L
+          while (i < store.getRowCount) {
+            // the record filter yields null (or a skip flag) for non-matches
+            val g = records.read()
+            if (g != null && !records.shouldSkipCurrentRecord &&
+                g.getLong("user_id", 0) == userId)
+              rows += ((g.getString("task_id", 0), g.getLong("event_id", 0),
+                g.getLong("ts_us", 0), g.getString("payload", 0), g.getInteger("seq", 0)))
+            i += 1
+          }
+          store = reader.readNextFilteredRowGroup()
         }
       } finally reader.close()
     }
@@ -913,7 +907,10 @@ object CheckpointStream {
       .load(sourceDir)
     val outs = idleTtl match {
       case Some(ttl) =>
-        val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+        // broadcast, not captured: a captured conf is decoded again by every
+        // state-operator task, a broadcast once per executor
+        val hconf = spark.sparkContext.broadcast(
+          new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
         // allowance defaults to the TTL: see the late-row contract above
         val delay = watermarkDelay.getOrElse(s"${ttl.toMillis} milliseconds")
         normalizeFeed(raw)
@@ -924,7 +921,7 @@ object CheckpointStream {
           .flatMapGroupsWithState(
             OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
             statefulSessionFunc(
-              reloadSessionFromSink(sinkDir, SinkBuckets, sconf), ttl.toMillis))
+              reloadSessionFromSink(sinkDir, SinkBuckets, hconf), ttl.toMillis))
       case None =>
         normalizeFeed(raw)
           .groupByKey(_.user_id)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming TFRecord export — the continuous twin of q152's writer
   * half: curated documents arrive on a feed and leave as REAL
@@ -62,8 +63,8 @@ object StreamTfExport {
       .schema(schemaHint.getOrElse(spark.read.parquet(sourceDir).schema))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(sourceDir)
-    val conf = new CheckpointStream.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val writer = raw.select(col("doc_id"), col("text")).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -85,7 +86,7 @@ object StreamTfExport {
               // writes and renames its own file; the deterministic final name
               // keeps the publish idempotent.
               val tmp = new Path(s"$outDir/.tmp-${out.getName}-${tc.taskAttemptId()}")
-              val fs = out.getFileSystem(conf.value)
+              val fs = out.getFileSystem(conf.value.value)
               val os = fs.create(tmp, true)
               os.write(bytes)
               os.close()

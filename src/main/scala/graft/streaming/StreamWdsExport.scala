@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming WebDataset export — the continuous twin of q176's writer
   * half and the tar-shard sibling of `StreamTfExport`: curated
@@ -58,8 +59,8 @@ object StreamWdsExport {
       .schema(schemaHint.getOrElse(spark.read.parquet(sourceDir).schema))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(sourceDir)
-    val conf = new CheckpointStream.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val writer = raw.select(col("doc_id"), col("text"), col("cls")).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -81,7 +82,7 @@ object StreamWdsExport {
               val bytes = TarOps.buildTar(entries)
               val out = new Path(f"$outDir/batch$batchId%06d_part$pid%04d.tar")
               val tmp = new Path(s"$outDir/.tmp-${out.getName}-${tc.taskAttemptId()}")
-              val fs = out.getFileSystem(conf.value)
+              val fs = out.getFileSystem(conf.value.value)
               val os = fs.create(tmp, true)
               os.write(bytes)
               os.close()

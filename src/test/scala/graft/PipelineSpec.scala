@@ -400,6 +400,80 @@ class PipelineSpec extends AnyFunSuite {
       s"sessions: $sessions")
   }
 
+  test("a drain of more feed files per trigger than Spark's listing threshold starts no listing job") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_pipeline_listing_").toString
+    val key = Pipeline.ListingThresholdKey
+    val perTrigger = Pipeline.FeedFilesPerTrigger
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
+    // a full first trigger of one-row files, one session each (> 32 feed
+    // paths, and > 32 sink buckets after its upsert) ...
+    spark.sparkContext
+      .parallelize((0 until perTrigger).map(i => i -> i.toLong), perTrigger)
+      .partitionBy(new org.apache.spark.HashPartitioner(perTrigger)).values
+      .map(i => (i, i * 1000L, 100L + i, "click", 1.0, s"""{"i":$i}"""))
+      .toDF(cols: _*).withColumn("ts", expr("timestamp_micros(ts)"))
+      .write.parquet(s"$base/feed_cdc/a")
+    // ... and a later file revisiting one of them, so the second batch's
+    // upsert reads the occupied sink back
+    Seq((999L, 999000L, 100L, "click", 1.0, """{"i":999}"""))
+      .toDF(cols: _*).withColumn("ts", expr("timestamp_micros(ts)"))
+      .coalesce(1).write.parquet(s"$base/feed_cdc/b")
+    val t0 = System.currentTimeMillis() - 60000L
+    for ((dir, t) <- Seq("a" -> t0, "b" -> (t0 + 10000L));
+         f <- new java.io.File(s"$base/feed_cdc/$dir").listFiles
+         if f.getName.endsWith(".parquet"))
+      assert(f.setLastModified(t))
+
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    val callerValue = spark.conf.get(key)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = Pipeline.run(spark, Pipeline.Config(
+        cdcFeedDir = s"$base/feed_cdc/*",
+        ideFeedDir = None,
+        reportDir = None,
+        workDir = s"$base/work"))
+      assert(spark.conf.get(key) == callerValue)
+      assert(out.select("user_id").distinct().count() == perTrigger)
+      // the listener bus is FIFO: once this job's start is seen, every
+      // job the run started has been seen too
+      spark.sparkContext.setJobDescription("graft-listing-marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!descriptions.contains("graft-listing-marker") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(descriptions.contains("graft-listing-marker"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val commits = new java.io.File(s"$base/work/ckpt_cdc/commits").listFiles
+      .count(_.getName.forall(_.isDigit))
+    assert(commits == 2, s"expected two micro-batches, got $commits")
+    val buckets = new java.io.File(s"$base/work/sink_cdc").listFiles
+      .count(_.getName.startsWith("bucket="))
+    assert(buckets > 32, s"only $buckets sink buckets: the upsert read lists too few dirs")
+    import scala.jdk.CollectionConverters._
+    val listings = descriptions.asScala.filter(_.startsWith("Listing leaf files and directories"))
+    assert(listings.isEmpty, listings.mkString("\n"))
+
+    // a run that throws restores the caller's value as well
+    spark.conf.set(key, "40")
+    try {
+      intercept[Exception] {
+        Pipeline.run(spark, Pipeline.Config(
+          cdcFeedDir = s"$base/no_such_feed",
+          ideFeedDir = None,
+          reportDir = None,
+          workDir = s"$base/work_failed"))
+      }
+      assert(spark.conf.get(key) == "40")
+    } finally spark.conf.set(key, callerValue)
+  }
+
   test("diff maintenance folds only committed batches and applies the retention window") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_pipeline_gc_").toString

@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import graft.diff.DiffModel.CheckpointData
 import graft.state.SessionMerge
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
@@ -19,6 +20,9 @@ import java.sql.Timestamp
 class StreamingEvictionSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
+
+  private def broadcastConf() = spark.sparkContext.broadcast(
+    new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
   private val T0 = Timestamp.valueOf("2026-01-01 00:00:00").getTime // ms
 
@@ -174,8 +178,7 @@ class StreamingEvictionSpec extends AnyFunSuite {
         state.sequenceNumber))
     }
     CheckpointStream.upsert(rows.toDF(), sink)
-    val sconf = new CheckpointStream.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val sconf = broadcastConf()
     val reloaded = CheckpointStream.reloadSessionFromSink(
       sink, CheckpointStream.SinkBuckets, sconf)(uid)
     assert(reloaded.isDefined, "reload found no rows for an upserted session")
@@ -196,6 +199,34 @@ class StreamingEvictionSpec extends AnyFunSuite {
       sink, CheckpointStream.SinkBuckets, sconf)(uid + 1).isEmpty)
   }
 
+  test("revival reads every file of a multi-file bucket; an absent key in an occupied bucket is None") {
+    import spark.implicits._
+    val sink = Files.createTempDirectory("graft_reload_files_").toString + "/sink"
+    val buckets = CheckpointStream.SinkBuckets
+    def bucketOf(u: Long) =
+      java.lang.Math.floorMod(graft.operators.DedupOps.splitmix(u), buckets.toLong).toInt
+    // three keys of one bucket: a session whose rows span two files, a
+    // neighbour stored next to it, and a key that was never written
+    val Seq(uid, neighbour, absent) = Iterator.from(1).map(_.toLong)
+      .filter(u => bucketOf(u) == bucketOf(1L)).take(3).toSeq
+    val dir = s"$sink/bucket=${bucketOf(uid)}"
+    val cols = Seq("user_id", "task_id", "event_id", "ts_us", "payload", "seq")
+    Seq((uid, "t", 1L, 100L, "p1", 3), (neighbour, "x", 5L, 500L, "n", 1))
+      .toDF(cols: _*).coalesce(1).write.parquet(dir)
+    Seq((uid, "u", 2L, 200L, "p2", 3))
+      .toDF(cols: _*).coalesce(1).write.mode("append").parquet(dir)
+    assert(new java.io.File(dir).listFiles.count(_.getName.endsWith(".parquet")) == 2)
+    val sconf = broadcastConf()
+    val reload = CheckpointStream.reloadSessionFromSink(sink, buckets, sconf) _
+    val st = reload(uid)
+    assert(st.isDefined, "reload lost a session split over two files")
+    assert(st.get.sequenceNumber == 3 && st.get.content.keySet == Set("t", "u"))
+    assert(st.get.content.values.flatten.map(cd =>
+      new String(cd.checkpoint, StandardCharsets.UTF_8)).toSet == Set("p1", "p2"))
+    assert(reload(neighbour).map(_.content.keySet).contains(Set("x")))
+    assert(reload(absent).isEmpty)
+  }
+
   test("revival survives sink schema evolution: extra columns are skipped by projection") {
     import spark.implicits._
     val sink = Files.createTempDirectory("graft_reload_evo_").toString + "/sink"
@@ -208,8 +239,7 @@ class StreamingEvictionSpec extends AnyFunSuite {
       (uid, "u", 2L, 200L, "p2", 2, "future-metadata"))
       .toDF("user_id", "task_id", "event_id", "ts_us", "payload", "seq", "extra")
     CheckpointStream.upsert(rows, sink)
-    val sconf = new CheckpointStream.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val sconf = broadcastConf()
     val st = CheckpointStream.reloadSessionFromSink(
       sink, CheckpointStream.SinkBuckets, sconf)(uid)
     assert(st.isDefined, "reload lost the session under an evolved sink schema")
@@ -228,8 +258,7 @@ class StreamingEvictionSpec extends AnyFunSuite {
     val rows = Seq((uid, "t", 1L, 100L, "p1", 2L))
       .toDF("user_id", "task_id", "event_id", "ts_us", "payload", "seq")
     CheckpointStream.upsert(rows, sink)
-    val sconf = new CheckpointStream.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val sconf = broadcastConf()
     intercept[Exception] {
       CheckpointStream.reloadSessionFromSink(
         sink, CheckpointStream.SinkBuckets, sconf)(uid)
@@ -268,8 +297,7 @@ class StreamingEvictionSpec extends AnyFunSuite {
       "user_id", "task_id", "event_id", "ts_us", "payload", "seq")
       .coalesce(1).write.parquet(bakBucket.toString)
     assert(bucket2.exists())
-    val sconf = new CheckpointStream.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val sconf = broadcastConf()
     val st = CheckpointStream.reloadSessionFromSink(
       sink, CheckpointStream.SinkBuckets, sconf)(uid)
     assert(st.isDefined)
