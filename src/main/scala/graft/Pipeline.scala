@@ -1,10 +1,13 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import graft.operators.SimilarityOps
 import graft.sources.{Enrichment, SchemaInit}
 import graft.streaming.{CheckpointStream, StreamCurate, StreamEmbedIndex, StreamImageDedup, StreamNearDup, StreamSessionize, StreamStats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The composed engine lifecycle (SURVEY §3, reference
   * `config/CdcSubscriberConfig.kickstart` E2→E1): schema init → dual-feed
@@ -260,6 +263,8 @@ object Pipeline {
   }
 
   private def drain(spark: SparkSession, config: Config): DataFrame = {
+    require(config.curation.isEmpty || config.docFeedDir.isDefined,
+      "curation requires a documents feed (docFeedDir)")
     val cdcSink = s"${config.workDir}/sink_cdc"
     val ideSink = s"${config.workDir}/sink_ide"
 
@@ -267,122 +272,121 @@ object Pipeline {
     SchemaInit.ensureSinkTable(spark, cdcSink)
     config.ideFeedDir.foreach(_ => SchemaInit.ensureSinkTable(spark, ideSink))
 
-    // E2≡E1: pre-existing feed files are the backfill; the same stateful
-    // stream handles them and any late-arriving files
-    val cdcQuery = CheckpointStream.run(
-      spark, config.cdcFeedDir, s"${config.workDir}/ckpt_cdc", cdcSink,
-      maxFilesPerTrigger = FeedFilesPerTrigger,
-      diffDir = Some(s"${config.workDir}/diffs_cdc"))
-    // the IDE feed's shape is known by contract — pass it explicitly so an
-    // empty-at-start directory is never misread under the agents schema
-    val ideQuery = config.ideFeedDir.map(dir =>
-      CheckpointStream.run(spark, dir, s"${config.workDir}/ckpt_ide", ideSink,
+    // every query is stopped if a later start or any await throws, so a
+    // failed drain leaves nothing running
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    def start(q: StreamingQuery): Unit = started += q
+    var drained = false
+    try {
+      // E2≡E1: pre-existing feed files are the backfill; the same stateful
+      // stream handles them and any late-arriving files
+      start(CheckpointStream.run(
+        spark, config.cdcFeedDir, s"${config.workDir}/ckpt_cdc", cdcSink,
         maxFilesPerTrigger = FeedFilesPerTrigger,
-        diffDir = Some(s"${config.workDir}/diffs_ide"),
-        schemaHint = Some(CheckpointStream.ideSchema)))
-    // malformed wire rows on EITHER feed are counted (graft_events_feed /
-    // graft_ide_feed metrics) AND recoverable: each feed gets a dead-letter
-    // query quarantining the dropped originals with reason tags — silent
-    // row loss on the primary CDC feed is as unacceptable as on the IDE one
-    val dlCdcQuery = CheckpointStream.runDeadLetter(spark, config.cdcFeedDir,
-      s"${config.workDir}/ckpt_cdc_dl", s"${config.workDir}/quarantine_cdc",
-      maxFilesPerTrigger = FeedFilesPerTrigger)
-    // same shape-hint rule as the main IDE query: an empty-at-start dir
-    // must never be sniffed as the agents shape
-    val dlQuery = config.ideFeedDir.map(dir =>
-      CheckpointStream.runDeadLetter(spark, dir,
-        s"${config.workDir}/ckpt_ide_dl", s"${config.workDir}/quarantine_ide",
-        maxFilesPerTrigger = FeedFilesPerTrigger,
-        schemaHint = Some(CheckpointStream.ideSchema)))
-    // documents feed: either the FULL curation front door (quality →
-    // decontam → guard, survivors in curated/, every drop auditable) or
-    // the bare near-dup guard — in both cases under the configured LSH
-    // geometry, which the index manifest pins from here on
-    val g = config.guard
-    require(config.curation.isEmpty || config.docFeedDir.isDefined,
-      "curation requires a documents feed (docFeedDir)")
-    val ndQuery = config.docFeedDir.map { dir =>
-      config.curation match {
-        case Some(cur) =>
-          StreamCurate.run(spark, dir, s"${config.workDir}/ckpt_neardup",
-            s"${config.workDir}/curated", s"${config.workDir}/neardup_flags",
-            s"${config.workDir}/curation_decontam",
-            s"${config.workDir}/curation_rejects",
-            s"${config.workDir}/neardup_index",
-            evalSet = spark.read.parquet(cur.evalDir),
-            minTokens = cur.minTokens, minDistinctPct = cur.minDistinctPct,
-            shingleN = cur.shingleN, maxOverlapBp = cur.maxOverlapBp,
-            threshold = g.threshold,
-            minhashK = g.minhashK, bands = g.bands,
-            rowsPerBand = g.rowsPerBand,
-            maxFilesPerTrigger = config.docMaxFilesPerTrigger,
-            bandBuckets = g.bandBuckets, setsBuckets = g.setsBuckets,
-            lmModel = cur.lmRefDir.map(d => graft.operators.SearchOps
-              .lmWeights(spark.read.parquet(d))),
-            minLmPerBigram = cur.minLmPerBigram,
-            lmDir = s"${config.workDir}/curation_lm")
-        case None =>
-          StreamNearDup.run(spark, dir, s"${config.workDir}/ckpt_neardup",
-            s"${config.workDir}/neardup_flags",
-            s"${config.workDir}/neardup_index",
-            threshold = g.threshold, minhashK = g.minhashK, bands = g.bands,
-            rowsPerBand = g.rowsPerBand,
-            maxFilesPerTrigger = config.docMaxFilesPerTrigger,
-            bandBuckets = g.bandBuckets, setsBuckets = g.setsBuckets)
+        diffDir = Some(s"${config.workDir}/diffs_cdc")))
+      // the IDE feed's shape is known by contract — pass it explicitly so an
+      // empty-at-start directory is never misread under the agents schema
+      config.ideFeedDir.foreach(dir => start(
+        CheckpointStream.run(spark, dir, s"${config.workDir}/ckpt_ide", ideSink,
+          maxFilesPerTrigger = FeedFilesPerTrigger,
+          diffDir = Some(s"${config.workDir}/diffs_ide"),
+          schemaHint = Some(CheckpointStream.ideSchema))))
+      // malformed wire rows on EITHER feed are counted (graft_events_feed /
+      // graft_ide_feed metrics) AND recoverable: each feed gets a dead-letter
+      // query quarantining the dropped originals with reason tags — silent
+      // row loss on the primary CDC feed is as unacceptable as on the IDE one
+      start(CheckpointStream.runDeadLetter(spark, config.cdcFeedDir,
+        s"${config.workDir}/ckpt_cdc_dl", s"${config.workDir}/quarantine_cdc",
+        maxFilesPerTrigger = FeedFilesPerTrigger))
+      // same shape-hint rule as the main IDE query: an empty-at-start dir
+      // must never be sniffed as the agents shape
+      config.ideFeedDir.foreach(dir => start(
+        CheckpointStream.runDeadLetter(spark, dir,
+          s"${config.workDir}/ckpt_ide_dl", s"${config.workDir}/quarantine_ide",
+          maxFilesPerTrigger = FeedFilesPerTrigger,
+          schemaHint = Some(CheckpointStream.ideSchema))))
+      // documents feed: either the FULL curation front door (quality →
+      // decontam → guard, survivors in curated/, every drop auditable) or
+      // the bare near-dup guard — in both cases under the configured LSH
+      // geometry, which the index manifest pins from here on
+      val g = config.guard
+      config.docFeedDir.foreach { dir =>
+        start(config.curation match {
+          case Some(cur) =>
+            StreamCurate.run(spark, dir, s"${config.workDir}/ckpt_neardup",
+              s"${config.workDir}/curated", s"${config.workDir}/neardup_flags",
+              s"${config.workDir}/curation_decontam",
+              s"${config.workDir}/curation_rejects",
+              s"${config.workDir}/neardup_index",
+              evalSet = spark.read.parquet(cur.evalDir),
+              minTokens = cur.minTokens, minDistinctPct = cur.minDistinctPct,
+              shingleN = cur.shingleN, maxOverlapBp = cur.maxOverlapBp,
+              threshold = g.threshold,
+              minhashK = g.minhashK, bands = g.bands,
+              rowsPerBand = g.rowsPerBand,
+              maxFilesPerTrigger = config.docMaxFilesPerTrigger,
+              bandBuckets = g.bandBuckets, setsBuckets = g.setsBuckets,
+              lmModel = cur.lmRefDir.map(d => graft.operators.SearchOps
+                .lmWeights(spark.read.parquet(d))),
+              minLmPerBigram = cur.minLmPerBigram,
+              lmDir = s"${config.workDir}/curation_lm")
+          case None =>
+            StreamNearDup.run(spark, dir, s"${config.workDir}/ckpt_neardup",
+              s"${config.workDir}/neardup_flags",
+              s"${config.workDir}/neardup_index",
+              threshold = g.threshold, minhashK = g.minhashK, bands = g.bands,
+              rowsPerBand = g.rowsPerBand,
+              maxFilesPerTrigger = config.docMaxFilesPerTrigger,
+              bandBuckets = g.bandBuckets, setsBuckets = g.setsBuckets)
+        })
       }
+      // streaming corpus profile (q73's exact-histogram twin) over the SAME
+      // documents feed the guard consumes: one complete-mode snapshot per
+      // micro-batch, rename-published under <workDir>/doc_profile — the
+      // standing "what does the ingested corpus look like right now"
+      // artifact next to the guard's flags (state is one histogram row per
+      // language, bounded by the token-count domain, never stream length)
+      config.docFeedDir.foreach(dir => start(
+        StreamStats.run(spark, dir, s"${config.workDir}/ckpt_profile",
+          s"${config.workDir}/doc_profile",
+          maxFilesPerTrigger = config.docMaxFilesPerTrigger)))
+      // standing vocabulary-cardinality sketch next to the length profile:
+      // the q97 HLL panel per language, one 256-byte state row each
+      config.docFeedDir.foreach(dir => start(
+        StreamStats.runVocab(spark, dir, s"${config.workDir}/ckpt_vocab",
+          s"${config.workDir}/vocab_profile",
+          maxFilesPerTrigger = config.docMaxFilesPerTrigger)))
+      // streaming image dedup guard over the optional image feed: exact
+      // (decoded digest) + near (dHash) flags against the standing
+      // signature index — the multimodal mirror of the documents guard
+      config.imageFeedDir.foreach(dir => start(
+        StreamImageDedup.run(spark, dir, s"${config.workDir}/ckpt_imgdup",
+          s"${config.workDir}/image_dup_flags", s"${config.workDir}/image_index",
+          maxFilesPerTrigger = config.imgMaxFilesPerTrigger)))
+      // streaming ANN index feeder over the optional embeddings feed:
+      // vectors searchable as they arrive (LSM base + delta generations)
+      config.embFeedDir.foreach(dir => start(
+        StreamEmbedIndex.run(spark, dir, s"${config.workDir}/ckpt_embed",
+          s"${config.workDir}/embed_index",
+          nClusters = config.embed.nClusters,
+          lloydIters = config.embed.lloydIters,
+          trainSampleMod = config.embed.trainSampleMod,
+          maxFilesPerTrigger = config.embMaxFilesPerTrigger,
+          dupFlagsDir = config.embed.dupThreshold
+            .map(_ => s"${config.workDir}/embed_dup_flags"),
+          dupThreshold = config.embed.dupThreshold.getOrElse(0.9),
+          dupNprobe = config.embed.dupNprobe)))
+      // streaming session analytics over the optional events feed: q33's
+      // gap rule as standing state, finalized sessions appended once each
+      config.eventsFeedDir.foreach(dir => start(
+        StreamSessionize.run(spark, dir, s"${config.workDir}/ckpt_sessions",
+          s"${config.workDir}/sessions",
+          maxFilesPerTrigger = config.eventsMaxFilesPerTrigger)))
+      started.foreach(_.awaitTermination())
+      drained = true
+    } finally if (!drained) started.foreach { q =>
+      try q.stop() catch { case NonFatal(_) => () }
     }
-    // streaming corpus profile (q73's exact-histogram twin) over the SAME
-    // documents feed the guard consumes: one complete-mode snapshot per
-    // micro-batch, rename-published under <workDir>/doc_profile — the
-    // standing "what does the ingested corpus look like right now"
-    // artifact next to the guard's flags (state is one histogram row per
-    // language, bounded by the token-count domain, never stream length)
-    val profQuery = config.docFeedDir.map(dir =>
-      StreamStats.run(spark, dir, s"${config.workDir}/ckpt_profile",
-        s"${config.workDir}/doc_profile",
-        maxFilesPerTrigger = config.docMaxFilesPerTrigger))
-    // standing vocabulary-cardinality sketch next to the length profile:
-    // the q97 HLL panel per language, one 256-byte state row each
-    val vocabQuery = config.docFeedDir.map(dir =>
-      StreamStats.runVocab(spark, dir, s"${config.workDir}/ckpt_vocab",
-        s"${config.workDir}/vocab_profile",
-        maxFilesPerTrigger = config.docMaxFilesPerTrigger))
-    // streaming image dedup guard over the optional image feed: exact
-    // (decoded digest) + near (dHash) flags against the standing
-    // signature index — the multimodal mirror of the documents guard
-    val imgQuery = config.imageFeedDir.map(dir =>
-      StreamImageDedup.run(spark, dir, s"${config.workDir}/ckpt_imgdup",
-        s"${config.workDir}/image_dup_flags", s"${config.workDir}/image_index",
-        maxFilesPerTrigger = config.imgMaxFilesPerTrigger))
-    // streaming ANN index feeder over the optional embeddings feed:
-    // vectors searchable as they arrive (LSM base + delta generations)
-    val embQuery = config.embFeedDir.map(dir =>
-      StreamEmbedIndex.run(spark, dir, s"${config.workDir}/ckpt_embed",
-        s"${config.workDir}/embed_index",
-        nClusters = config.embed.nClusters,
-        lloydIters = config.embed.lloydIters,
-        trainSampleMod = config.embed.trainSampleMod,
-        maxFilesPerTrigger = config.embMaxFilesPerTrigger,
-        dupFlagsDir = config.embed.dupThreshold
-          .map(_ => s"${config.workDir}/embed_dup_flags"),
-        dupThreshold = config.embed.dupThreshold.getOrElse(0.9),
-        dupNprobe = config.embed.dupNprobe))
-    // streaming session analytics over the optional events feed: q33's
-    // gap rule as standing state, finalized sessions appended once each
-    val sessQuery = config.eventsFeedDir.map(dir =>
-      StreamSessionize.run(spark, dir, s"${config.workDir}/ckpt_sessions",
-        s"${config.workDir}/sessions",
-        maxFilesPerTrigger = config.eventsMaxFilesPerTrigger))
-    cdcQuery.awaitTermination()
-    ideQuery.foreach(_.awaitTermination())
-    dlCdcQuery.awaitTermination()
-    dlQuery.foreach(_.awaitTermination())
-    ndQuery.foreach(_.awaitTermination())
-    profQuery.foreach(_.awaitTermination())
-    vocabQuery.foreach(_.awaitTermination())
-    imgQuery.foreach(_.awaitTermination())
-    embQuery.foreach(_.awaitTermination())
-    sessQuery.foreach(_.awaitTermination())
 
     // diff-sink maintenance: fold the per-batch dirs and apply retention
     // (the storage-side twin of the state store's idle eviction)

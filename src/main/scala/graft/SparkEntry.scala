@@ -2058,11 +2058,10 @@ object SparkEntry {
         |  sha256(array_to_string(blocks, chr(10))) AS text_sha
         |FROM b ORDER BY doc_id""".stripMargin),
     // write-side .warc.zst (q195): the q186 contract, but the archives
-    // were WRITTEN by the general LZ77 compressor (hash-chain matches,
-    // Huffman literals, predefined-FSE sequences, dict-seeded) — the
-    // extraction oracle catches any encoder slip, and ratio_lt_60 pins
-    // that every archive genuinely compressed (a regression to stored
-    // bytes flips the flag on every row)
+    // were WRITTEN by libzstd against a ZDICT-trained dictionary per
+    // archive group — the extraction oracle catches any writer slip,
+    // and ratio_lt_60 pins that every archive genuinely compressed (a
+    // regression to stored bytes flips the flag on every row)
     "q195_warc_zst_write" -> (htmlExtractCtes(
       " ||\n    '<p>" + operators.WarcOps.Utf8Marker +
         "' || doc_id || '</p>'") +

@@ -222,12 +222,14 @@ object CdxOps {
     }
   }
 
-  /** The STANDING CDX artifact for a corpus state: `cdx-<fp>` parquet
-    * keyed by the documents corpus fingerprint (the `graph-<fp>`
-    * discipline, `SimilarityOps.corpusFingerprint`) — built once per
-    * corpus state from one archive walk, range-read from forever
-    * after; stale fingerprints GC on the next build check. Returns the
-    * index dir.
+  /** The STANDING CDX artifact for a set of archives: `cdx-<fp>`
+    * parquet keyed by a digest of the archive bytes themselves — built
+    * once per archive state from one archive walk, range-read from
+    * forever after; stale fingerprints GC on the next build check.
+    * Keying on the bytes rather than on the documents they were built
+    * from means an index written for another writer (codec, dictionary
+    * or record layout moves every extent) never serves these archives.
+    * Returns the index dir.
     */
   private[graft] def standingCdxIndex(
       spark: SparkSession, dir: String,
@@ -237,12 +239,10 @@ object CdxOps {
     import spark.implicits._
     val root = sys.props("java.io.tmpdir") +
       rootPrefix + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fp = SimilarityOps.corpusFingerprint(
-      corpusPath.getFileSystem(hconf), corpusPath)
+    val fp = f"${archives.agg(coalesce(bit_xor(xxhash64(col("group_id"), col("warc"))),
+      lit(0L))).head().getLong(0)}%016x"
     val rootPath = new org.apache.hadoop.fs.Path(root)
-    val idxFs = rootPath.getFileSystem(hconf)
+    val idxFs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val indexDir = s"$root/cdx-$fp"
     if (idxFs.exists(new org.apache.hadoop.fs.Path(indexDir, "_SUCCESS")))
       graft.BenchPhases.reused("cdx_build")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import com.github.luben.zstd.{ZstdException, Zstd => ZstdLib}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -621,7 +622,8 @@ object WarcOps {
   }
 
   /** The `.warc.zst` twin of `syntheticWarcGz`: the SAME records, one
-    * zstd frame per record (built by the conforming `Zstd.encodeRaw`).
+    * zstd frame per record (libzstd-compressed by `Zstd.encode`,
+    * alternating with `Zstd.encodeRaw` raw-block frames).
     */
   private[graft] def syntheticWarcZst(docs: DataFrame, groups: Int = 8): DataFrame = {
     val spark = docs.sparkSession
@@ -635,10 +637,10 @@ object WarcOps {
       .agg(expr("transform(array_sort(collect_list(s)), x -> x.rec)").as("recs"))
       .as[(Long, Seq[String])]
       .map { case (gid, recs) =>
-        // genuinely COMPRESSED frames since round 19 (alternating with
-        // raw-block frames so both block forms sit in one archive):
-        // the non-decompressing boundary walk must step over real
-        // compressed blocks, and extraction must inflate them
+        // compressed frames alternate with raw-block frames so both
+        // block forms sit in one archive: the non-decompressing
+        // boundary walk must step over real compressed blocks, and
+        // extraction must inflate them
         (gid, recs.zipWithIndex.map { case (r, i) =>
           val bytes = r.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           if (i % 2 == 0) Zstd.encode(bytes) else Zstd.encodeRaw(bytes)
@@ -667,12 +669,11 @@ object WarcOps {
 
   /** The dict-bearing `.warc.zst` twin of `syntheticWarcZst`
     * (webrecorder convention): a leading `0x184D2A5D` skippable frame
-    * carries a structured RFC 8878 §5 dictionary (itself
-    * zstd-compressed, as the ecosystem writes it) whose content is the
-    * shared record prefix; every record frame declares the
-    * Dictionary_ID and opens with a match reaching wholly into the
-    * dictionary content — drop the dictionary and every frame is
-    * undecodable, so the walker's dict plumbing is load-bearing, not
+    * carries a structured RFC 8878 §5 dictionary (wrapped in a zstd
+    * frame, as the ecosystem writes it) whose content is the shared
+    * record prefix; every record frame is compressed against it and
+    * declares its Dictionary_ID — drop the dictionary and every frame
+    * is undecodable, so the walker's dict plumbing is load-bearing, not
     * decorative.
     */
   private[graft] def syntheticWarcZstDict(docs: DataFrame, groups: Int = 8): DataFrame = {
@@ -687,30 +688,10 @@ object WarcOps {
       .agg(expr("transform(array_sort(collect_list(s)), x -> x.rec)").as("recs"))
       .as[(Long, Seq[String])]
       .map { case (gid, recs) =>
-        val prefix = WarcRecPrefix
-        val dictBlob = Zstd.encodeStructuredDict(WarcZstDictId, prefix)
-        val packed = Zstd.encodeRaw(dictBlob)
-        val head = new java.io.ByteArrayOutputStream()
-        // skippable frame: magic 0x184D2A5D, LE size, compressed dict
-        head.write(0x5D); head.write(0x2A); head.write(0x4D); head.write(0x18)
-        val sz = packed.length
-        head.write(sz & 0xff); head.write((sz >> 8) & 0xff)
-        head.write((sz >> 16) & 0xff); head.write((sz >> 24) & 0xff)
-        head.write(packed)
-        val frames = recs.map { r =>
-          val bytes = r.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          // every record opens with the prefix (corpus invariant); an
-          // oversized tail would overflow the one-block encoder, so it
-          // degrades to a dict-less raw frame (still a valid member)
-          if (bytes.length >= prefix.length && bytes.length - prefix.length < 100000 &&
-            java.util.Arrays.equals(
-              java.util.Arrays.copyOf(bytes, prefix.length), prefix))
-            Zstd.encodeWithDictPrefix(
-              java.util.Arrays.copyOfRange(bytes, prefix.length, bytes.length),
-              prefix, WarcZstDictId)
-          else Zstd.encodeRaw(bytes)
-        }
-        (gid, frames.foldLeft(head.toByteArray)(_ ++ _))
+        val dictBlob = Zstd.encodeStructuredDict(WarcZstDictId, WarcRecPrefix)
+        val frames = recs.map(r => Zstd.encode(
+          r.getBytes(java.nio.charset.StandardCharsets.UTF_8), dictBlob))
+        (gid, frames.foldLeft(dictFrame(Zstd.encodeRaw(dictBlob)))(_ ++ _))
       }
       .toDF("group_id", "warc")
   }
@@ -725,16 +706,40 @@ object WarcOps {
     extractToDocs(extractRecords(spark,
       syntheticWarcZstDict(Tables.documents(spark, dir))).toDF())
 
+  /** The webrecorder shared-dictionary frame: skippable magic
+    * `0x184D2A5D`, little-endian size, then `packed` (the dictionary
+    * blob, raw or wrapped in a zstd frame).
+    */
+  private def dictFrame(packed: Array[Byte]): Array[Byte] = {
+    val sz = packed.length
+    Array[Byte](0x5D, 0x2A, 0x4D, 0x18, sz.toByte, (sz >> 8).toByte,
+      (sz >> 16).toByte, (sz >> 24).toByte) ++ packed
+  }
+
+  /** Dictionary budget per archive group, in bytes. */
+  private val WarcDictBudget = 8192
+
+  /** The shared dictionary for one archive group's records: a
+    * ZDICT-trained blob within `WarcDictBudget` (it carries its own id
+    * and entropy tables), or — for a group too small to train — the
+    * minimal structured dictionary over `WarcRecPrefix`.
+    */
+  private[graft] def warcGroupDict(recs: Seq[Array[Byte]]): Array[Byte] = {
+    val buf = new Array[Byte](WarcDictBudget)
+    try java.util.Arrays.copyOf(buf, ZstdLib.trainFromBuffer(recs.toArray, buf, false).toInt)
+    catch {
+      case _: ZstdException => Zstd.encodeStructuredDict(WarcZstDictId, WarcRecPrefix)
+    }
+  }
+
   /** The WRITE-side `.warc.zst` production shape: webrecorder layout
     * (leading skippable dictionary frame, one frame per record) with
-    * every record frame GENUINELY COMPRESSED by the general LZ77
-    * encoder (`Zstd.encode` — hash-chain matches through the
-    * predefined-FSE/Huffman writer), dict-seeded so shared record
-    * prefixes cost one match into the §5 content prefix. Emits the
-    * per-group byte accounting alongside the archive so the ratio is
-    * part of the tested contract, not a side effect.
-    */
-  /** `storedGroup >= 0` plants that one archive group as RAW-BLOCK
+    * every record frame compressed by libzstd against the group's
+    * trained dictionary (`warcGroupDict`). Emits the per-group byte
+    * accounting alongside the archive so the ratio is part of the
+    * tested contract, not a side effect.
+    *
+    * `storedGroup >= 0` plants that one archive group as RAW-BLOCK
     * frames (stored, 1x bytes) — the negative control for the q195
     * ratio flag; production callers leave it -1 (all compressed).
     */
@@ -752,64 +757,29 @@ object WarcOps {
       .agg(expr("transform(array_sort(collect_list(s)), x -> x.rec)").as("recs"))
       .as[(Long, Seq[String])]
       .map { case (gid, recs) =>
-        // TRAINED dictionary (round 20, was the round-19 sampled
-        // prefix): COVER-style segment selection over the group's
-        // records, parameter-searched by actual compressed size with
-        // the sampled prefix kept as a candidate floor — record
-        // skeletons AND the corpus vocabulary become cross-record
-        // matches into the §5 prefix, which is where the ratio on
-        // sub-KB records lives (ZstdDict.trainForCorpus; trained-vs-
-        // sampled ratio pinned in ZstdDictTrainSpec and below in
-        // WarcZstSpec's corpus assertions)
-        val utf8 = java.nio.charset.StandardCharsets.UTF_8
-        val sampleBytes = recs.map(_.getBytes(utf8))
-        val trained = ZstdDict.trainForCorpus(sampleBytes, 8192)
-        // the structured blob needs >=8 content bytes (rep seeds);
-        // degenerate groups fall back to the invariant preamble
-        val dictContent =
-          if (trained.length >= 8) trained else WarcRecPrefix ++ trained
-        // trained literals Huffman table in the dict (round 20): the
-        // per-frame tree description moves into the blob, and record
-        // frames reference it via TREELESS literals blocks — the
-        // histogram sample is the dict content plus leading records
-        val hist = {
-          val h = new java.io.ByteArrayOutputStream()
-          h.write(dictContent)
-          sampleBytes.iterator.takeWhile(_ => h.size < 65536)
-            .foreach(h.write(_))
-          h.toByteArray
-        }
-        val (dictBlob, dictHuf) =
-          Zstd.encodeStructuredDictTrained(WarcZstDictId, dictContent, hist)
-        val packed = Zstd.encode(dictBlob) // the dict frame compresses too
-        val head = new java.io.ByteArrayOutputStream()
-        head.write(0x5D); head.write(0x2A); head.write(0x4D); head.write(0x18)
-        val sz = packed.length
-        head.write(sz & 0xff); head.write((sz >> 8) & 0xff)
-        head.write((sz >> 16) & 0xff); head.write((sz >> 24) & 0xff)
-        head.write(packed)
+        val sampleBytes = recs.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val dictBlob = warcGroupDict(sampleBytes)
+        val head = dictFrame(Zstd.encode(dictBlob)) // the dict frame compresses too
         var rawLen = 0L
         val frames = sampleBytes.map { bytes =>
           rawLen += bytes.length
           // content checksums on: a flipped byte in transit fails the
           // frame instead of shipping corrupt training text
           if (gid == storedGroup) Zstd.encodeRaw(bytes)
-          else Zstd.encode(bytes, dictContent, WarcZstDictId,
-            checksum = true, dictHuf = dictHuf)
+          else Zstd.encode(bytes, dictBlob, checksum = true)
         }
         // EMBEDDED seek table (round 20, public zstd seekable format):
         // one entry per frame — the dict skippable frame (decompressed
         // size 0) then every record frame with its decompressed size
         // and XXH64-low32 — so a replayer range-reads records without
         // ever walking frame headers (q204)
-        val headBytes = head.toByteArray
-        val entries = (headBytes.length.toLong, 0L,
+        val entries = (head.length.toLong, 0L,
           Some(Zstd.xxh64Low32(Array.emptyByteArray))) +:
           frames.zip(sampleBytes).map { case (fr, rec) =>
             (fr.length.toLong, rec.length.toLong,
               Some(Zstd.xxh64Low32(rec)))
           }
-        val warc = frames.foldLeft(headBytes)(_ ++ _) ++
+        val warc = frames.foldLeft(head)(_ ++ _) ++
           Zstd.seekTable(entries)
         (gid, warc, rawLen, warc.length.toLong)
       }
@@ -817,29 +787,20 @@ object WarcOps {
   }
 
   /** q195: write → read `.warc.zst` with REAL compression — the q186
-    * contract (same extraction oracle: any slip in the encoder's
-    * sequences, Huffman literals, or dict referencing changes rows)
+    * contract (same extraction oracle: any slip in the written frames,
+    * the trained dictionaries, or dict referencing changes rows)
     * PLUS a per-doc `ratio_lt_60` flag pinning that the archive each
     * document travelled through genuinely compressed (oracle expects
     * uniformly true; an encoder regression to stored bytes fails every
     * row). The 8-row accounting side joins back by broadcast.
     *
-    * Scale shape (100 TB): the encoder is per-record executor work —
-    * byte-linear, allocation bounded by the 64 MiB input cap; the
-    * archive group-by is the corpus-construction shuffle shared with
-    * q135/q185/q186.
+    * Scale shape (100 TB): dictionary training and the encoder are
+    * per-group and per-record executor work on one libzstd context per
+    * thread; the archive group-by is the corpus-construction shuffle
+    * shared with q135/q185/q186.
     */
-  def q195WarcZstWrite(spark: SparkSession, dir: String): DataFrame = {
-    val arch = syntheticWarcZstCompressed(Tables.documents(spark, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // corpus_build phase (r20 verdict item 5): the archives were already
-    // persisted; materializing them under a named phase splits
-    // writer-side construction (dict training + record encode) from the
-    // read path in BENCH.json, so a writer-cost change never reads as
-    // an extraction regression. Total timed work is unchanged.
-    graft.BenchPhases.timed("corpus_build") { arch.count(); () }
-    warcZstRatioJoin(spark, arch)
-  }
+  def q195WarcZstWrite(spark: SparkSession, dir: String): DataFrame =
+    warcZstRatioJoin(spark, syntheticWarcZstCompressed(Tables.documents(spark, dir)))
 
   /** The q195 extraction + ratio-flag join, factored so the negative
     * control (WarcZstSpec's planted STORED group, which must come
@@ -978,9 +939,9 @@ object WarcOps {
             if (id % 10 == 4)
               ("Content-Encoding: br\r\n", Brotli.encodeUncompressed(raw))
             else if (id % 20 == 9)
-              // REAL compressed zstd since round 19 (the general LZ77
-              // encoder) — the decoder must inflate genuine
-              // sequences/Huffman, not just unwrap raw blocks
+              // REAL compressed zstd (libzstd) — the decoder must
+              // inflate genuine sequences/Huffman, not just unwrap raw
+              // blocks
               ("Content-Encoding: zstd\r\n", Zstd.encode(raw))
             else ("Content-Encoding: compress\r\n", raw)
         }

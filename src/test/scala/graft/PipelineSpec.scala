@@ -474,6 +474,24 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.conf.set(key, callerValue)
   }
 
+  test("curation without a documents feed throws before any query starts") {
+    val base = Files.createTempDirectory("graft_pipeline_noqueries_").toString
+    Tables.events(spark, "/root/testdata/sf0.001").limit(10)
+      .coalesce(1).write.parquet(s"$base/feed_cdc/f0")
+    try {
+      intercept[IllegalArgumentException] {
+        Pipeline.run(spark, Pipeline.Config(
+          cdcFeedDir = s"$base/feed_cdc/f*",
+          ideFeedDir = None,
+          reportDir = None,
+          workDir = s"$base/work",
+          curation = Some(Pipeline.CurationConfig(evalDir = s"$base/eval"))))
+      }
+      assert(spark.streams.active.isEmpty,
+        spark.streams.active.map(_.id).mkString(", "))
+    } finally spark.streams.active.foreach(_.stop())
+  }
+
   test("diff maintenance folds only committed batches and applies the retention window") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_pipeline_gc_").toString

@@ -66,12 +66,7 @@ class WarcZstSpec extends AnyFunSuite {
     bos.write(sz & 0xff); bos.write((sz >> 8) & 0xff)
     bos.write((sz >> 16) & 0xff); bos.write((sz >> 24) & 0xff)
     bos.write(packed)
-    recs.foreach { r =>
-      val b = r.getBytes("UTF-8")
-      bos.write(Zstd.encodeWithDictPrefix(
-        java.util.Arrays.copyOfRange(b, prefix.length, b.length),
-        prefix, WarcOps.WarcZstDictId))
-    }
+    recs.foreach(r => bos.write(Zstd.encode(r.getBytes("UTF-8"), blob)))
     bos.toByteArray
   }
 
@@ -115,10 +110,14 @@ class WarcZstSpec extends AnyFunSuite {
     "below 0.5, records stay dict-DEPENDENT (stripping the dictionary " +
     "frame dead-letters all of them), and extents tile the archive") {
     import spark.implicits._
-    val arch = WarcOps.syntheticWarcZstCompressed(
+    def build() = WarcOps.syntheticWarcZstCompressed(
       graft.Tables.documents(spark, sf))
-      .as[(Long, Array[Byte], Long, Long)].collect()
+      .as[(Long, Array[Byte], Long, Long)].collect().sortBy(_._1)
+    val arch = build()
     assert(arch.length == 8)
+    // dictionary training and encoding are deterministic: a second
+    // build of the corpus is byte-identical
+    assert(build().map(_._2.toSeq).toSeq == arch.map(_._2.toSeq).toSeq)
     for ((gid, warc, rawLen, compLen) <- arch) {
       assert(compLen == warc.length)
       assert(compLen.toDouble / rawLen < 0.5,
@@ -231,24 +230,46 @@ class WarcZstSpec extends AnyFunSuite {
       graft.Tables.documents(spark, sf))
       .as[(Long, Array[Byte], Long, Long)].collect()
     var tSampled = 0L; var tTrained = 0L; var raw = 0L
-    for ((_, warc, _, _) <- arch) {
+    for ((gid, warc, _, _) <- arch) {
       val recs = WarcOps.zstdMembers(warc)
       raw += recs.map(_.length.toLong).sum
+      // the archive ships a ZDICT-trained dictionary, not the fallback
+      val (shipped, _) = WarcOps.warcZstDict(warc)
+      assert(shipped.id != 0L && shipped.id != WarcOps.WarcZstDictId, s"gid=$gid")
+      // baseline: the leading records verbatim as a raw-content prefix
       val bos = new java.io.ByteArrayOutputStream()
       bos.write(WarcOps.WarcRecPrefix)
       recs.iterator.takeWhile(_ => bos.size < 8192).foreach(bos.write(_))
       val sampled = bos.toByteArray
-      val trained = ZstdDict.trainForCorpus(recs, 8192)
-      tSampled += recs.map(r =>
-        Zstd.encode(r, sampled, WarcOps.WarcZstDictId).length.toLong).sum
-      tTrained += recs.map(r =>
-        Zstd.encode(r, trained, WarcOps.WarcZstDictId).length.toLong).sum
+      val trained = WarcOps.warcGroupDict(recs)
+      tSampled += recs.map(r => Zstd.encode(r, sampled).length.toLong).sum
+      tTrained += recs.map(r => Zstd.encode(r, trained).length.toLong).sum
     }
     info(f"q195 corpus raw=$raw sampled=$tSampled " +
       f"(${tSampled.toDouble / raw}%.4f) trained=$tTrained " +
       f"(${tTrained.toDouble / raw}%.4f)")
     assert(tTrained < tSampled,
       s"trained ($tTrained) must beat the sampled prefix ($tSampled)")
+  }
+
+  test("a group of 10 or fewer records falls back to the structured " +
+    "WarcRecPrefix dictionary and still decodes") {
+    import spark.implicits._
+    val docs = graft.Tables.documents(spark, sf).orderBy("doc_id").limit(40)
+    val arch = WarcOps.syntheticWarcZstCompressed(docs)
+      .as[(Long, Array[Byte], Long, Long)].collect()
+    assert(arch.length == 8)
+    val fallback = Zstd.encodeStructuredDict(WarcOps.WarcZstDictId, WarcOps.WarcRecPrefix)
+    for ((gid, warc, _, _) <- arch) {
+      val (dict, _) = WarcOps.warcZstDict(warc)
+      assert(dict.id == WarcOps.WarcZstDictId && dict.bytes.sameElements(fallback),
+        s"gid=$gid")
+      val members = WarcOps.zstdMembers(warc)
+      assert(members.nonEmpty && members.length <= 10, s"gid=$gid")
+      assert(members.forall(m => WarcOps.parseWarc(m).length == 1), s"gid=$gid")
+      assert(Zstd.readSeekTable(warc).get.count(_.decompSize > 0) == members.length)
+    }
+    assert(arch.map(a => WarcOps.zstdMembers(a._2).length).sum == 40)
   }
 
   test("seek table round-trips: checksummed and plain forms, empty " +

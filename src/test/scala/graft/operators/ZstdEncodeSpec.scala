@@ -2,14 +2,11 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The general zstd COMPRESSOR (`Zstd.encode` — hash-chain LZ77 →
-  * predefined-FSE sequences + per-block Huffman literals, RFC 8878):
-  * round-trips through the repo's own foreign-fixture-proven decoder
-  * across the shape matrix, compresses the HTML-corpus shape below
-  * the 0.5-ratio pin, and (when python3 is present, which it is in
-  * this container) is decoded byte-exact by FOREIGN libzstd via the
-  * ctypes harness `tools/verify_zstd_encoder.py` — the encoder-side
-  * mirror of the libpng/libtiff fixture discipline.
+/** The zstd WRITER (`Zstd.encode`, libzstd level 3 via zstd-jni):
+  * round-trips through `Zstd.decode` across the shape matrix,
+  * compresses the HTML-corpus shape below the 0.5-ratio pin, keeps
+  * dictionary-seeded frames dependent on their dictionary, and never
+  * expands incompressible input past the framing.
   */
 class ZstdEncodeSpec extends AnyFunSuite {
 
@@ -132,7 +129,9 @@ class ZstdEncodeSpec extends AnyFunSuite {
     val dictBlob = Zstd.encodeStructuredDict(0x47524654L, dictContent)
     val data = ("<html><head><title>Document 1</title></head><body>" +
       "fresh tail content beyond the shared prefix").getBytes ++ det(64, 9)
-    val enc = Zstd.encode(data, dictContent, dictId = 0x47524654L)
+    val enc = Zstd.encode(data, dictBlob)
+    // matches into the dictionary content make the frame smaller
+    assert(enc.length < Zstd.encode(data).length)
     val parsed = Zstd.parseDictionary(dictBlob) match {
       case Right(d) => d
       case Left(r) => fail(s"structured dict parse: $r")
@@ -187,59 +186,5 @@ class ZstdEncodeSpec extends AnyFunSuite {
       assert(enc.length <= n + 9 + 3 * (n / (1 << 17) + 1),
         s"expansion at $n: ${enc.length}")
     }
-  }
-
-  test("bit-flip fuzz: corrupted compressed frames are typed errors, " +
-    "never crashes or silent wrong output") {
-    val data = htmlish(8)
-    val enc = Zstd.encode(data)
-    for (i <- 4 until enc.length by 11) {
-      val bad = enc.clone()
-      bad(i) = (bad(i) ^ 0x40).toByte
-      Zstd.decode(bad) match {
-        case Left(reason) => assert(reason.nonEmpty)
-        case Right(out) => // a lucky flip may survive; never oversized
-          assert(out.length <= data.length)
-      }
-    }
-  }
-
-  test("FOREIGN verification: libzstd (via ctypes) decodes our " +
-    "compressed frames byte-exact — plain and dict-seeded") {
-    val py = new java.io.File("/usr/bin/python3")
-    val py2 = new java.io.File("/root/.pyenv/versions/3.11.7/bin/python3")
-    assume(py.exists() || py2.exists(), "python3 not present")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zstd_enc")
-    def put(name: String, b: Array[Byte]): Unit =
-      java.nio.file.Files.write(dir.resolve(name), b)
-    val cases = Seq(
-      "empty" -> Array.emptyByteArray,
-      "tiny" -> "abc".getBytes,
-      "uniform" -> Array.fill[Byte](50000)(3),
-      "html" -> htmlish(40),
-      "binary" -> det(60000, 7),
-      "multiblock" -> htmlish(300),
-      "mixed" -> (det(20000, 5) ++ htmlish(50) ++ det(20000, 6)))
-    for ((name, data) <- cases) {
-      put(s"$name.bin", data)
-      put(s"$name.zst", Zstd.encode(data))
-    }
-    // checksummed frame: libzstd must verify the xxh64-low32 field too
-    put("checksummed.bin", htmlish(25))
-    put("checksummed.zst", Zstd.encode(htmlish(25), checksum = true))
-    // >128-symbol skewed literals: FSE-compressed Huffman weights
-    put("fseweights.bin", skewedWide(40000, 9))
-    put("fseweights.zst", Zstd.encode(skewedWide(40000, 9)))
-    val dictContent = htmlish(2)
-    val data = "<html><head><title>Document 0</title>tail".getBytes
-    put("dict.bin", Zstd.encodeStructuredDict(0x47524654L, dictContent))
-    put("dictcase.bin", data)
-    put("dictcase.zst", Zstd.encode(data, dictContent, dictId = 0x47524654L))
-    val pyBin = if (py.exists()) py.getPath else py2.getPath
-    val proc = new ProcessBuilder(pyBin, "tools/verify_zstd_encoder.py",
-      dir.toString).redirectErrorStream(true).start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    val rc = proc.waitFor()
-    assert(rc == 0 && out.contains("ALL OK"), s"foreign verify:\n$out")
   }
 }

@@ -163,17 +163,19 @@ class ZstdSpec extends AnyFunSuite {
     "the dictionary content (undecodable without it)") {
     val prefix = ("WARC/1.1\r\nWARC-Type: response\r\n" +
       "WARC-Target-URI: http://www.example.com/doc/").getBytes("UTF-8")
+    val d0 = Zstd.parseDictionary(prefix).toOption.get
+    val structured = Zstd.encodeStructuredDict(0xCAFEL, prefix)
     for (suffixLen <- Seq(0, 1, 300, 5000, 70000)) {
       val suffix = Array.tabulate[Byte](suffixLen)(i => ((i * 17 + 3) & 0xff).toByte)
+      val data = prefix ++ suffix
       // raw-content shape (no id field)
-      val d0 = Zstd.parseDictionary(prefix).toOption.get
-      val enc0 = Zstd.encodeWithDictPrefix(suffix, prefix, 0L)
-      assert(Zstd.decode(enc0, prefix.length + suffixLen + 64, d0).toOption
-        .exists(java.util.Arrays.equals(_, prefix ++ suffix)), s"n=$suffixLen")
-      // declared-id shape
-      val enc1 = Zstd.encodeWithDictPrefix(suffix, prefix, 0xCAFEL)
-      assert(Zstd.decode(enc1, prefix.length + suffixLen + 64, d0).toOption
-        .exists(java.util.Arrays.equals(_, prefix ++ suffix)), s"n=$suffixLen id")
+      val enc0 = Zstd.encode(data, prefix)
+      assert(Zstd.decode(enc0, data.length + 64, d0).toOption
+        .exists(java.util.Arrays.equals(_, data)), s"n=$suffixLen")
+      // declared-id shape, served by the raw-content dictionary too
+      val enc1 = Zstd.encode(data, structured)
+      assert(Zstd.decode(enc1, data.length + 64, d0).toOption
+        .exists(java.util.Arrays.equals(_, data)), s"n=$suffixLen id")
       // without the dictionary: typed, never garbage
       assert(Zstd.decode(enc0, 1 << 20).isLeft, s"n=$suffixLen nodict")
       assert(Zstd.decode(enc1, 1 << 20) == Left("dictionary-missing"))
@@ -192,7 +194,7 @@ class ZstdSpec extends AnyFunSuite {
     assert(d.id == 0x47524654L)
     assert(d.bytes.endsWith(content))
     val tail = "Content-Length: 99\r\n\r\nbody".getBytes("UTF-8")
-    val enc = Zstd.encodeWithDictPrefix(tail, content, 0x47524654L)
+    val enc = Zstd.encode(content ++ tail, blob)
     assert(Zstd.decode(enc, 1 << 20, d).toOption
       .exists(java.util.Arrays.equals(_, content ++ tail)))
     // a different structured dict id is a typed mismatch
