@@ -2,6 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
+import graft.io.ForkFreeLocalFileSystem
 import graft.operators.SimilarityOps
 import graft.sources.{Enrichment, SchemaInit}
 import graft.streaming.{CheckpointStream, StreamCurate, StreamEmbedIndex, StreamImageDedup, StreamNearDup, StreamSessionize, StreamStats}
@@ -200,7 +201,7 @@ object Pipeline {
   private[graft] def maintainDiffSink(
       spark: SparkSession, checkpointDir: String, diffDir: String,
       retention: Option[java.time.Duration]): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val hconf = spark.sessionState.newHadoopConf()
     val commits = new org.apache.hadoop.fs.Path(s"$checkpointDir/commits")
     val cfs = commits.getFileSystem(hconf)
     if (!cfs.exists(commits)) return
@@ -244,22 +245,33 @@ object Pipeline {
     * the reference's `checkpointDiffs` accumulation) land in
     * `<workDir>/diffs_cdc` / `<workDir>/diffs_ide` as the streams run.
     *
-    * Spark lists more paths than `parallelPartitionDiscovery.threshold`
-    * (default 32) with a distributed job of one task per path, each task
-    * decoding the whole Hadoop conf. Every micro-batch hands the listing
-    * up to `FeedFilesPerTrigger` feed files, and its upsert up to
-    * `SinkBuckets` bucket dirs, so for the run the threshold is raised to
-    * that bound and the listing stays on the driver; the caller's value
-    * is restored however the run ends. Streaming queries copy the
-    * session conf when they start, so the value must be in place before.
+    * The session conf carries run-scoped settings, set before any query
+    * starts (streaming queries copy the session conf when they start) and
+    * put back to the caller's values, set or unset, however the run ends:
+    *  - Spark lists more paths than `parallelPartitionDiscovery.threshold`
+    *    (default 32) with a distributed job of one task per path, each
+    *    task decoding the whole Hadoop conf. Every micro-batch hands the
+    *    listing up to `FeedFilesPerTrigger` feed files, and its upsert up
+    *    to `SinkBuckets` bucket dirs, so the threshold is raised to that
+    *    bound and the listing stays on the driver.
+    *  - `file:` is the fork-free local filesystem
+    *    (`graft.io.ForkFreeLocalFileSystem`): without libhadoop, Hadoop's
+    *    own starts a `chmod` process per created file or dir and a
+    *    `readlink` process per checkpoint rename.
     */
   def run(spark: SparkSession, config: Config): DataFrame = {
-    val callerThreshold = spark.conf.get(ListingThresholdKey)
     val perBatchPaths = math.max(FeedFilesPerTrigger, CheckpointStream.SinkBuckets)
-    spark.conf.set(ListingThresholdKey,
-      math.max(perBatchPaths, callerThreshold.toInt).toString)
+    val scoped = (ListingThresholdKey ->
+      math.max(perBatchPaths, spark.conf.get(ListingThresholdKey).toInt).toString) +:
+      ForkFreeLocalFileSystem.confKeys
+    val callerConf = spark.conf.getAll // the keys set, without defaults
+    val caller = scoped.map { case (k, _) => k -> callerConf.get(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     try drain(spark, config)
-    finally spark.conf.set(ListingThresholdKey, callerThreshold)
+    finally caller.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   private def drain(spark: SparkSession, config: Config): DataFrame = {

@@ -181,7 +181,7 @@ object WarcOps {
                     else {
                       val members = gunzipMembers(d)
                       if (members.isEmpty) None
-                      else Some(members.reduce(_ ++ _))
+                      else Some(concatBytes(members))
                     }
                   }
                 }
@@ -596,6 +596,19 @@ object WarcOps {
     bos.toByteArray
   }
 
+  /** The parts joined into one array, copied once: a pairwise `++`
+    * fold recopies the growing prefix per part, quadratic in parts.
+    */
+  private[graft] def concatBytes(parts: Seq[Array[Byte]]): Array[Byte] = {
+    val out = new Array[Byte](parts.iterator.map(_.length).sum)
+    var off = 0
+    parts.foreach { p =>
+      System.arraycopy(p, 0, out, off, p.length)
+      off += p.length
+    }
+    out
+  }
+
   /** The non-ASCII paragraph appended to every q135 document — forces
     * the UTF-8 body round-trip (octet ≠ char counts; a Latin-1 decode
     * anywhere in the chain diverges `text_sha`).
@@ -641,10 +654,10 @@ object WarcOps {
         // block forms sit in one archive: the non-decompressing
         // boundary walk must step over real compressed blocks, and
         // extraction must inflate them
-        (gid, recs.zipWithIndex.map { case (r, i) =>
+        (gid, concatBytes(recs.zipWithIndex.map { case (r, i) =>
           val bytes = r.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           if (i % 2 == 0) Zstd.encode(bytes) else Zstd.encodeRaw(bytes)
-        }.foldLeft(Array.empty[Byte])(_ ++ _))
+        }))
       }
       .toDF("group_id", "warc")
   }
@@ -661,10 +674,7 @@ object WarcOps {
 
   private[graft] val WarcZstDictId = 0x47524654L // arbitrary non-zero id
 
-  /** Archive groups per corpus (doc_id % WarcGroups → group_id); the
-    * q195 ratio-flag join keys on the same constant so changing the
-    * fan-out can't silently desynchronize corpus and accounting.
-    */
+  /** Archive groups per corpus (doc_id % WarcGroups → group_id). */
   private[graft] val WarcGroups = 8
 
   /** The dict-bearing `.warc.zst` twin of `syntheticWarcZst`
@@ -691,7 +701,7 @@ object WarcOps {
         val dictBlob = Zstd.encodeStructuredDict(WarcZstDictId, WarcRecPrefix)
         val frames = recs.map(r => Zstd.encode(
           r.getBytes(java.nio.charset.StandardCharsets.UTF_8), dictBlob))
-        (gid, frames.foldLeft(dictFrame(Zstd.encodeRaw(dictBlob)))(_ ++ _))
+        (gid, concatBytes(dictFrame(Zstd.encodeRaw(dictBlob)) +: frames))
       }
       .toDF("group_id", "warc")
   }
@@ -779,8 +789,7 @@ object WarcOps {
             (fr.length.toLong, rec.length.toLong,
               Some(Zstd.xxh64Low32(rec)))
           }
-        val warc = frames.foldLeft(head)(_ ++ _) ++
-          Zstd.seekTable(entries)
+        val warc = concatBytes((head +: frames) :+ Zstd.seekTable(entries))
         (gid, warc, rawLen, warc.length.toLong)
       }
       .toDF("group_id", "warc", "raw_len", "comp_len")
@@ -792,7 +801,8 @@ object WarcOps {
     * PLUS a per-doc `ratio_lt_60` flag pinning that the archive each
     * document travelled through genuinely compressed (oracle expects
     * uniformly true; an encoder regression to stored bytes fails every
-    * row). The 8-row accounting side joins back by broadcast.
+    * row). Each record carries its archive's flag out of the pass
+    * that builds the archive.
     *
     * Scale shape (100 TB): dictionary training and the encoder are
     * per-group and per-record executor work on one libzstd context per
@@ -802,23 +812,26 @@ object WarcOps {
   def q195WarcZstWrite(spark: SparkSession, dir: String): DataFrame =
     warcZstRatioJoin(spark, syntheticWarcZstCompressed(Tables.documents(spark, dir)))
 
-  /** The q195 extraction + ratio-flag join, factored so the negative
+  /** The q195 extraction + ratio flag, factored so the negative
     * control (WarcZstSpec's planted STORED group, which must come
-    * back `ratio_lt_60 = false`) drives the SAME join the production
+    * back `ratio_lt_60 = false`) drives the SAME path the production
     * query uses — the oracle's uniformly-true expectation is checked
     * against a path that demonstrably CAN say false.
     */
   private[graft] def warcZstRatioJoin(
       spark: SparkSession, arch: DataFrame): DataFrame = {
-    val flags = arch.select(col("group_id"),
-      (col("comp_len").cast("double") <
-        col("raw_len").cast("double") * 0.6).as("ratio_lt_60"))
-    val docs = extractToDocs(extractRecords(spark, arch).toDF())
-    docs.join(broadcast(flags),
-        docs("doc_id") % WarcGroups === flags("group_id"))
-      .select(docs("doc_id"), col("url"), col("status"), col("n_blocks"),
-        col("text_sha"), col("ratio_lt_60"))
-      .orderBy(col("doc_id"))
+    import spark.implicits._
+    // the flag rides with the records: a join back to `arch` would
+    // build every archive a second time
+    val recs = arch.select(col("group_id"), col("warc"),
+        (col("comp_len").cast("double") <
+          col("raw_len").cast("double") * 0.6).as("ratio_lt_60"))
+      .as[(Long, Array[Byte], Boolean)]
+      .flatMap { case (_, bytes, flag) =>
+        parseWarcAuto(bytes).map { case (uri, st, body, _, _) => (uri, st, body, flag) }
+      }
+      .toDF("target_uri", "status", "body", "ratio_lt_60")
+    extractToDocs(recs, carry = Seq("ratio_lt_60"))
   }
 
   /** q204: selective access served from the EMBEDDED seek table (the
@@ -957,7 +970,7 @@ object WarcOps {
       .groupByKey(_._1)
       .mapGroups { (gid, it) =>
         val recs = it.toSeq.sortBy(_._2).map(_._3)
-        (gid, recs.reduce(_ ++ _))
+        (gid, concatBytes(recs))
       }
       .toDF("group_id", "warc")
   }
@@ -997,7 +1010,7 @@ object WarcOps {
       .groupByKey(_._1)
       .mapGroups { (gid, it) =>
         val recs = it.toSeq.sortBy(_._2).map(_._3)
-        (gid, recs.reduce(_ ++ _))
+        (gid, concatBytes(recs))
       }
       .toDF("group_id", "warc")
   }
@@ -1045,7 +1058,7 @@ object WarcOps {
       .groupByKey(_._1)
       .mapGroups { (gid, it) =>
         val recs = it.toSeq.sortBy(_._2).map(_._3)
-        (gid, recs.reduce(_ ++ _))
+        (gid, concatBytes(recs))
       }
       .toDF("group_id", "warc")
   }
@@ -1176,15 +1189,16 @@ object WarcOps {
       recs.repartition(col(key))
     else recs
 
-  private[graft] def extractToDocs(recs: DataFrame): DataFrame =
+  /** `carry` names record columns passed through to each document row. */
+  private[graft] def extractToDocs(recs: DataFrame, carry: Seq[String] = Nil): DataFrame =
     widenRecords(recs)
-      .select(
+      .select(Seq(
         regexp_extract(col("target_uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
         col("target_uri").as("url"),
         col("status").cast("long").as("status"),
-        HtmlOps.htmlBlocks(col("body")).as("blocks"))
-      .select(col("doc_id"), col("url"), col("status"),
+        HtmlOps.htmlBlocks(col("body")).as("blocks")) ++ carry.map(col): _*)
+      .select(Seq(col("doc_id"), col("url"), col("status"),
         size(col("blocks")).cast("long").as("n_blocks"),
-        sha2(array_join(col("blocks"), "\n"), 256).as("text_sha"))
+        sha2(array_join(col("blocks"), "\n"), 256).as("text_sha")) ++ carry.map(col): _*)
       .orderBy(col("doc_id"))
 }

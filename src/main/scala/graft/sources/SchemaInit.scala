@@ -49,7 +49,7 @@ object SchemaInit {
       // the upsert (correctly) refuses forever after
       val sinkPath = new org.apache.hadoop.fs.Path(path)
       graft.streaming.CheckpointStream.stampManifest(
-        sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration), sinkPath)
+        sinkPath.getFileSystem(spark.sessionState.newHadoopConf()), sinkPath)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .coalesce(1).write.mode("overwrite").parquet(s"$path/bucket=0")
       true

@@ -647,7 +647,7 @@ object CheckpointStream {
   def upsert(batch: DataFrame, sinkDir: String, buckets: Int = SinkBuckets): Unit = {
     val spark = batch.sparkSession
     val sinkPath = new Path(sinkDir)
-    val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = sinkPath.getFileSystem(spark.sessionState.newHadoopConf())
     val bakPath = new Path(sinkDir + ".bak")
     val tmpPath = new Path(sinkDir + ".tmp")
     recoverBackup(fs, sinkPath, bakPath)
@@ -707,7 +707,7 @@ object CheckpointStream {
     */
   def appendDiffs(diffs: DataFrame, diffDir: String, batchId: Long): Unit = {
     val dir = new Path(s"$diffDir/batch_id=$batchId")
-    val fs = dir.getFileSystem(diffs.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = dir.getFileSystem(diffs.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(new Path(dir, "_SUCCESS"))) return
     diffs.write.mode("overwrite").parquet(dir.toString)
   }
@@ -783,7 +783,7 @@ object CheckpointStream {
       targetFiles: Int = 4,
       retainRowsNewerThanUs: Option[Long] = None): Unit = {
     val root = new Path(diffDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(diffDir + ".compact_tmp")
     val bak = new Path(diffDir + ".compact_bak")
     recoverCompaction(fs, root, tmp, bak)

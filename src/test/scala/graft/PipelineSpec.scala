@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.ForkFreeLocalFileSystem
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +13,20 @@ class PipelineSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
+  /** Agents-shaped events re-shaped into the reference's
+    * `ide_checkpoints` wire schema.
+    */
+  private def ideShaped(events: org.apache.spark.sql.DataFrame) =
+    events.select(
+      col("user_id").cast("string").as("thread_id"),
+      concat(lit("prompt-"), col("event_id")).as("prompt_id"),
+      col("user_id").cast("string").as("session_id"),
+      col("ts").cast("string").as("checkpoint_ts"),
+      col("event_id").cast("string").as("checkpoint_id"),
+      encode(col("props"), "UTF-8").as("blob"),
+      when(col("event_type") === "signup", lit("__start__"))
+        .otherwise(col("event_type")).as("task_path"))
+
   test("full pipeline: dual feeds, backfill, enrichment, per-source sinks") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_pipeline_").toString
@@ -22,16 +37,7 @@ class PipelineSpec extends AnyFunSuite {
     // must normalize BOTH wire shapes to the same engine rows
     events.filter(col("user_id") % 2 === 0)
       .coalesce(1).write.parquet(s"$base/feed_cdc/f0")
-    events.filter(col("user_id") % 2 === 1)
-      .select(
-        col("user_id").cast("string").as("thread_id"),
-        concat(lit("prompt-"), col("event_id")).as("prompt_id"),
-        col("user_id").cast("string").as("session_id"),
-        col("ts").cast("string").as("checkpoint_ts"),
-        col("event_id").cast("string").as("checkpoint_id"),
-        encode(col("props"), "UTF-8").as("blob"),
-        when(col("event_type") === "signup", lit("__start__"))
-          .otherwise(col("event_type")).as("task_path"))
+    ideShaped(events.filter(col("user_id") % 2 === 1))
       .coalesce(1).write.parquet(s"$base/feed_ide/f0")
 
     // one report drop for a known cdc session
@@ -432,6 +438,16 @@ class PipelineSpec extends AnyFunSuite {
           .foreach(descriptions.add)
     }
     val callerValue = spark.conf.get(key)
+    // the run also scopes the filesystem keys: the caller's values come
+    // back whether the caller had set them or not
+    val (cacheKey, implKeys) = ForkFreeLocalFileSystem.confKeys.map(_._1)
+      .partition(_ == "fs.file.impl.disable.cache")
+    def restored(set: Seq[(String, String)], unset: Seq[String]): Unit = {
+      set.foreach { case (k, v) => assert(spark.conf.getOption(k).contains(v), k) }
+      unset.foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
+    }
+    spark.conf.set(cacheKey.head, "false")
+    implKeys.foreach(spark.conf.unset)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = Pipeline.run(spark, Pipeline.Config(
@@ -440,6 +456,7 @@ class PipelineSpec extends AnyFunSuite {
         reportDir = None,
         workDir = s"$base/work"))
       assert(spark.conf.get(key) == callerValue)
+      restored(Seq(cacheKey.head -> "false"), implKeys)
       assert(out.select("user_id").distinct().count() == perTrigger)
       // the listener bus is FIFO: once this job's start is seen, every
       // job the run started has been seen too
@@ -460,8 +477,12 @@ class PipelineSpec extends AnyFunSuite {
     val listings = descriptions.asScala.filter(_.startsWith("Listing leaf files and directories"))
     assert(listings.isEmpty, listings.mkString("\n"))
 
-    // a run that throws restores the caller's value as well
+    // a run that throws restores the caller's values as well
+    val callerImpls = implKeys.zip(Seq(
+      "org.apache.hadoop.fs.LocalFileSystem", "org.apache.hadoop.fs.local.LocalFs"))
     spark.conf.set(key, "40")
+    callerImpls.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.conf.unset(cacheKey.head)
     try {
       intercept[Exception] {
         Pipeline.run(spark, Pipeline.Config(
@@ -471,7 +492,51 @@ class PipelineSpec extends AnyFunSuite {
           workDir = s"$base/work_failed"))
       }
       assert(spark.conf.get(key) == "40")
-    } finally spark.conf.set(key, callerValue)
+      restored(callerImpls, cacheKey)
+    } finally {
+      spark.conf.set(key, callerValue)
+      ForkFreeLocalFileSystem.confKeys.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
+  test("a drain starts no chmod or readlink process") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_pipeline_forks_").toString
+    // 16 sessions of 5 events each, 2024 timestamps
+    val events = (0 until 80).map { i =>
+      (i.toLong, 1704067200000000L + i * 1000000L, 100L + i % 16,
+        if (i < 16) "signup" else "click", 1.0, s"""{"i":$i}""")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .withColumn("ts", expr("timestamp_micros(ts)"))
+    events.filter(col("user_id") % 2 === 0).coalesce(1).write.parquet(s"$base/feed_cdc/f0")
+    ideShaped(events.filter(col("user_id") % 2 === 1))
+      .coalesce(1).write.parquet(s"$base/feed_ide/f0")
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    val jfr = java.nio.file.Paths.get(base, "drain.jfr")
+    recording.start()
+    try {
+      // the recorder's positive control: one process it must see
+      assert(new ProcessBuilder("true").start().waitFor() == 0)
+      Pipeline.run(spark, Pipeline.Config(
+        cdcFeedDir = s"$base/feed_cdc/f*",
+        ideFeedDir = Some(s"$base/feed_ide/f*"),
+        reportDir = None,
+        workDir = s"$base/work"))
+    } finally {
+      recording.stop()
+      recording.dump(jfr)
+      recording.close()
+    }
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command")).toSeq
+    assert(commands.contains("true"), commands.mkString("\n"))
+    val forks = commands.filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+    assert(forks.isEmpty, s"${forks.size} forks, e.g.\n${forks.take(5).mkString("\n")}")
+    // and the drain did its work
+    assert(spark.read.parquet(s"$base/work/sessions_enriched").count() > 0)
   }
 
   test("curation without a documents feed throws before any query starts") {
