@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -76,68 +75,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce post-shuffle partitions INSIDE cached plans too:
-      // the iterative operators (dedupGroups' label propagation) persist
-      // tiny per-generation frames whose 32-partition shuffles are pure
-      // scheduling overhead otherwise
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE coalescing's 1 MiB floor assumes partition BYTES track
-      // partition COST; this engine's rows are CPU-dense (a 150 KiB
-      // compressed archive row costs multi-ms of decode+parse+regex), so
-      // the default floor was measured collapsing the post-shuffle half
-      // of whole pipelines to ONE task (r21 profile: q172's 6.2 s
-      // archive-parse stage, tasks=1). A 16 KiB floor keeps the
-      // coalescer merging genuinely tiny partitions (the iterative
-      // dedupGroups frames) while letting CPU-dense stages spread.
-      // Scale-safe: above ~cpus·16 KiB of shuffle bytes the target size
-      // is total/parallelism and the floor never binds. Parameterized
-      // for cluster runs (prod would size it to bytes-per-core-second).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "16k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
     // INDEX-CACHE HONESTY (round-11 verdict fix): the standing-index
     // queries (q38/q49/q68/q71) key their on-disk builds by corpus
     // fingerprint, so a bench run after any earlier run of the same
     // corpus finds every index warm, records no `index_build` phase, and
     // ships `phases: {}` — making the promised build-vs-probe split
-    // unreproducible from the artifact. Clear the fingerprint-cache roots
+    // unreproducible from the artifact. Clear the standing-artifact roots
     // for THIS corpus before the first sample (the exact analogue of the
     // rep-0 `clearCache()` for persisted frames): rep-0 cold samples then
     // pay and RECORD the build, later reps measure the warm probe.
-    locally {
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      val tmp = sys.props("java.io.tmpdir")
-      for (root <- Seq("graft_ivf_", "graft_ivf_lsm_", "graft_ivfq_",
-          "graft_ivfpq_", "graft_embguard_",
-          // round-14 standing artifacts: span pairs/extents, the graph
-          // index, and the unigram tokenizer model — same honesty rule
-          "graft_spans_", "graft_graph_", "graft_unigram_",
-          // round-17/18 standing artifacts: the CDX indexes (gz + zst)
-          "graft_cdx_", "graft_cdxz_")) {
-        val p = new org.apache.hadoop.fs.Path(s"$tmp/$root$sfx")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) { fs.delete(p, true); () }
-      }
-    }
-    // untimed NEUTRAL warmup (not one of the timed queries, which would
-    // give that query's own timed run an unfair warm start): initializes
-    // JVM, codegen, shuffle and parquet-scan machinery
-    try {
-      spark.range(1000000).selectExpr("sum(id) as s", "count(distinct id % 7) as d")
-        .write.format("noop").mode("overwrite").save()
-      spark.read.parquet(s"$sfDir/nation.parquet")
-        .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    StandingArtifacts.clear(spark, sfDir)
+    GraftSession.warmup(spark, sfDir)
     // CPU-CALIBRATION PROBE (round-18 verdict fix): this host's speed
     // drifts up to 2.7x day-over-day (judge-measured: identical r17 code,
     // 3.64 s committed vs 9.8 s next-day), so cross-chain per-query
@@ -189,7 +140,7 @@ object Bench {
     }
     val calibMt = (0 until 3).map { _ =>
       val t0 = System.nanoTime()
-      spark.range(0L, 1L << 24, 1L, cpus.toInt)
+      spark.range(0L, 1L << 24, 1L, cpus)
         .selectExpr("sum(cast(hash(id) as bigint)) as s",
           "count(distinct id % 1024) as d")
         .write.format("noop").mode("overwrite").save()

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graft.RegistryBridge
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions._
@@ -16,12 +15,8 @@ import graft.functions._
   * `spark.sql(...)` user — or a cluster configured with
   * `spark.sql.extensions=graft.GraftExtensions` — can write
   * `bounded_top_k(struct(score, id), 3)` or `minhash_signature(hashes, 48)`
-  * without touching Scala. Two entry points:
-  *
-  *   - `spark.sql.extensions=graft.GraftExtensions` at session build (the
-  *     deployment path: every session on the cluster gets the functions);
-  *   - `GraftExtensions.install(spark)` on a live session (notebooks,
-  *     fixtures) — same builders, injected through the registry bridge.
+  * without touching Scala. Every engine session (`GraftSession`) is built
+  * with it, as any session on a cluster can be.
   *
   * Static arguments (k, w, tables…) must be INTEGER LITERALS: they size
   * generated code and driver-side constants (seed tables, hyperplanes), so
@@ -52,7 +47,7 @@ object GraftExtensions {
       new ExpressionInfo(classOf[GraftExtensions].getName, name),
       builder)
 
-  /** The full native-function surface, shared by both entry points. */
+  /** The full native-function surface. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     fn("splitmix64", "splitmix64(x) - SplitMix64 mix of a bigint", { args =>
       arity("splitmix64", 1, args); SplitMix64(args.head)
@@ -114,12 +109,4 @@ object GraftExtensions {
       BloomSketch(args.head)
     }),
   )
-
-  /** Register every native function on a LIVE session. Idempotent
-    * (re-registration replaces the same builders).
-    */
-  def install(spark: SparkSession): Unit =
-    functions.foreach { case (ident, info, builder) =>
-      RegistryBridge.register(spark, ident, info, builder)
-    }
 }

@@ -8,6 +8,7 @@ import graft.sources.{Enrichment, SchemaInit}
 import graft.streaming.{CheckpointStream, StreamCurate, StreamEmbedIndex, StreamImageDedup, StreamNearDup, StreamSessionize, StreamStats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The composed engine lifecycle (SURVEY §3, reference
@@ -258,11 +259,19 @@ object Pipeline {
     *    (`graft.io.ForkFreeLocalFileSystem`): without libhadoop, Hadoop's
     *    own starts a `chmod` process per created file or dir and a
     *    `readlink` process per checkpoint rename.
+    *  - session state lives off-heap in RocksDB: the default store holds
+    *    every session's full state on the JVM heap, which a keyed-state
+    *    stream of unbounded sessions cannot afford. A new checkpoint
+    *    records the provider and keeps it for its lifetime, whatever the
+    *    session resuming it sets.
     */
   def run(spark: SparkSession, config: Config): DataFrame = {
     val perBatchPaths = math.max(FeedFilesPerTrigger, CheckpointStream.SinkBuckets)
-    val scoped = (ListingThresholdKey ->
-      math.max(perBatchPaths, spark.conf.get(ListingThresholdKey).toInt).toString) +:
+    val scoped = Seq(
+      ListingThresholdKey ->
+        math.max(perBatchPaths, spark.conf.get(ListingThresholdKey).toInt).toString,
+      SQLConf.STATE_STORE_PROVIDER_CLASS.key ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") ++
       ForkFreeLocalFileSystem.confKeys
     val callerConf = spark.conf.getAll // the keys set, without defaults
     val caller = scoped.map { case (k, _) => k -> callerConf.get(k) }
@@ -479,21 +488,7 @@ object Pipeline {
     */
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Pipeline <cdcFeedDir> <workDir> [ideFeedDir] [reportDir]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // session state lives off-heap in RocksDB: the default in-memory
-      // HDFS-backed store holds every session's full state on the JVM
-      // heap, which is exactly what a 100 TB keyed-state stream cannot do
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val out = run(spark, Config(
       cdcFeedDir = args(0),
       ideFeedDir = args.lift(2),

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Measurement harness for the optimization rounds (guide §1: measure
@@ -28,22 +27,10 @@ object Profile {
       else SparkEntry.queries.keys.toSeq.sorted
     val reps = if (args.length > 2) args(2).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r22"))
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "16k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // per-stage metrics accumulated by a listener; keyed by stage id
     case class St(name: String, var wallMs: Long = 0, var runMs: Long = 0,
       var tasks: Int = 0, var shRead: Long = 0, var shWrite: Long = 0,
@@ -83,13 +70,7 @@ object Profile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    // neutral warmup (Bench's)
-    try {
-      spark.range(1000000).selectExpr("sum(id) as s", "count(distinct id % 7) as d")
-        .write.format("noop").mode("overwrite").save()
-      spark.read.parquet(s"$sfDir/nation.parquet")
-        .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    GraftSession.warmup(spark, sfDir)
     for (name <- names) {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))

@@ -1,24 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
+  * Runs on the session `Bench` times (`GraftSession`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Bench: AQE may coalesce shuffles inside cached plans (the
-      // iterative label-propagation frames are tiny)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // artifacts an older build left under java.io.tmpdir would be served
+    // as this build's answers: build every one from the code under test
+    StandingArtifacts.clear(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // focused mode (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): comma-separated
     // query names, for fast local iteration on a single oracle

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -69,7 +69,15 @@ class ForkFreeRawLocalFs(uri: URI, conf: Configuration)
   * files are written to a temp file and renamed into place.
   */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf))
+    extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf)) {
+
+  /** `FilterFs` sends the one-argument `open`, the one Spark's checkpoint
+    * reads use, straight to the raw filesystem: verify its `.crc` as the
+    * buffered `open` does.
+    */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object ForkFreeLocalFileSystem {
 

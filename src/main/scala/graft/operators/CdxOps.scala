@@ -234,11 +234,10 @@ object CdxOps {
   private[graft] def standingCdxIndex(
       spark: SparkSession, dir: String,
       archives: DataFrame,
-      rootPrefix: String = "/graft_cdx_",
+      family: String = "cdx",
       indexer: (String, Array[Byte]) => Seq[CdxRow] = cdxRecordsGz): String = {
     import spark.implicits._
-    val root = sys.props("java.io.tmpdir") +
-      rootPrefix + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root(family, dir)
     val fp = f"${archives.agg(coalesce(bit_xor(xxhash64(col("group_id"), col("warc"))),
       lit(0L))).head().getLong(0)}%016x"
     val rootPath = new org.apache.hadoop.fs.Path(root)
@@ -258,10 +257,7 @@ object CdxOps {
             "digest", "offset", "length", "filename")
           .write.mode("overwrite").parquet(indexDir)
       }
-    idxFs.listStatus(rootPath).map(_.getPath)
-      .filter(p => p.getName.matches("cdx-[0-9a-f]{16}") &&
-        p.getName != s"cdx-$fp")
-      .foreach(p => idxFs.delete(p, true))
+    graft.StandingArtifacts.sweep(idxFs, rootPath, fp, "cdx")
     indexDir
   }
 
@@ -349,7 +345,7 @@ object CdxOps {
     import spark.implicits._
     val archives = WarcOps.syntheticWarcZstDict(Tables.documents(spark, dir))
     val indexDir = standingCdxIndex(spark, dir, archives,
-      "/graft_cdxz_", cdxRecordsZst)
+      "cdxz", cdxRecordsZst)
     val extents = spark.read.parquet(indexDir)
       .groupBy(col("group_id"))
       .agg(expr("array_sort(collect_list(struct(offset, length)))").as("exts"))

@@ -1078,8 +1078,7 @@ object SimilarityOps {
     */
   def q38AnnIvfIndexed(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_ivf_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("ivf", dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     // two filesystems on purpose: the corpus may be remote (hdfs/s3)
     // while the index cache root is local-tmp — resolving both paths
@@ -1095,14 +1094,7 @@ object SimilarityOps {
         buildIvfIndex(c, indexDir, ifAbsentOnly = true)
       }
     else graft.BenchPhases.reused("index_build")
-    // sweep SUPERSEDED GENERATIONS only — the exact `ivf-<16 hex>` shape.
-    // A looser prefix match would also catch a concurrent same-fingerprint
-    // builder's in-flight `ivf-<fp>.tmp-<uuid>` dir and kill its write
-    // mid-flight, breaking the benign-race contract
-    if (idxFs.exists(rootPath))
-      idxFs.listStatus(rootPath).map(_.getPath)
-        .filter(p => p.getName.matches("ivf-[0-9a-f]{16}") && p.getName != s"ivf-$fp")
-        .foreach(p => idxFs.delete(p, true))
+    graft.StandingArtifacts.sweep(idxFs, rootPath, fp, "ivf")
     val q = queriesOf(c)
     // ONE centroid load shared by both standing-index legs; the
     // exhaustive leg (nprobe = K) needs no cid-pruning collect at all
@@ -1175,8 +1167,7 @@ object SimilarityOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
     val corpusFs = corpusPath.getFileSystem(hconf)
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_ivf_lsm_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("ivf_lsm", dir)
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val idxFs = rootPath.getFileSystem(hconf)
     val fp = corpusFingerprint(corpusFs, corpusPath)
@@ -1503,8 +1494,7 @@ object SimilarityOps {
     */
   def q127AnnGraph(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_graph_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("graph", dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
     val fp = corpusFingerprint(corpusPath.getFileSystem(hconf), corpusPath)
@@ -1525,10 +1515,7 @@ object SimilarityOps {
         buildGraphIndex(c, twinDir, ifAbsentOnly = true)
       }
     else graft.BenchPhases.reused("graph_twin_build")
-    idxFs.listStatus(rootPath).map(_.getPath)
-      .filter(p => (p.getName.matches("graph-[0-9a-f]{16}") && p.getName != s"graph-$fp") ||
-        (p.getName.matches("twin-[0-9a-f]{16}") && p.getName != s"twin-$fp"))
-      .foreach(p => idxFs.delete(p, true))
+    graft.StandingArtifacts.sweep(idxFs, rootPath, fp, "graph", "twin")
     val q = queriesOf(c)
     val cNv = normalized(c, "v", "nv").select(col("vec_id"), col("nv")).persist()
     try {
@@ -1792,8 +1779,7 @@ object SimilarityOps {
     */
   def q68IvfSq8(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_ivfq_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("ivfq", dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
     val corpusFs = corpusPath.getFileSystem(hconf)
@@ -1806,10 +1792,7 @@ object SimilarityOps {
         buildIvfIndex(c, indexDir, ifAbsentOnly = true, quantize = true)
       }
     else graft.BenchPhases.reused("index_build")
-    if (idxFs.exists(rootPath))
-      idxFs.listStatus(rootPath).map(_.getPath)
-        .filter(p => p.getName.matches("ivfq-[0-9a-f]{16}") && p.getName != s"ivfq-$fp")
-        .foreach(p => idxFs.delete(p, true))
+    graft.StandingArtifacts.sweep(idxFs, rootPath, fp, "ivfq")
     annTopKIvfIndexedQuantized(spark, indexDir, queriesOf(c), 10, nprobe = 16)
       .orderBy(col("query_id"), col("rank"))
   }
@@ -2178,8 +2161,7 @@ object SimilarityOps {
     */
   def q120IvfPqIndexed(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_ivfpq_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("ivfpq", dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
     val corpusFs = corpusPath.getFileSystem(hconf)
@@ -2194,10 +2176,7 @@ object SimilarityOps {
       // recorded with the build (once per index state, not per probe rep)
       graft.BenchPhases.add("pq_bytes_per_vec", 8.0)
     } else graft.BenchPhases.reused("index_build")
-    if (idxFs.exists(rootPath))
-      idxFs.listStatus(rootPath).map(_.getPath)
-        .filter(p => p.getName.matches("ivfpq-[0-9a-f]{16}") && p.getName != s"ivfpq-$fp")
-        .foreach(p => idxFs.delete(p, true))
+    graft.StandingArtifacts.sweep(idxFs, rootPath, fp, "ivfpq")
     val q = queriesOf(c)
     // ONE load of the standing index's centroids + codebooks shared by
     // the pruned and exhaustive legs (r22 driver-job fusion — was two

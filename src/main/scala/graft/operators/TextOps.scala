@@ -538,8 +538,7 @@ object TextOps {
     val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
     val corpusFs = corpusPath.getFileSystem(hconf)
     val fp = SimilarityOps.corpusFingerprint(corpusFs, corpusPath)
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_spans_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("spans", dir)
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(hconf)
     val fin = new org.apache.hadoop.fs.Path(s"$root/$family-$fp")
@@ -567,13 +566,7 @@ object TextOps {
         }
       } finally { out.unpersist(); () }
     }
-    // sweep superseded generations — exact `<family>-<16 hex>` names only,
-    // so a concurrent same-fingerprint builder's tmp dir is never killed
-    if (fs.exists(rootPath))
-      fs.listStatus(rootPath).map(_.getPath)
-        .filter(p => p.getName.matches(s"$family-[0-9a-f]{16}") &&
-          p.getName != s"$family-$fp")
-        .foreach(p => fs.delete(p, true))
+    graft.StandingArtifacts.sweep(fs, rootPath, fp, family)
     spark.read.parquet(fin.toString)
   }
 
@@ -834,7 +827,8 @@ object TextOps {
     * counts once), which is what makes it document frequency.
     *
     * Deliberately expressed in PURE SQL through the `bounded_top_k`
-    * native aggregate that `GraftExtensions` registers — the SQL surface
+    * native aggregate that `GraftExtensions` registers at session build
+    * (`spark.sql.extensions`, set by `GraftSession`) — the SQL surface
     * is driver-correctness-visible here, not just spec-covered. Ties at
     * the rank boundary are broken by the shingle string inside the
     * struct key (ASCII corpus: Spark's binary UTF8 order == DuckDB's).
@@ -846,7 +840,6 @@ object TextOps {
     * sort of the n-gram space.
     */
   def q59FrequentNgrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.install(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("documents_q59")
     spark.sql(
       """WITH docs AS (

@@ -170,8 +170,7 @@ object UnigramOps {
     val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
     val fp = SimilarityOps.corpusFingerprint(
       corpusPath.getFileSystem(hconf), corpusPath)
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_unigram_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("unigram", dir)
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(hconf)
     val fin = new org.apache.hadoop.fs.Path(s"$root/model-$fp")
@@ -189,11 +188,7 @@ object UnigramOps {
         else throw new java.io.IOException(s"model publish failed: $tmp -> $fin")
       }
     }
-    if (fs.exists(rootPath))
-      fs.listStatus(rootPath).map(_.getPath)
-        .filter(p => p.getName.matches("model-[0-9a-f]{16}") &&
-          p.getName != s"model-$fp")
-        .foreach(p => fs.delete(p, true))
+    graft.StandingArtifacts.sweep(fs, rootPath, fp, "model")
     fin.toString
   }
 

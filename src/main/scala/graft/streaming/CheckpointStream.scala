@@ -143,12 +143,12 @@ object CheckpointStream {
     * produced by the batch's events followed by the session's full
     * post-merge state.
     *
-    * Bounded-state variant (`idleTtlMs > 0`, run under
-    * `GroupStateTimeout.EventTimeTimeout`): a session idle past the TTL in
-    * EVENT time (watermark-driven, so a stalled feed evicts nothing) is
-    * dropped from the state store — its truth is not lost, because every
-    * state change was flattened and upserted to the sink in the batch that
-    * made it. On a later event for an absent key, `reload` reconstructs the
+    * State is bounded (run under `GroupStateTimeout.EventTimeTimeout`): a
+    * session idle past the TTL in EVENT time (watermark-driven, so a
+    * stalled feed evicts nothing) is dropped from the state store — its
+    * truth is not lost, because every state change was flattened and
+    * upserted to the sink in the batch that made it. On a later event for
+    * an absent key, `reload` reconstructs the
     * state from the sink (see `reloadSessionFromSink`): same content map,
     * same sequence number, so folding — and the diff stream — continue
     * exactly as if the state had never been evicted. This is the reference's
@@ -165,32 +165,22 @@ object CheckpointStream {
       state.remove()
       Iterator.empty
     } else {
-      val st0 = state.getOption
-        .orElse(if (idleTtlMs > 0L) reload(userId) else None)
+      val st0 = state.getOption.orElse(reload(userId))
         .getOrElse(SessionState.empty(userId.toString))
       val ordered = events.toVector.sortBy(e => (e.ts_us, e.event_id))
       val (st1, diffs) = foldEvents(userId, st0, ordered)
       state.update(st1)
-      if (idleTtlMs > 0L) {
-        // timeout fires when the WATERMARK passes last-event + TTL; clamp to
-        // watermark+1 because Spark rejects a timeout at or below the
-        // current watermark (a key fed only late data would otherwise throw)
-        val lastEventMs =
-          if (ordered.nonEmpty) ordered.iterator.map(_.ts_us).max / 1000L
-          else state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-          math.max(lastEventMs + idleTtlMs, state.getCurrentWatermarkMs() + 1L))
-      }
+      // timeout fires when the WATERMARK passes last-event + TTL; clamp to
+      // watermark+1 because Spark rejects a timeout at or below the
+      // current watermark (a key fed only late data would otherwise throw)
+      val lastEventMs =
+        if (ordered.nonEmpty) ordered.iterator.map(_.ts_us).max / 1000L
+        else state.getCurrentWatermarkMs()
+      state.setTimeoutTimestamp(
+        math.max(lastEventMs + idleTtlMs, state.getCurrentWatermarkMs() + 1L))
       if (ordered.isEmpty) Iterator.empty else diffs.iterator ++ flatten(userId, st1)
     }
   }
-
-  /** Unbounded-state form (NoTimeout escape hatch and the historical API). */
-  def sessionStateFunc(
-      userId: Long,
-      events: Iterator[EventRow],
-      state: GroupState[SessionState]): Iterator[StreamOut] =
-    statefulSessionFunc(_ => None, 0L)(userId, events, state)
 
   /** Reconstruct an evicted session's `SessionState` from the upsert sink —
     * the revival half of idle eviction. Runs INSIDE the state function on an
@@ -852,9 +842,7 @@ object CheckpointStream {
     *
     * `idleTtl` bounds the state store: a session idle past the TTL in event
     * time is evicted and transparently reloaded from the sink on its next
-    * event (`statefulSessionFunc` / `reloadSessionFromSink`). `None` is the
-    * unbounded NoTimeout escape hatch — no watermark exists on that path,
-    * so no input row is ever dropped for lateness.
+    * event (`statefulSessionFunc` / `reloadSessionFromSink`).
     *
     * LATE-ROW CONTRACT under eviction: `FlatMapGroupsWithStateExec` under
     * EventTimeTimeout carries a late-row filter that would drop input rows
@@ -865,8 +853,8 @@ object CheckpointStream {
     * EventRow fields). Verified empirically on Spark 4.1.2: a micro-batch
     * whose watermark stood at +30min admitted and folded a +20min event
     * (StreamingEvictionSpec's out-of-order tests). So TODAY no input row
-    * is ever dropped for lateness on either path, and the engine's
-    * skip-if-stale (D3) remains the sole late-data semantic — but that is
+    * is ever dropped for lateness, and the engine's skip-if-stale (D3)
+    * remains the sole late-data semantic — but that is
     * an optimizer artifact, not a Spark contract. Defense-in-depth for the
     * day the column survives pruning: the allowance DEFAULTS TO THE IDLE
     * TTL, so even an engaged filter would discard only events more than a
@@ -892,7 +880,7 @@ object CheckpointStream {
       availableNow: Boolean = true,
       diffDir: Option[String] = None,
       schemaHint: Option[StructType] = None,
-      idleTtl: Option[Duration] = Some(Duration.ofDays(30)),
+      idleTtl: Duration = Duration.ofDays(30),
       watermarkDelay: Option[String] = None,
       sourceFormat: String = "parquet"): StreamingQuery = {
     import spark.implicits._
@@ -905,29 +893,21 @@ object CheckpointStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .format(sourceFormat)
       .load(sourceDir)
-    val outs = idleTtl match {
-      case Some(ttl) =>
-        // broadcast, not captured: a captured conf is decoded again by every
-        // state-operator task, a broadcast once per executor
-        val hconf = spark.sparkContext.broadcast(
-          new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-        // allowance defaults to the TTL: see the late-row contract above
-        val delay = watermarkDelay.getOrElse(s"${ttl.toMillis} milliseconds")
-        normalizeFeed(raw)
-          .withColumn("event_time", timestamp_micros(col("ts_us")))
-          .withWatermark("event_time", delay)
-          .as[EventRow]
-          .groupByKey(_.user_id)
-          .flatMapGroupsWithState(
-            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-            statefulSessionFunc(
-              reloadSessionFromSink(sinkDir, SinkBuckets, hconf), ttl.toMillis))
-      case None =>
-        normalizeFeed(raw)
-          .groupByKey(_.user_id)
-          .flatMapGroupsWithState(
-            OutputMode.Append(), GroupStateTimeout.NoTimeout())(sessionStateFunc)
-    }
+    // broadcast, not captured: a captured conf is decoded again by every
+    // state-operator task, a broadcast once per executor
+    val hconf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    // allowance defaults to the TTL: see the late-row contract above
+    val delay = watermarkDelay.getOrElse(s"${idleTtl.toMillis} milliseconds")
+    val outs = normalizeFeed(raw)
+      .withColumn("event_time", timestamp_micros(col("ts_us")))
+      .withWatermark("event_time", delay)
+      .as[EventRow]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
+        statefulSessionFunc(
+          reloadSessionFromSink(sinkDir, SinkBuckets, hconf), idleTtl.toMillis))
     val writer = outs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -246,8 +246,7 @@ object StreamEmbedIndex {
       .filter(col("vec_id") % 5 === 0) // bounded all-pairs oracle cost
       .repartition(col("vec_id"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_embguard_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.StandingArtifacts.root("embguard", dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val corpusPath = new Path(s"$dir/embeddings.parquet")
     val corpusFs = corpusPath.getFileSystem(hconf)
@@ -279,10 +278,7 @@ object StreamEmbedIndex {
         else throw new java.io.IOException(s"guard state publish failed: $tmp")
       }
     }
-    if (fs.exists(rootPath))
-      fs.listStatus(rootPath).map(_.getPath)
-        .filter(p => p.getName.matches("guard-t25-[0-9a-f]{16}") && p.getName != s"guard-t25-$fp")
-        .foreach(p => fs.delete(p, true))
+    graft.StandingArtifacts.sweep(fs, rootPath, fp, "guard-t25")
     spark.read.parquet(s"$stateDir/flags")
       .select(col("vec_id"), col("dup_of"), col("cos"))
       .orderBy(col("vec_id"))

@@ -8,11 +8,8 @@ import graft.functions._
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkTestSession.spark
-    GraftExtensions.install(s)
-    s
-  }
+  // the factory session: the functions are installed at build
+  private lazy val spark: SparkSession = SparkTestSession.spark
 
   test("every native function resolves by SQL name and matches its Column API twin") {
     import spark.implicits._
@@ -116,12 +113,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("the spark.sql.extensions path registers the full surface via Spark's own hook") {
-    // `spark.sql.extensions` is a STATIC conf — it cannot take effect on a
-    // live SparkContext, so drive the exact hook BaseSessionStateBuilder
-    // drives at session build instead
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val added = org.apache.spark.sql.graft.RegistryBridge.registeredNames(ext)
+    // the session was built with `spark.sql.extensions`: every function
+    // its registry lists under GraftExtensions came through that hook
+    val added = spark.catalog.listFunctions().collect()
+      .filter(_.className == classOf[GraftExtensions].getName).map(_.name).toSet
     assert(added == Set("splitmix64", "simhash64", "dot_product", "minhash_signature",
       "rolling_hash", "winnow", "srp_buckets", "bounded_top_k", "count_histogram",
       "hll_sketch", "cms_sketch", "bloom_sketch"))

@@ -444,10 +444,17 @@ class PipelineSpec extends AnyFunSuite {
       .partition(_ == "fs.file.impl.disable.cache")
     def restored(set: Seq[(String, String)], unset: Seq[String]): Unit = {
       set.foreach { case (k, v) => assert(spark.conf.getOption(k).contains(v), k) }
-      unset.foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
+      // getOption would report a registered key's default
+      unset.foreach(k => assert(!spark.conf.getAll.contains(k), k))
     }
     spark.conf.set(cacheKey.head, "false")
     implKeys.foreach(spark.conf.unset)
+    // and the state-store provider: the run's queries use RocksDB whatever
+    // the caller set, and the caller gets its own value back
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val hdfsProvider =
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    spark.conf.set(providerKey, hdfsProvider)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = Pipeline.run(spark, Pipeline.Config(
@@ -456,7 +463,7 @@ class PipelineSpec extends AnyFunSuite {
         reportDir = None,
         workDir = s"$base/work"))
       assert(spark.conf.get(key) == callerValue)
-      restored(Seq(cacheKey.head -> "false"), implKeys)
+      restored(Seq(cacheKey.head -> "false", providerKey -> hdfsProvider), implKeys)
       assert(out.select("user_id").distinct().count() == perTrigger)
       // the listener bus is FIFO: once this job's start is seen, every
       // job the run started has been seen too
@@ -470,6 +477,8 @@ class PipelineSpec extends AnyFunSuite {
     val commits = new java.io.File(s"$base/work/ckpt_cdc/commits").listFiles
       .count(_.getName.forall(_.isDigit))
     assert(commits == 2, s"expected two micro-batches, got $commits")
+    val offsets = Files.readString(java.nio.file.Paths.get(s"$base/work/ckpt_cdc/offsets/0"))
+    assert(offsets.contains("RocksDBStateStoreProvider"), offsets)
     val buckets = new java.io.File(s"$base/work/sink_cdc").listFiles
       .count(_.getName.startsWith("bucket="))
     assert(buckets > 32, s"only $buckets sink buckets: the upsert read lists too few dirs")
@@ -483,6 +492,7 @@ class PipelineSpec extends AnyFunSuite {
     spark.conf.set(key, "40")
     callerImpls.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.conf.unset(cacheKey.head)
+    spark.conf.unset(providerKey)
     try {
       intercept[Exception] {
         Pipeline.run(spark, Pipeline.Config(
@@ -492,9 +502,10 @@ class PipelineSpec extends AnyFunSuite {
           workDir = s"$base/work_failed"))
       }
       assert(spark.conf.get(key) == "40")
-      restored(callerImpls, cacheKey)
+      restored(callerImpls, cacheKey :+ providerKey)
     } finally {
       spark.conf.set(key, callerValue)
+      spark.conf.unset(providerKey)
       ForkFreeLocalFileSystem.confKeys.foreach { case (k, _) => spark.conf.unset(k) }
     }
   }

@@ -137,9 +137,10 @@ class ForkFreeLocalFileSystemSpec extends AnyFunSuite {
     try { raf.seek(1000); raf.write(payload(1000) ^ 0x01) } finally raf.close()
     // read through the FileContext side (the FileSystem side's failure
     // report moves the bad file to a `bad_files` dir at its mount's root),
-    // with a buffer size: as in Hadoop's LocalFs, the one-argument
-    // `open` goes to the raw filesystem and verifies nothing
-    val in = fc.open(p, 4096)
-    try intercept[ChecksumException](in.readAllBytes()) finally in.close()
+    // with a buffer size and without: Spark's checkpoint reads use the
+    // one-argument `open`, which Hadoop's LocalFs sends to the raw
+    // filesystem unverified
+    for (in <- Seq(fc.open(p, 4096), fc.open(p)))
+      try intercept[ChecksumException](in.readAllBytes()) finally in.close()
   }
 }

@@ -58,7 +58,7 @@ class StreamingEvictionSpec extends AnyFunSuite {
     }
 
     val q = CheckpointStream.run(spark, s"$src/b*", s"$base/ckpt", sink,
-      idleTtl = Some(java.time.Duration.ofHours(1)))
+      idleTtl = java.time.Duration.ofHours(1))
     q.awaitTermination(120000L)
     assert(!q.isActive, "stream did not drain with AvailableNow")
 
@@ -126,7 +126,7 @@ class StreamingEvictionSpec extends AnyFunSuite {
       (dir +: dir.listFiles.toSeq).foreach(f => f.setLastModified(T0 + i * 60000L))
     }
     val q = CheckpointStream.run(spark, s"$src/b*", s"$base/ckpt", sink,
-      idleTtl = Some(java.time.Duration.ofHours(1)))
+      idleTtl = java.time.Duration.ofHours(1))
     q.awaitTermination(120000L)
     assert(!q.isActive, "stream did not drain with AvailableNow")
 
@@ -151,7 +151,7 @@ class StreamingEvictionSpec extends AnyFunSuite {
     // becomes the load-bearing guard and the late-row contract in
     // CheckpointStream.run must be re-derived.
     val q2 = CheckpointStream.run(spark, s"$src/b*", s"$base/ckpt2", s"$base/sink2",
-      idleTtl = Some(java.time.Duration.ofHours(1)), watermarkDelay = Some("0 seconds"))
+      idleTtl = java.time.Duration.ofHours(1), watermarkDelay = Some("0 seconds"))
     q2.awaitTermination(120000L)
     assert(!q2.isActive)
     assert(spark.read.parquet(s"$base/sink2")
