@@ -209,13 +209,7 @@ object Pipeline {
     val last = cfs.listStatus(commits).map(_.getPath.getName)
       .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
       .reduceOption(_ max _)
-    val sink = new org.apache.hadoop.fs.Path(diffDir)
-    if (last.isEmpty || !sink.getFileSystem(hconf).exists(sink)) return
-    // an existing-but-empty sink (every diff aged out on a previous run)
-    // must be a no-op, not an UNABLE_TO_INFER_SCHEMA crash
-    val hasData = sink.getFileSystem(hconf).listStatus(sink)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    if (!hasData) return
+    if (last.isEmpty || !CheckpointStream.hasBatches(hconf, diffDir)) return
     // newest event time via footer statistics: MAX(ts_us) answers from
     // row-group metadata under the V2 aggregate pushdown — the retention
     // anchor costs O(row-groups), not a sink scan (plan pinned in
@@ -555,9 +549,10 @@ object Pipeline {
       },
       embedFoldMinDeltas = sys.env.get("SPARK_GRAFT_EMB_FOLD_MIN").map(_.toInt)))
     println(s"[pipeline] enriched sessions: ${out.count()}")
+    val diffDir = s"${args(1)}/diffs_cdc"
     val diffCount =
-      try spark.read.parquet(s"${args(1)}/diffs_cdc").count()
-      catch { case _: Throwable => 0L }
+      if (!CheckpointStream.hasBatches(spark.sessionState.newHadoopConf(), diffDir)) 0L
+      else spark.read.parquet(diffDir).count()
     println(s"[pipeline] diff documents: $diffCount")
     spark.stop()
   }

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`),
+  * and a report of every undeclared cached frame a query leaves behind.
   * Runs on the session `Bench` times (`GraftSession`). */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -18,11 +19,15 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // from a cleared cache, so what is cached after it, it left behind
+      spark.catalog.clearCache()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      val left = CacheLifecycle.leftBehind(spark, name)
+      if (left > 0) System.err.println(s"[verify] $name left $left cached frames")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** End-to-end corpus curation — the composed pipeline a training-data team
   * actually runs before a corpus goes near a tokenizer, assembled from the
@@ -78,12 +80,9 @@ object CurateOps {
     val nonCanonical = DedupOps.dedupGroups(pairs)
       .filter(col("group_id") < col("doc_id"))
       .select(col("doc_id"))
-    // dedupGroups ran its propagation EAGERLY above and left its final
-    // label generation cached and fully materialized, so the pair set's
-    // pin has served its purpose. With an explicit pairCorpus the pin is
-    // the POINT (the shared standing pair set q20/q36/q45 read from one
-    // slot) and stays; a private quality-survivor pair set would only
-    // accumulate a dead session-lifetime cache entry per curate() call.
+    // dedupGroups ran its propagation EAGERLY above, so the pair set's
+    // pin has served its purpose. With an explicit pairCorpus it is the
+    // declared slot q20/q36/q45 share (CacheLifecycle) and stays.
     if (pairCorpus.isEmpty) { allPairs.unpersist(); () }
     val deduped = quality.join(nonCanonical, Seq("doc_id"), "left_anti")
     // 3. decontamination: keep only zero-overlap documents
@@ -169,61 +168,68 @@ object CurateOps {
     * in DECIMAL(38,0) (HUGEINT on the oracle side) so corpus-scale
     * counts cannot wrap.
     */
-  def q205ImportanceSample(spark: SparkSession, dir: String): DataFrame = {
+  def q205ImportanceSample(spark: SparkSession, dir: String): DataFrame =
+    importanceSampleWith(spark, dir)(_.localCheckpoint())
+
+  /** q205's lazy plan, handed to `finish` while its two pins live. */
+  private[graft] def importanceSampleWith[A](spark: SparkSession, dir: String)(
+      finish: DataFrame => A): A = {
     // narrow scan (r22): measured widen tax (see Tables widen-policy note)
     Tables.documentsNarrow(spark, dir).createOrReplaceTempView("documents_q205")
-    // the per-(doc, bucket) counts feed BOTH the weight fit and the
-    // scoring pass; materialize once instead of letting CTE inlining
-    // recompute the feature extraction twice
-    spark.sql(
-      """SELECT doc_id,
-        |  CAST(conv(substring(md5(f), 1, 3), 16, 10) AS BIGINT) AS b,
-        |  COUNT(*) AS c
-        |FROM (
-        |  SELECT doc_id, explode(CASE WHEN size(w) >= 2 THEN
-        |    transform(sequence(0, size(w) - 2),
-        |      i -> concat_ws(' ', element_at(w, i + 1), element_at(w, i + 2)))
-        |    ELSE CAST(array() AS array<string>) END) AS f
-        |  FROM (SELECT doc_id, split(lower(text), ' ') AS w
-        |        FROM documents_q205))
-        |GROUP BY doc_id, b""".stripMargin)
-      .persist()
-      .createOrReplaceTempView("dc_q205")
-    // per-doc scores also feed two consumers (the mean aggregate and
-    // the final projection) — materialize them too
-    val scored = spark.sql(
-      """WITH bc AS (SELECT b, SUM(c) AS cr,
-        |    SUM(CASE WHEN doc_id % 10 = 0 THEN c ELSE CAST(0 AS BIGINT) END)
-        |      AS ct
-        |  FROM dc_q205 GROUP BY b),
-        |tot AS (SELECT SUM(cr) AS r_tot, SUM(ct) AS t_tot FROM bc),
-        |wt AS (
-        |  SELECT bc.b,
-        |    CAST((CAST(bc.ct + 1 AS DECIMAL(38, 0))
-        |            * CAST(tot.r_tot + 4096 AS DECIMAL(38, 0)) * 10000)
-        |         div (CAST(bc.cr + 1 AS DECIMAL(38, 0))
-        |            * CAST(tot.t_tot + 4096 AS DECIMAL(38, 0)))
-        |      AS BIGINT) AS s
-        |  FROM bc CROSS JOIN tot)
-        |SELECT dc.doc_id, SUM(dc.c) AS n_features,
-        |  CAST(SUM(CAST(dc.c AS DECIMAL(38, 0)) * wt.s) AS BIGINT)
-        |    AS imp_score
-        |FROM dc_q205 dc JOIN wt ON dc.b = wt.b GROUP BY dc.doc_id"""
-        .stripMargin)
-      .persist()
-    // the final pass reuses the `scored` OBJECT on both consumers so
-    // cache reuse is by construction, not by plan matching
-    val agg = broadcast(scored.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("imp_score")).cast("decimal(38,0)").as("s_sum")))
-    Tables.documents(spark, dir).select(col("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .crossJoin(agg)
-      .select(col("doc_id"),
-        coalesce(col("n_features"), lit(0L)).as("n_features"),
-        coalesce(col("imp_score"), lit(0L)).as("imp_score"),
-        (coalesce(col("imp_score"), lit(0L)).cast("decimal(38,0)") *
-          col("n_docs") >= col("s_sum")).as("selected"))
-      .orderBy(col("doc_id"))
+    Using.Manager { use =>
+      // the per-(doc, bucket) counts feed BOTH the weight fit and the
+      // scoring pass; materialize once instead of letting CTE inlining
+      // recompute the feature extraction twice
+      use(spark.sql(
+        """SELECT doc_id,
+          |  CAST(conv(substring(md5(f), 1, 3), 16, 10) AS BIGINT) AS b,
+          |  COUNT(*) AS c
+          |FROM (
+          |  SELECT doc_id, explode(CASE WHEN size(w) >= 2 THEN
+          |    transform(sequence(0, size(w) - 2),
+          |      i -> concat_ws(' ', element_at(w, i + 1), element_at(w, i + 2)))
+          |    ELSE CAST(array() AS array<string>) END) AS f
+          |  FROM (SELECT doc_id, split(lower(text), ' ') AS w
+          |        FROM documents_q205))
+          |GROUP BY doc_id, b""".stripMargin)
+        .persist())
+        .createOrReplaceTempView("dc_q205")
+      // per-doc scores also feed two consumers (the mean aggregate and
+      // the final projection) — materialize them too
+      val scored = use(spark.sql(
+        """WITH bc AS (SELECT b, SUM(c) AS cr,
+          |    SUM(CASE WHEN doc_id % 10 = 0 THEN c ELSE CAST(0 AS BIGINT) END)
+          |      AS ct
+          |  FROM dc_q205 GROUP BY b),
+          |tot AS (SELECT SUM(cr) AS r_tot, SUM(ct) AS t_tot FROM bc),
+          |wt AS (
+          |  SELECT bc.b,
+          |    CAST((CAST(bc.ct + 1 AS DECIMAL(38, 0))
+          |            * CAST(tot.r_tot + 4096 AS DECIMAL(38, 0)) * 10000)
+          |         div (CAST(bc.cr + 1 AS DECIMAL(38, 0))
+          |            * CAST(tot.t_tot + 4096 AS DECIMAL(38, 0)))
+          |      AS BIGINT) AS s
+          |  FROM bc CROSS JOIN tot)
+          |SELECT dc.doc_id, SUM(dc.c) AS n_features,
+          |  CAST(SUM(CAST(dc.c AS DECIMAL(38, 0)) * wt.s) AS BIGINT)
+          |    AS imp_score
+          |FROM dc_q205 dc JOIN wt ON dc.b = wt.b GROUP BY dc.doc_id"""
+          .stripMargin)
+        .persist())
+      // the final pass reuses the `scored` OBJECT on both consumers so
+      // cache reuse is by construction, not by plan matching
+      val agg = broadcast(scored.agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("imp_score")).cast("decimal(38,0)").as("s_sum")))
+      finish(Tables.documents(spark, dir).select(col("doc_id"))
+        .join(scored, Seq("doc_id"), "left")
+        .crossJoin(agg)
+        .select(col("doc_id"),
+          coalesce(col("n_features"), lit(0L)).as("n_features"),
+          coalesce(col("imp_score"), lit(0L)).as("imp_score"),
+          (coalesce(col("imp_score"), lit(0L)).cast("decimal(38,0)") *
+            col("n_docs") >= col("s_sum")).as("selected"))
+        .orderBy(col("doc_id")))
+    }.get
   }
 }

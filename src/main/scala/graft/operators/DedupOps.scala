@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Deduplication operators for large-scale training-data pipelines: exact
   * content-hash dedup, MinHash-LSH near-dup (banded — candidate generation
@@ -345,42 +347,43 @@ object DedupOps {
     // pairs plan is executed once per branch when the edge list first
     // materializes. Callers with an expensive pair pipeline (LSH) should
     // pass a persisted DataFrame — see q36DedupGroups.
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val symmetrized = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).persist()
-    var cached = labels // the persisted generation backing `labels`
-    var converged = false
-    while (!converged) {
-      val prop = edges.join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("label")).as("neighbor_min"))
-      // inner join: every node is an edge src by construction (the edge
-      // list is symmetrized), so prop covers every node. The previous
-      // label rides along so convergence is a FILTER over the cached
-      // result — not a join back against the old generation.
-      val next = labels.join(prop, labels("node") === prop("src"))
-        .select(col("node"), col("label").as("old_label"),
-          least(col("label"), col("neighbor_min")).as("label"))
-        .persist()
-      // count(), not isEmpty: isEmpty is a take(1) that stops at the
-      // first changed partition, leaving the rest of `next` UNCACHED when
-      // the previous generation is dropped below — count materializes
-      // every partition so the cache actually cuts the lineage
-      converged = next.filter(col("label") =!= col("old_label")).count() == 0L
-      cached.unpersist()
-      cached = next
-      labels = next.select(col("node"), col("label"))
+    // the edge list is pinned for the loop only; the final generation
+    // stays cached, so the caller's action reads it without replaying the
+    // iteration lineage (memoized below, so repeated runs reuse it)
+    val finalGen = Using.resource(symmetrized.persist()) { edges =>
+      var labels = edges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")).persist()
+      var cached = labels // the persisted generation backing `labels`
+      var converged = false
+      while (!converged) {
+        val prop = edges.join(labels, edges("dst") === labels("node"))
+          .groupBy(col("src")).agg(min(col("label")).as("neighbor_min"))
+        // inner join: every node is an edge src by construction (the edge
+        // list is symmetrized), so prop covers every node. The previous
+        // label rides along so convergence is a FILTER over the cached
+        // result — not a join back against the old generation.
+        val next = labels.join(prop, labels("node") === prop("src"))
+          .select(col("node"), col("label").as("old_label"),
+            least(col("label"), col("neighbor_min")).as("label"))
+          .persist()
+        // count(), not isEmpty: isEmpty is a take(1) that stops at the
+        // first changed partition, leaving the rest of `next` UNCACHED when
+        // the previous generation is dropped below — count materializes
+        // every partition so the cache actually cuts the lineage
+        converged = next.filter(col("label") =!= col("old_label")).count() == 0L
+        cached.unpersist()
+        cached = next
+        labels = next.select(col("node"), col("label"))
+      }
+      cached
     }
-    // the final generation stays cached: the caller's action reads it
-    // without replaying the iteration lineage (cache slots are plan-keyed,
-    // so repeated runs reuse rather than accumulate)
-    edges.unpersist()
-    val out = labels.select(col("node").as("doc_id"), col("label").as("group_id"))
+    val out = finalGen.select(col("node").as("doc_id"), col("label").as("group_id"))
       .orderBy(col("doc_id"))
     // remember the resolution for repeat calls; entries whose backing
     // cache was evicted are pruned here, bounding the memo to live plans
-    groupsMemo.updateAndGet(m => (inputPlan, cached, out) ::
+    groupsMemo.updateAndGet(m => (inputPlan, finalGen, out) ::
       m.filter(_._2.storageLevel !=
         org.apache.spark.storage.StorageLevel.NONE))
     out
@@ -426,35 +429,37 @@ object DedupOps {
     *
     * Scale shape (100 TB): one native per-row vote fold, one df-bounded
     * chunk equi-join (256 buckets × 4 chunk slots), one pair distinct,
-    * one count — never all-pairs. The fingerprint frame is persisted: it
+    * one count — never all-pairs. The fingerprint frame is pinned: it
     * feeds the output AND both join sides.
     */
   def q21Simhash(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.documentsNarrow(spark, dir) // narrow: the next line widens
+    val fingerprints = Tables.documentsNarrow(spark, dir) // narrow: the next line widens
       .repartition(col("doc_id")) // spread the md5 CPU off a single file
       .select(col("doc_id"), shingles(col("text")).as("sh"))
       .filter(size(col("sh")) > 0) // zero shingles: no features, no claim
       .select(col("doc_id"),
         size(col("sh")).cast("long").as("n_features"),
         graft.functions.Md5SimHash(col("sh")).as("simhash32"))
-      .persist()
-    val chunked = fp
-      .select(col("doc_id"), col("simhash32"),
-        explode(sequence(lit(0), lit(3))).as("ci"))
-      .select(col("doc_id"), col("simhash32"),
-        struct(col("ci"), expr("shiftright(simhash32, ci * 8) & 255")).as("chunk"))
-    val near = chunked.as("a")
-      .join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("nbr"),
-        bit_count(col("a.simhash32").bitwiseXOR(col("b.simhash32"))).as("hamming"))
-      .filter(col("hamming") <= 3)
-      .select(col("doc_id"), col("nbr")).distinct()
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_near"))
-    fp.join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_features"), col("simhash32"),
-        coalesce(col("n_near"), lit(0L)).as("n_near"))
-      .orderBy(col("doc_id"))
+    Using.resource(fingerprints.persist()) { fp =>
+      val chunked = fp
+        .select(col("doc_id"), col("simhash32"),
+          explode(sequence(lit(0), lit(3))).as("ci"))
+        .select(col("doc_id"), col("simhash32"),
+          struct(col("ci"), expr("shiftright(simhash32, ci * 8) & 255")).as("chunk"))
+      val near = chunked.as("a")
+        .join(chunked.as("b"),
+          col("a.chunk") === col("b.chunk") && col("a.doc_id") =!= col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("nbr"),
+          bit_count(col("a.simhash32").bitwiseXOR(col("b.simhash32"))).as("hamming"))
+        .filter(col("hamming") <= 3)
+        .select(col("doc_id"), col("nbr")).distinct()
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_near"))
+      fp.join(near, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_features"), col("simhash32"),
+          coalesce(col("n_near"), lit(0L)).as("n_near"))
+        .orderBy(col("doc_id"))
+        .localCheckpoint()
+    }
   }
 
   /** Hamming near-dup candidates over SimHash fingerprints, banded into 4
@@ -553,14 +558,12 @@ object DedupOps {
     // sizing count, the Bloom aggregate, and the phase-2 confirm join —
     // unpinned, each ran the eval scan + shingle + distinct pipeline
     // again. Eval sets are benchmark-sized, so the pin is bounded; the
-    // (train-doc-sized) result materializes before the finally releases
-    // it, exactly the streaming callers' persist-once discipline.
-    val evalSh = evalShingles(evalSet, n).persist()
-    try
+    // (train-doc-sized) result is checkpointed before its release.
+    Using.resource(evalShingles(evalSet, n).persist()) { evalSh =>
       decontaminateBloomPrimed(train, evalSh,
         buildShingleBloom(evalSh, bitsPerItem), n)
         .localCheckpoint()
-    finally { evalSh.unpersist(); () }
+    }
   }
 
   /** The distinct eval-shingle set — shared by the broadcast and Bloom

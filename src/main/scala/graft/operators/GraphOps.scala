@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Iterative graph computation on DataFrames: PageRank in EXACT INTEGER
   * fixed-point, the companion to the label-propagation components engine
@@ -39,12 +41,12 @@ object GraphOps {
     // O(nodes) ⋈ O(nodes) join per iteration — not to the edge frame,
     // whose degree-join would cost one more full O(edges) shuffle at
     // build time (measured ~2 s of q99's cost before this shape).
-    val parted = edges.repartition(col("src")).persist()
-    // degrees persist too (r21): the contrib join reads them EVERY
-    // iteration — unpinned, each iteration re-aggregated the whole
-    // cached edge list (iterations × one O(edges) scan + hash agg)
-    val deg = parted.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist()
-    try {
+    Using.Manager { use =>
+      val parted = use(edges.repartition(col("src")).persist())
+      // degrees persist too (r21): the contrib join reads them EVERY
+      // iteration — unpinned, each iteration re-aggregated the whole
+      // cached edge list (iterations × one O(edges) scan + hash agg)
+      val deg = use(parted.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist())
       var ranks = deg.select(col("src").as("node"), lit(Scale).as("r"))
       for (_ <- 1 to iterations) {
         val contrib = ranks.join(deg, col("node") === deg("src"))
@@ -59,7 +61,7 @@ object GraphOps {
       // materialize before releasing the shared edge frame: callers get a
       // plain result, not a plan over an unpersisted dependency
       ranks.localCheckpoint(eager = true)
-    } finally { parted.unpersist(); deg.unpersist(); () }
+    }.get
   }
 
   /** q104: item–item co-occurrence similarity — the collaborative-
@@ -187,30 +189,28 @@ object GraphOps {
     */
   def q117Triangles(spark: SparkSession, dir: String): DataFrame = {
     // pin the co-occurrence result: the max aggregate and the edge filter
-    // both read it (pair-sized); triangleStats materializes its output
-    // eagerly, so the release below never exposes lazy lineage
-    val co = coOccurrence(
+    // both read it (pair-sized); triangleStats checkpoints its output
+    Using.resource(coOccurrence(
       Tables.orders(spark, dir)
         .join(Tables.lineitem(spark, dir),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("s")),
       minShared = 3)
-      .persist()
-    try {
+      .persist()) { co =>
       val mx = co.agg(max(col("n_shared")).as("mx"))
       val edges = co.join(broadcast(mx))
         .where(col("n_shared") * 5 >= col("mx") * 4)
         .select(col("s_a"), col("s_b"))
       triangleStats(edges)
-    } finally { co.unpersist(); () }
+    }
   }
 
   /** Core of q117 over any undirected edge list (s_a < s_b, distinct). */
-  private[graft] def triangleStats(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("s_a").as("s"))
+  private[graft] def triangleStats(edges: DataFrame): DataFrame = Using.Manager { use =>
+    val deg = use(edges.select(col("s_a").as("s"))
       .unionByName(edges.select(col("s_b").as("s")))
       .groupBy(col("s")).agg(count(lit(1)).as("deg"))
-      .persist()
+      .persist())
     val withDeg = edges
       .join(deg.select(col("s").as("s_a"), col("deg").as("da")), Seq("s_a"))
       .join(deg.select(col("s").as("s_b"), col("deg").as("db")), Seq("s_b"))
@@ -219,13 +219,11 @@ object GraphOps {
     // PERSISTED: the oriented edge list feeds THREE join sides (both
     // wedge legs + the closing probe) — without the pin the upstream
     // edge pipeline (for q117 the whole q104 co-occurrence self-join)
-    // executes once per side (measured 41.8 s vs 13.9 s at sf0.1);
-    // released in `finally` after the node-sized result materializes
-    // (the span-dedup cache discipline)
+    // executes once per side (measured 41.8 s vs 13.9 s at sf0.1)
     // r22 A/B: SHUFFLE_HASH hints on the wedge and closing joins
     // measured SLOWER (3.3 → 3.8 s isolated) — same finding as q104;
     // the planner's strategy mix stands.
-    val oriented = withDeg.select(
+    val oriented = use(withDeg.select(
       when(col("da") < col("db") ||
           (col("da") === col("db") && col("s_a") < col("s_b")),
         struct(col("s_a").as("u"), col("s_b").as("v"), col("db").as("dv")))
@@ -234,30 +232,26 @@ object GraphOps {
         .as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
       .repartition(col("u"))
-      .persist()
-    try {
-      val wedges = oriented.as("e1").join(oriented.as("e2"),
-        col("e1.u") === col("e2.u") &&
-          (col("e1.dv") < col("e2.dv") ||
-            (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v"))))
-        .select(col("e1.u").as("u"), col("e1.v").as("v"), col("e2.v").as("w"))
-      val tris = wedges
-        .join(oriented.select(col("u").as("v"), col("v").as("w")), Seq("v", "w"))
-        .select(col("u"), col("v"), col("w"))
-      val perNode = tris
-        .select(explode(array(col("u"), col("v"), col("w"))).as("s"))
-        .groupBy(col("s")).agg(count(lit(1)).as("n_tri"))
-      val out = deg.join(perNode, Seq("s"), "left")
-        .select(col("s"), col("deg"),
-          coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-        .withColumn("cc_fp",
-          when(col("deg") >= 2,
-            expr(s"(${Scale}L * 2 * n_tri) div (deg * (deg - 1))"))
-            .otherwise(lit(0L)))
-        .orderBy(col("s"))
-        .persist()
-      out.count() // materialize while the oriented edges are cached
-      out
-    } finally { oriented.unpersist(); deg.unpersist(); () }
-  }
+      .persist())
+    val wedges = oriented.as("e1").join(oriented.as("e2"),
+      col("e1.u") === col("e2.u") &&
+        (col("e1.dv") < col("e2.dv") ||
+          (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v"))))
+      .select(col("e1.u").as("u"), col("e1.v").as("v"), col("e2.v").as("w"))
+    val tris = wedges
+      .join(oriented.select(col("u").as("v"), col("v").as("w")), Seq("v", "w"))
+      .select(col("u"), col("v"), col("w"))
+    val perNode = tris
+      .select(explode(array(col("u"), col("v"), col("w"))).as("s"))
+      .groupBy(col("s")).agg(count(lit(1)).as("n_tri"))
+    deg.join(perNode, Seq("s"), "left")
+      .select(col("s"), col("deg"),
+        coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+      .withColumn("cc_fp",
+        when(col("deg") >= 2,
+          expr(s"(${Scale}L * 2 * n_tri) div (deg * (deg - 1))"))
+          .otherwise(lit(0L)))
+      .orderBy(col("s"))
+      .localCheckpoint() // materialize while the oriented edges are cached
+  }.get
 }

@@ -61,37 +61,16 @@ object PackOps {
       outCol: String,
       partitions: Int = 0): DataFrame = {
     require(orderCols.nonEmpty, "at least one order column required")
-    val p =
-      if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    // explicit partition count: AQE never coalesces a user-specified
-    // repartition, so spark_partition_id is stable across the two reads
-    // of this exchange
-    val ranged = df.repartitionByRange(p, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-    val vIdx = ranged.schema.fieldIndex(valueCol)
-    val outSchema = ranged.schema
-      .add(org.apache.spark.sql.types.StructField(
-        "__loc", org.apache.spark.sql.types.LongType, nullable = false))
-    // PERSISTED: `local` is consumed twice (the stream side of the final
+    // CHECKPOINTED: `local` is consumed twice (the stream side of the final
     // join and the offsets aggregate). Without a shared materialization the
     // two subplans each re-execute repartitionByRange, and correctness then
     // hangs on exchange reuse kicking in: if it is disabled (or
     // canonicalization fails), the two executions can sample different
     // range boundaries, so `__pid` diverges between `local` and `offsets`
-    // and the prefix sums are silently wrong. The cache pins ONE pid
-    // assignment for both readers (MEMORY_AND_DISK: eviction spills, never
-    // recomputes). The slot is plan-keyed, so repeated calls over the same
-    // input reuse it rather than accumulate.
-    val local = ranged.mapPartitions { it =>
-      var acc = 0L
-      it.map { r =>
-        val out = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
-        acc += (if (r.isNullAt(vIdx)) 0L else r.getLong(vIdx))
-        out
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema)).persist()
+    // and the prefix sums are silently wrong. The eager local checkpoint
+    // pins ONE pid assignment for both readers; a cache would not, as a
+    // lost cached block is recomputed from the lineage, sampling included.
+    val local = runningSum(df, orderCols, valueCol, partitions).localCheckpoint()
     // offsets: cumulative total of all partitions BEFORE mine. Empty range
     // partitions are simply absent from the totals — they contribute 0 and
     // no row reads their offset. O(partitions) rows, so the
@@ -105,6 +84,35 @@ object PackOps {
     local.join(broadcast(offsets), Seq("__pid"))
       .withColumn(outCol, col("__off") + col("__loc"))
       .drop("__pid", "__loc", "__off")
+  }
+
+  /** The lazy pass `exclusivePrefixSumBy` checkpoints: each row of the
+    * range-partitioned, sorted input gains its partition id (`__pid`) and
+    * the partition-local sum of `valueCol` before it (`__loc`).
+    */
+  private[graft] def runningSum(
+      df: DataFrame, orderCols: Seq[String], valueCol: String, partitions: Int): DataFrame = {
+    val p =
+      if (partitions > 0) partitions
+      else df.sparkSession.sessionState.conf.numShufflePartitions
+    // explicit partition count: AQE never coalesces a user-specified
+    // repartition, so spark_partition_id is stable across the two reads
+    // of this exchange
+    val ranged = df.repartitionByRange(p, orderCols.map(col): _*)
+      .sortWithinPartitions(orderCols.map(col): _*)
+      .withColumn("__pid", spark_partition_id())
+    val vIdx = ranged.schema.fieldIndex(valueCol)
+    val outSchema = ranged.schema
+      .add(org.apache.spark.sql.types.StructField(
+        "__loc", org.apache.spark.sql.types.LongType, nullable = false))
+    ranged.mapPartitions { it =>
+      var acc = 0L
+      it.map { r =>
+        val out = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
+        acc += (if (r.isNullAt(vIdx)) 0L else r.getLong(vIdx))
+        out
+      }
+    }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
   /** Concat-and-chunk packing: documents (doc_id, text) → one row per

@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Corpus-statistics operators for training-data curation: the n-gram
   * language-model familiarity score (the CCNet/KenLM perplexity-gate shape)
@@ -279,30 +281,33 @@ object SearchOps {
     * q113's integer BM25 + BoundedTopK.
     */
   def q116DecontaminateRetrieval(spark: SparkSession, dir: String): DataFrame =
+    q116With(spark, dir)(_.localCheckpoint())
+
+  /** q116 through `decontaminateByRetrieval`, the lazy plan to `finish`. */
+  private[graft] def q116With[A](spark: SparkSession, dir: String)(finish: DataFrame => A): A =
     decontaminateByRetrieval(spark, Tables.documents(spark, dir),
       Tables.documents(spark, dir).where(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("eval_id"), col("text")))
+        .select(col("doc_id").as("eval_id"), col("text")))(finish)
 
-  /** Core of q116. `minScoreFp` is the flagging threshold at Scale. */
-  private[graft] def decontaminateByRetrieval(
+  /** Core of q116. `minScoreFp` is the flagging threshold at Scale.
+    * `finish` gets the lazy result while the pins below live.
+    */
+  private[graft] def decontaminateByRetrieval[A](
       spark: SparkSession, docs: DataFrame, evalSet: DataFrame,
       k: Int = 3, maxQueryTerms: Int = 8,
       minScoreFp: Long = 8000000L,
-      vocabInlineMax: Int = 4096): DataFrame = {
+      vocabInlineMax: Int = 4096)(finish: DataFrame => A): A = Using.Manager { use =>
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     // distinct (eval_id, term) — the candidate query vocabulary. PINNED
     // (r22, guide §5): it feeds the vocab-probe collect, the rare-term
     // selection window, and (in the distributed regime) the broadcast
     // vocab join — each reference re-ran the eval scan + tokenize +
-    // distinct. Eval sets are benchmark-sized by contract, so the pin is
-    // bounded; it stays resident plan-keyed (the q20/q36 shared-slot
-    // discipline — Round15PlanSpec pins this query's plan shape, which a
-    // checkpoint barrier would hide).
-    val evalTerms = evalSet
+    // distinct. Eval sets are benchmark-sized, so the pin is bounded.
+    val evalTerms = use(evalSet
       .select(col("eval_id"), explode(words(col("text"))).as("term"))
       .distinct()
-      .persist()
+      .persist())
     // ONE corpus token scan feeds BOTH the df frame and the postings
     // (round-15 rework — q116 was the most expensive bench line because
     // df and postings each paid a full scan + full-token-stream
@@ -328,17 +333,14 @@ object SearchOps {
     // (one long + the matching occurrences, not the full token array) —
     // and both consumers read it; the distributed-vocab regime keeps the
     // two-pass shape (pinning full token arrays would dwarf the scan).
-    // The pin stays resident plan-keyed (warm-steady-state bench
-    // semantics; a checkpoint barrier would hide the plan the
-    // Round15PlanSpec single-scan pin inspects).
     val inlineToks =
       if (probe.length <= vocabInlineMax) {
         val inList = probe.sorted.map(sqlStringLit).mkString(", ")
-        Some(docs
+        Some(use(docs
           .select(col("doc_id"), words(col("text")).as("w"))
           .select(col("doc_id"), size(col("w")).cast("long").as("dl"),
             expr(s"filter(w, t -> t IN ($inList))").as("wf"))
-          .persist())
+          .persist()))
       } else None
     // eager materialization: the probe collect above ran under a LIMIT
     // (may leave the cache partially populated) and the downstream
@@ -390,7 +392,7 @@ object SearchOps {
       .groupBy(col("eval_id"), col("doc_id"))
       .agg(sum(col("contrib")).as("score_fp"))
     val key = struct(col("score_fp").as("score_fp"), (-col("doc_id")).as("neg_id"))
-    scored
+    finish(scored
       .groupBy(col("eval_id"))
       .agg(graft.functions.BoundedTopK(key, k).as("top"))
       .select(col("eval_id"), posexplode(col("top")))
@@ -400,8 +402,8 @@ object SearchOps {
         (-col("col.neg_id")).as("doc_id"),
         col("col.score_fp").as("score_fp"),
         (col("col.score_fp") >= minScoreFp).cast("int").as("flagged"))
-      .orderBy(col("eval_id"), col("rank"))
-  }
+      .orderBy(col("eval_id"), col("rank")))
+  }.get
 
   /** q113: BM25 retrieval (Robertson–Spärck-Jones) — the standard
     * production ranking function a decontamination-by-retrieval pipeline

@@ -1,10 +1,12 @@
 package graft.operators
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.Tables
 import graft.diff.DiffModel.CheckpointData
 import graft.state.SessionMerge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Session-merge operators: the stateful engine core (SURVEY §2.3 D2/D3/D11)
   * run as a distributed batch job over the event stream — the backfill (E2)
@@ -191,38 +193,36 @@ object SessionOps {
     // unpinned, each reference re-ran the event scan + sessionization
     // window + distinct. Baskets are distinct (session, type) rows —
     // orders of magnitude smaller than the event stream — and the
-    // (rule-count-sized) result materializes before the finally
-    // releases the pin.
-    val baskets = baskets0.persist()
-    try {
-    // eager materialization: all four consumers run inside one action
-    // and concurrent first reads would each recompute the pin
-    baskets.count()
-    val n = baskets.select(col("user_id"), col("session_no")).distinct()
-      .agg(count(lit(1)).as("n_baskets"))
-    val items = baskets.groupBy(col("t")).agg(count(lit(1)).as("n_item"))
-    val pairs = baskets.select(col("user_id"), col("session_no"), col("t").as("a"))
-      .join(baskets.select(col("user_id"), col("session_no"), col("t").as("b")),
-        Seq("user_id", "session_no"))
-      .where(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab"))
-    pairs
-      .join(items.select(col("t").as("a"), col("n_item").as("n_a")), Seq("a"))
-      .join(items.select(col("t").as("b"), col("n_item").as("n_b")), Seq("b"))
-      .join(broadcast(n))
-      .select(col("a"), col("b"), col("n_ab"),
-        expr("(1000000 * n_ab) div n_baskets").as("support_fp"),
-        expr("(1000000 * n_ab) div n_a").as("confidence_fp"),
-        // int64 headroom: n_ab ≤ n_baskets, so the numerator is bounded
-        // by 1e6 · n_baskets² — exact up to ~3.0e6 DISTINCT baskets
-        // (sqrt(2^63/1e6)). Baskets are (user, session) pairs, not rows,
-        // so 100 TB of events still sits under the bound for per-segment
-        // runs; past it, drop Scale to 1e3 (headroom ~9.6e7) or widen to
-        // decimal(38) — the q109 rescale discipline.
-        expr("(1000000 * n_ab * n_baskets) div (n_a * n_b)").as("lift_fp"))
-      .localCheckpoint()
-      .orderBy(col("a"), col("b"))
-    } finally { baskets.unpersist(); () }
+    // (rule-count-sized) result is checkpointed before its release.
+    Using.resource(baskets0.persist()) { baskets =>
+      // eager materialization: all four consumers run inside one action
+      // and concurrent first reads would each recompute the pin
+      baskets.count()
+      val n = baskets.select(col("user_id"), col("session_no")).distinct()
+        .agg(count(lit(1)).as("n_baskets"))
+      val items = baskets.groupBy(col("t")).agg(count(lit(1)).as("n_item"))
+      val pairs = baskets.select(col("user_id"), col("session_no"), col("t").as("a"))
+        .join(baskets.select(col("user_id"), col("session_no"), col("t").as("b")),
+          Seq("user_id", "session_no"))
+        .where(col("a") =!= col("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab"))
+      pairs
+        .join(items.select(col("t").as("a"), col("n_item").as("n_a")), Seq("a"))
+        .join(items.select(col("t").as("b"), col("n_item").as("n_b")), Seq("b"))
+        .join(broadcast(n))
+        .select(col("a"), col("b"), col("n_ab"),
+          expr("(1000000 * n_ab) div n_baskets").as("support_fp"),
+          expr("(1000000 * n_ab) div n_a").as("confidence_fp"),
+          // int64 headroom: n_ab ≤ n_baskets, so the numerator is bounded
+          // by 1e6 · n_baskets² — exact up to ~3.0e6 DISTINCT baskets
+          // (sqrt(2^63/1e6)). Baskets are (user, session) pairs, not rows,
+          // so 100 TB of events still sits under the bound for per-segment
+          // runs; past it, drop Scale to 1e3 (headroom ~9.6e7) or widen to
+          // decimal(38) — the q109 rescale discipline.
+          expr("(1000000 * n_ab * n_baskets) div (n_a * n_b)").as("lift_fp"))
+        .localCheckpoint()
+        .orderBy(col("a"), col("b"))
+    }
   }
 
   /** q110: sessionized path analysis — the most common 3-step event

@@ -1,9 +1,11 @@
 package graft.operators
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Similarity search over embedding columns: exact cosine top-k as the
   * baseline (broadcast the small query side — the only intentional
@@ -38,7 +40,7 @@ object SimilarityOps {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  private def corpus(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def corpus(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .repartition(col("vec_id")) // spread cosine/SRP compute over all cores
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -362,10 +364,10 @@ object SimilarityOps {
     // Persist it for the duration of the training loop only — at 100 TB
     // `trainSampleMod` bounds the pinned footprint to the O(100·K)
     // training sample, exactly the quantity the collects re-derive.
-    val nv = normalized(train, "v", "nv")
-      .select(col("vec_id"), col("nv")).persist()
-    try trainIvfCentroidsOnNv(nv, k, lloydIters)
-    finally { nv.unpersist(); () }
+    Using.resource(normalized(train, "v", "nv")
+      .select(col("vec_id"), col("nv")).persist()) {
+      trainIvfCentroidsOnNv(_, k, lloydIters)
+    }
   }
 
   /** Core Lloyd loop over an already-normalized (vec_id, nv) frame —
@@ -1004,8 +1006,8 @@ object SimilarityOps {
     // reference. The training sample filter commutes with the normalize
     // projection (row-local), so training on the filtered cached frame
     // is bit-identical to normalizing the filtered corpus.
-    val nvAll = normalized(c, "v", "nv").select(col("vec_id"), col("nv")).persist()
-    try {
+    Using.resource(normalized(c, "v", "nv")
+      .select(col("vec_id"), col("nv")).persist()) { nvAll =>
       val train = nvAll.filter(pmod(xxhash64(col("vec_id")), lit(4L)) === 0)
       val cents = trainIvfCentroidsOnNv(train, 16)
       val centsAlt = trainIvfCentroidsOnNv(train, 11)
@@ -1018,7 +1020,7 @@ object SimilarityOps {
         .select(col("query_id"), col("n_ivf"), col("n_exh"), col("n_agree"))
         .localCheckpoint() // materialize (query-count-sized) before release
         .orderBy(col("query_id"))
-    } finally { nvAll.unpersist(); () }
+    }
   }
 
   /** Content fingerprint of a corpus file/directory: every data file's
@@ -1317,15 +1319,14 @@ object SimilarityOps {
     * centroids — the property that lets the standing and in-query builds
     * agree bit-for-bit, which is what the q127 oracle pins.
     *
-    * Returns the PERSISTED edge list (src, dst); the caller releases it.
+    * Returns the edge list (src, dst), checkpointed.
     */
   def buildNeighborGraph(
       c: DataFrame, cents: Array[Array[Double]],
       nprobe: Int = 4, m: Int = 10): DataFrame = {
-    val inverted = normalized(c, "v", "nv")
+    Using.resource(normalized(c, "v", "nv")
       .select(col("vec_id"), col("nv"), bestCid(col("nv"), cents).as("cid"))
-      .persist()
-    try {
+      .persist()) { inverted =>
       val probes = ivfProbeList(cents,
         inverted.select(col("vec_id").as("query_id"), col("nv").as("qv")), nprobe)
       val cand = probes.join(inverted, Seq("cid"))
@@ -1348,14 +1349,12 @@ object SimilarityOps {
         .groupBy(col("src"), col("dst")).agg(max(col("cos")).as("cos"))
         .select(col("src"),
           struct(col("cos"), (-col("dst")).as("nd"), col("dst")).as("key"))
-      val edges = sym.groupBy(col("src"))
+      sym.groupBy(col("src"))
         .agg(graft.functions.BoundedTopK(col("key"), 2 * m).as("top"))
         .select(col("src"), explode(col("top")).as("k"))
         .select(col("src"), col("k.dst").as("dst"))
-        .persist()
-      edges.count()
-      edges
-    } finally { inverted.unpersist(); () }
+        .localCheckpoint()
+    }
   }
 
   /** Greedy BEAM probe of a neighbor graph: seed each query at its
@@ -1455,12 +1454,9 @@ object SimilarityOps {
     val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (ifAbsentOnly && fs.exists(fin)) return
     val cents = trainIvfCentroids(c, nClusters)
-    val edges = buildNeighborGraph(c, cents, nprobe, m)
     val tmp = new org.apache.hadoop.fs.Path(
       indexDir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      edges.write.parquet(s"${tmp.toString}/edges")
-    } finally { edges.unpersist(); () }
+    buildNeighborGraph(c, cents, nprobe, m).write.parquet(s"${tmp.toString}/edges")
     cents.zipWithIndex.toSeq
       .map { case (cv, cid) => (cid, cv.toSeq, cents.length, cv.length) }
       .toDF("cid", "c", "k", "dim")
@@ -1517,8 +1513,8 @@ object SimilarityOps {
     else graft.BenchPhases.reused("graph_twin_build")
     graft.StandingArtifacts.sweep(idxFs, rootPath, fp, "graph", "twin")
     val q = queriesOf(c)
-    val cNv = normalized(c, "v", "nv").select(col("vec_id"), col("nv")).persist()
-    try {
+    Using.resource(normalized(c, "v", "nv")
+      .select(col("vec_id"), col("nv")).persist()) { cNv =>
       // standing leg
       val centsStd = loadIvfCentroids(spark, indexDir)
       val invStd = cNv.select(col("vec_id"),
@@ -1546,7 +1542,7 @@ object SimilarityOps {
         .select(col("query_id"), col("n_graph"), col("n_std"), col("n_agree"))
         .orderBy(col("query_id"))
       out.localCheckpoint() // materialize before cNv releases
-    } finally { cNv.unpersist(); () }
+    }
   }
 
   /** SEMANTIC DEDUP (the SemDeDup shape, Abbas et al. 2023): cluster the
@@ -1573,16 +1569,21 @@ object SimilarityOps {
       .select(col("a.vec_id").as("vec_id")).distinct()
 
   /** Clustered assignment + keep-first verdicts + the exact parity leg.
-    * Returns (vec_id, cid, keep, exact_dup).
+    * Returns (vec_id, cid, keep, exact_dup), checkpointed.
     */
   def semanticDedup(
       c: DataFrame, threshold: Double = 0.4, nClusters: Int = 16,
-      trainSampleMod: Int = 1): DataFrame = {
+      trainSampleMod: Int = 1): DataFrame =
+    semanticDedupWith(c, threshold, nClusters, trainSampleMod)(_.localCheckpoint())
+
+  /** `semanticDedup`'s lazy verdicts, to `finish` while the corpus pin lives. */
+  private[graft] def semanticDedupWith[A](
+      c: DataFrame, threshold: Double, nClusters: Int,
+      trainSampleMod: Int)(finish: DataFrame => A): A = {
     val cents = trainIvfCentroids(c, nClusters, trainSampleMod = trainSampleMod)
-    val nv = normalized(c, "v", "nv")
+    Using.resource(normalized(c, "v", "nv")
       .select(col("vec_id"), col("nv"), bestCid(col("nv"), cents).as("cid"))
-      .persist()
-    try {
+      .persist()) { nv =>
       val dropped = semanticDedupPairs(nv, threshold)
         .withColumn("dropped", lit(true))
       // cluster-blind exact truth (the q23-class declared-exact baseline;
@@ -1596,16 +1597,13 @@ object SimilarityOps {
         .filter(dot(col("a.nv"), col("b.nv")) >= threshold)
         .select(col("a.vec_id").as("vec_id")).distinct()
         .withColumn("exact_dup", lit(true))
-      val out = nv.select(col("vec_id"), col("cid"))
+      finish(nv.select(col("vec_id"), col("cid"))
         .join(dropped, Seq("vec_id"), "left")
         .join(exact, Seq("vec_id"), "left")
         .select(col("vec_id"), col("cid"),
           coalesce(!col("dropped"), lit(true)).as("keep"),
-          coalesce(col("exact_dup"), lit(false)).as("exact_dup"))
-        .persist()
-      out.count()
-      out
-    } finally { nv.unpersist(); () }
+          coalesce(col("exact_dup"), lit(false)).as("exact_dup")))
+    }
   }
 
   /** q126: semantic dedup with the q32 parity-leg oracle treatment. The
@@ -2191,11 +2189,9 @@ object SimilarityOps {
     // in-query twin under the same deterministic training
     val cents = trainIvfCentroids(c, 16, trainSampleMod = 4)
     // the quantized corpus feeds the codebook-training collect, the
-    // posting encode, and the query slice — pinned for the life of this
-    // query so each rep quantizes the corpus ONCE, not three times
-    // (r22; released in the finally after the result materializes)
-    val qc = quantizeInt8(c, "v").persist()
-    try {
+    // posting encode, and the query slice — pinned so each rep quantizes
+    // the corpus ONCE, not three times (r22)
+    Using.resource(quantizeInt8(c, "v").persist()) { qc =>
       val cb = trainPqCodebooks(qc.select(col("vec_id"), col("qv")), 8, 16)
       val postings = pqEncode(
         normalized(qc, "v", "nv")
@@ -2211,9 +2207,9 @@ object SimilarityOps {
       val out = probeAgreement(exhIdx, exhLive, "n_exh", "n_live", "n_agree")
         .join(counts, Seq("query_id"))
         .select(col("query_id"), col("n_idx"), col("n_exh"), col("n_agree"))
-      // materialize (query-count-sized) before the finally releases qc
+      // materialize (query-count-sized) before qc is released
       out.localCheckpoint().orderBy(col("query_id"))
-    } finally { qc.unpersist(); () }
+    }
   }
 
   /** q115: IVF-PQ made correctness-visible (the q32/q38 parity-leg
@@ -2237,41 +2233,35 @@ object SimilarityOps {
     // the quantized corpus feeds the codebook-training collect, the
     // posting encode, and the query slice — pinned so each rep pays the
     // scan + quantize ONCE (r22; was re-run per reference)
-    val qc = quantizeInt8(c, "v").persist()
-    try {
+    Using.Manager { use =>
+      val qc = use(quantizeInt8(c, "v").persist())
       val m = 8
       val cb = trainPqCodebooks(qc.select(col("vec_id"), col("qv")), m, 16)
       // PERSIST the encoded postings: all three probe legs read one
       // materialization instead of re-running the encode projection (the
       // expensive half — 128 argmin subexpressions/row); the frame is the
-      // in-memory PQ index itself, m+1 longs per vector. Released in the
-      // finally once the (query-count-sized) result has materialized —
-      // each bench rep pays its own standalone cost (r22: the lingering
-      // persist doubled as a cross-rep warm cache, which belongs to the
-      // fingerprint-keyed index queries, not this in-query path).
-      val postings = pqEncode(
+      // in-memory PQ index itself, m+1 longs per vector.
+      val postings = use(pqEncode(
         normalized(qc, "v", "nv")
           .withColumn("cid", bestCid(col("nv"), cents)), cb)
         .select(col("vec_id"), col("cid"), col("codes"), col("rs2"))
-        .persist()
-      try {
-        // eager materialization: the three probe legs run inside one
-        // action and concurrent first reads would each re-encode
-        postings.count()
-        val qq = qc.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("query_id"), col("v").as("qv_raw"),
-            col("qv").as("qqv"), col("qs2").as("qs2q"))
-        val pruned = pqProbeLeg(postings, cents, cb, qq, 10, nprobe = 12, adcLeg = true)
-        val exhAdc = pqProbeLeg(postings, cents, cb, qq, 10, nprobe = 16, adcLeg = true)
-        val exhRec = pqProbeLeg(postings, cents, cb, qq, 10, nprobe = 16, adcLeg = false)
-        val counts = pruned.groupBy(col("query_id")).agg(count(lit(1)).as("n_pq"))
-        probeAgreement(exhAdc, exhRec, "n_adc", "n_rec", "n_agree")
-          .join(counts, Seq("query_id"))
-          .select(col("query_id"), col("n_pq"), col("n_adc"), col("n_agree"))
-          .localCheckpoint()
-          .orderBy(col("query_id"))
-      } finally { postings.unpersist(); () }
-    } finally { qc.unpersist(); () }
+        .persist())
+      // eager materialization: the three probe legs run inside one
+      // action and concurrent first reads would each re-encode
+      postings.count()
+      val qq = qc.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("query_id"), col("v").as("qv_raw"),
+          col("qv").as("qqv"), col("qs2").as("qs2q"))
+      val pruned = pqProbeLeg(postings, cents, cb, qq, 10, nprobe = 12, adcLeg = true)
+      val exhAdc = pqProbeLeg(postings, cents, cb, qq, 10, nprobe = 16, adcLeg = true)
+      val exhRec = pqProbeLeg(postings, cents, cb, qq, 10, nprobe = 16, adcLeg = false)
+      val counts = pruned.groupBy(col("query_id")).agg(count(lit(1)).as("n_pq"))
+      probeAgreement(exhAdc, exhRec, "n_adc", "n_rec", "n_agree")
+        .join(counts, Seq("query_id"))
+        .select(col("query_id"), col("n_pq"), col("n_adc"), col("n_agree"))
+        .localCheckpoint()
+        .orderBy(col("query_id"))
+    }.get
   }
 
   /** Deterministic integer hyperplane component for the PORTABLE SRP twin

@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Text-analysis operators for training-data pipelines: token/char
   * statistics and quality ratios (q19, oracle-checked), marker-based
@@ -145,7 +147,7 @@ object TextOps {
   /** Core of q108: learn `steps` merges from a (text) frame. */
   private[graft] def bpeTrain(
       spark: SparkSession, docs: DataFrame, steps: Int): DataFrame = {
-    val words = docs
+    Using.resource(docs
       .select(explode(
         expr(s"regexp_extract_all(lower(text), '$BpeTokenPattern', 0)")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -153,8 +155,7 @@ object TextOps {
         concat(lit(" "),
           concat_ws(" ", expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))")),
           lit(" ")))
-      .persist()
-    try {
+      .persist()) { words =>
       var states = words.select(col("freq"), col("s"))
       val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
       for (step <- 1 to steps) {
@@ -186,7 +187,7 @@ object TextOps {
       learned.toSeq.toDF("rank", "l_tok", "r_tok", "pair_count")
         .select(col("rank"), col("l_tok"), col("r_tok"), col("pair_count"))
         .orderBy(col("rank"))
-    } finally { words.unpersist(); () }
+    }
   }
 
   /** q37: within-document repetition — the top-bigram fraction quality
@@ -470,26 +471,15 @@ object TextOps {
     // PERSIST the exploded fingerprints: the frame feeds the df count AND
     // both self-join sides — without the cache the expensive half (the
     // per-row md5 winnow fold + explode) executes up to three times
-    // (exchange reuse covers only the two join sides). The pin is scoped
-    // to THIS call: the RESULT (pairs-sized, tiny vs the corpus-sized
-    // fingerprint frame) is persisted plan-keyed and eagerly materialized
-    // while fp is still cached, then the fingerprints are released in
-    // `finally` — the round-12 bench showed that leaving corpus-sized
-    // intermediates cached across a 111-query run evicts sibling caches
-    // and silently turns "warm" reps cold (q79 benched 21 s against a
-    // 3.4 s probe). The small persisted result is the standing
-    // "candidate pair set" a real span-dedup pipeline keeps (the
-    // q20/q36/q45 slot-sharing pattern — q74 and q79 read one
-    // materialization); an evicted entry recomputes the full (deterministic)
-    // lineage — slower, never wrong.
-    val fp = docs.repartition(col("doc_id"))
+    // (exchange reuse covers only the two join sides). Corpus-sized
+    // frames left cached across a 111-query run evict sibling caches
+    // (round 12: q79 benched 21 s against a 3.4 s probe); the standing
+    // pair set is the disk-backed `standingSpanArtifact`.
+    Using.resource(docs.repartition(col("doc_id"))
       .select(col("doc_id"), explode(md5WinnowFingerprint(col("text"), k, w)).as("fp"))
-      .persist()
-    try {
-      val out = spanCandidatesFrom(fp, dfCap, minShared).persist()
-      out.count() // materialize every partition while fp is cached
-      out
-    } finally { fp.unpersist(); () }
+      .persist()) {
+      spanCandidatesFrom(_, dfCap, minShared).localCheckpoint()
+    }
   }
 
   /** The LAZY candidate-pair plan over an (ideally persisted) exploded
@@ -552,19 +542,16 @@ object TextOps {
           .filter { case (p, mt) =>
             p.getName.startsWith(s"$family-$fp.tmp-") && mt < sweepBefore }
           .foreach { case (p, _) => fs.delete(p, true) }
-      val out = build // arrives persisted + materialized
       val tmp = new org.apache.hadoop.fs.Path(
         s"$root/$family-$fp.tmp-" + java.util.UUID.randomUUID().toString.take(8))
-      try {
-        out.write.parquet(tmp.toString)
-        if (!fs.rename(tmp, fin)) {
-          // benign race: a concurrent builder of the SAME corpus state
-          // published identical content first
-          if (fs.exists(fin)) { fs.delete(tmp, true); () }
-          else throw new java.io.IOException(
-            s"standing $family publish failed: $tmp -> $fin")
-        }
-      } finally { out.unpersist(); () }
+      build.write.parquet(tmp.toString) // arrives checkpointed
+      if (!fs.rename(tmp, fin)) {
+        // benign race: a concurrent builder of the SAME corpus state
+        // published identical content first
+        if (fs.exists(fin)) { fs.delete(tmp, true); () }
+        else throw new java.io.IOException(
+          s"standing $family publish failed: $tmp -> $fin")
+      }
     }
     graft.StandingArtifacts.sweep(fs, rootPath, fp, family)
     spark.read.parquet(fin.toString)
@@ -618,15 +605,15 @@ object TextOps {
       minShared: Long = 2L,
       minLen: Int = 20,
       gramDfCap: Long = 256L): DataFrame = {
-    // candidate pairs arrive persisted + materialized (inside
-    // spanCandidates) — no second pin needed for the three reads below
+    // candidate pairs arrive checkpointed (inside spanCandidates) — no
+    // pin needed for the three reads below
     val pairs = spanCandidates(docs, k, w, dfCap, minShared)
       .select(col("doc_a"), col("doc_b"))
     spanExtentsOver(docs, pairs, k, minLen, gramDfCap)
   }
 
   /** Extents over an ALREADY-COMPUTED candidate-pair frame (cheap to
-    * re-read: either `spanCandidates`' persisted result or the standing
+    * re-read: either `spanCandidates`' checkpointed result or the standing
     * pairs parquet) — the seed-and-extend machinery without re-deriving
     * the candidates, so the standing-artifact build can chain the pairs
     * artifact into the spans artifact instead of recomputing the
@@ -642,23 +629,17 @@ object TextOps {
     // sides (cluster members appear on both sides — a per-side table
     // would md5 them twice), persisted so the df count and both self-join
     // sides read one materialization (md5 is top-level per exploded row —
-    // codegen, no interpreted HOF lambda); released in `finally` once the
-    // extents are checkpointed
+    // codegen, no interpreted HOF lambda)
     val sideDocs = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val g = docs.join(sideDocs, Seq("doc_id"), "left_semi")
+    Using.resource(docs.join(sideDocs, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(1), greatest(length(col("text")) - k, lit(0)) + 1)).as("p"))
       .select(col("doc_id"), col("p"),
         md5(expr(s"substr(text, p, $k)").cast("binary")).as("h"))
-      .persist()
-    try {
-      // extents-sized standing result (q74's candidate-cache argument);
-      // materialized while g is cached, then the gram table is released
-      val out = spanExtentsFrom(docs, pairs, g, k, minLen, gramDfCap).persist()
-      out.count()
-      out
-    } finally { g.unpersist(); () }
+      .persist()) {
+      spanExtentsFrom(docs, pairs, _, k, minLen, gramDfCap).localCheckpoint()
+    }
   }
 
   /** The LAZY extents plan over materialized candidate `pairs` and the

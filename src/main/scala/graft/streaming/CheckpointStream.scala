@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.diff.DiffModel
 import graft.diff.DiffModel.CheckpointData
 import graft.state.SessionMerge
@@ -14,6 +15,7 @@ import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.charset.StandardCharsets
 import java.time.Duration
+import scala.util.Using
 
 /** The streaming lifecycle (SURVEY §2.1 S1/S2/S4/S7, §3 E1/E2): a polling
   * micro-batch CDC feed over the event table, the keyed stateful merge as a
@@ -702,6 +704,15 @@ object CheckpointStream {
     diffs.write.mode("overwrite").parquet(dir.toString)
   }
 
+  /** Whether `dir` holds a `batch_id=` generation; reading a missing or
+    * empty one fails with UNABLE_TO_INFER_SCHEMA.
+    */
+  def hasBatches(hconf: org.apache.hadoop.conf.Configuration, dir: String): Boolean = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(hconf)
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("batch_id="))
+  }
+
   /** Recover an interrupted `compactDiffs`: a leftover `.compact_bak` dir
     * means a swap may be half-done. Discriminator: if the consolidated
     * output still sits in `.compact_tmp`, the final rename never happened —
@@ -912,8 +923,7 @@ object CheckpointStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[StreamOut], batchId: Long) =>
-        val df = batch.toDF().persist()
-        try {
+        Using.resource(batch.toDF().persist()) { df =>
           val diffs = df.filter(col("kind") === "diff")
             .select(col("user_id"), col("seq"), col("event_id"), col("ts_us"),
               col("payload").as("diff_json"))
@@ -923,7 +933,7 @@ object CheckpointStream {
             df.filter(col("kind") === "session")
               .select("user_id", "task_id", "event_id", "ts_us", "payload", "seq"),
             sinkDir)
-        } finally { df.unpersist(); () }
+        }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime("1 second"))).start()

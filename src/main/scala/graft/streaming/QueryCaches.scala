@@ -3,22 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
-/** Releases per-query static caches (reference models, eval sets) when
-  * their owning streaming query terminates. The frames are persisted for
-  * the LIFE OF THE QUERY by design — batch-local == global scoring needs
-  * one pinned materialization every micro-batch reads — but without a
-  * termination hook they outlive the query for the application lifetime
-  * (the round-12 StreamCurate lmCached finding). The listener matches on
-  * the query id and self-removes after firing, so repeated `run()` calls
-  * don't accumulate listeners.
+/** Releases a streaming query's static caches (reference models, eval
+  * sets: the query-lifetime pins every micro-batch reads) when the query
+  * terminates. The listener matches on the query id and removes itself.
   *
-  * The registration RACES the query (round-13 ADVICE): an AvailableNow
-  * query over a tiny or empty feed can terminate BEFORE `addListener`
-  * runs, in which case QueryTerminatedEvent was dispatched to nobody and
-  * both the frames and the listener would leak for the application
-  * lifetime. After registering, we therefore check `query.isActive` and
-  * release through the same once-guard the listener uses — exactly one
-  * of the two paths fires, whichever observes termination first.
+  * The registration races the query: an AvailableNow query over a tiny
+  * feed can terminate before `addListener` runs, and its terminated event
+  * then reaches nobody. So after registering, `query.isActive` is checked
+  * too; a once-guard lets exactly one of the two paths release.
   */
 object QueryCaches {
 
@@ -38,7 +30,7 @@ object QueryCaches {
     }
     def releaseOnce(): Unit =
       if (released.compareAndSet(false, true)) {
-        frames.foreach(_.unpersist())
+        frames.foreach(graft.CacheLifecycle.unpersistOnRelease.release)
         spark.streams.removeListener(listener)
       }
     spark.streams.addListener(listener)

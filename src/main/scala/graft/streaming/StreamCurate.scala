@@ -1,11 +1,13 @@
 package graft.streaming
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.operators.DedupOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.util.Using
 
 /** The streaming ingest FRONT DOOR: the composed curation `CurateOps`
   * runs over an accumulated corpus (q45), applied per micro-batch as
@@ -211,14 +213,12 @@ object StreamCurate {
           "too_few_tokens" -> (col("n_tokens") < minTokens),
           "low_distinct_ratio" ->
             (col("n_distinct") * 100 < col("n_tokens") * minDistinctPct))
-        val stats = input
-          .withColumn("n_tokens", size(tokens))
-          .withColumn("n_distinct", size(array_distinct(tokens)))
-          .persist()
-        val preQuality = stats.filter(!rules.map(_._2).reduce(_ || _))
-        var lmVerdicts: Option[DataFrame] = None
-        var langVerdicts: Option[DataFrame] = None
-        try {
+        Using.Manager { use =>
+          val stats = use(input
+            .withColumn("n_tokens", size(tokens))
+            .withColumn("n_distinct", size(array_distinct(tokens)))
+            .persist())
+          val preQuality = stats.filter(!rules.map(_._2).reduce(_ || _))
           val ruleRejects = stats.filter(rules.map(_._2).reduce(_ || _))
             .withColumn("reason", concat_ws(",",
               rules.map { case (label, b) => when(b, lit(label)) }: _*))
@@ -236,15 +236,14 @@ object StreamCurate {
                 .lmScore(preQuality.select(col("doc_id"), col("text")), model)
                 .withColumn("lm_per_bigram",
                   expr("lm_score div n_bigrams"))
-              val verdicts = preQuality.select(col("doc_id"))
+              val verdicts = use(preQuality.select(col("doc_id"))
                 .join(scored, Seq("doc_id"), "left")
                 .select(col("doc_id"),
                   coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
                   coalesce(col("n_hits"), lit(0L)).as("n_hits"),
                   coalesce(col("lm_score"), lit(0L)).as("lm_score"),
                   coalesce(col("lm_per_bigram"), lit(0L)).as("lm_per_bigram"))
-                .persist()
-              lmVerdicts = Some(verdicts)
+                .persist())
               if (!verdicts.isEmpty)
                 CheckpointStream.appendDiffs(verdicts, lmDir, batchId)
               val passIds = verdicts
@@ -265,10 +264,9 @@ object StreamCurate {
           val (gated, langRejects) = langCached match {
             case None => (quality, None)
             case Some(model) =>
-              val verdicts = graft.operators.LangIdOps
+              val verdicts = use(graft.operators.LangIdOps
                 .predict(quality.select(col("doc_id"), col("text")), model)
-                .persist()
-              langVerdicts = Some(verdicts)
+                .persist())
               if (!verdicts.isEmpty)
                 CheckpointStream.appendDiffs(verdicts, langDir, batchId)
               val withPred = quality.join(verdicts, Seq("doc_id"), "left")
@@ -292,44 +290,36 @@ object StreamCurate {
           // 2. decontamination severity verdicts (all of them — the audit
           // trail carries the overlap fraction and band, q57's scoring),
           // survivors = within the configured tolerance
-          val verdicts = DedupOps.contaminationScore(gated, evalCached, shingleN)
-            .persist()
-          try {
-            if (!verdicts.isEmpty)
-              CheckpointStream.appendDiffs(verdicts, decontamDir, batchId)
-            val clean = gated
-              .join(verdicts.filter(col("overlap_bp") <= maxOverlapBp)
-                .select("doc_id"), Seq("doc_id"))
-              .persist()
-            try {
-              // 3. near-dup guard: flags committed + batch ingested
-              StreamNearDup.processBatch(clean, batchId, flagsDir, indexDir,
-                threshold, minhashK, bands, rowsPerBand, bandBuckets, setsBuckets)
-              // curated = clean minus THIS batch's committed flags — read
-              // back rather than recomputed, so a replay (whose index
-              // already holds the batch) writes the identical survivors
-              val fs = new Path(flagsDir)
-                .getFileSystem(sp.sparkContext.hadoopConfiguration)
-              val batchFlagDir = s"$flagsDir/batch_id=$batchId"
-              val flaggedIds =
-                if (fs.exists(new Path(batchFlagDir, "_SUCCESS")))
-                  sp.read.parquet(batchFlagDir).select("doc_id").distinct()
-                else clean.select("doc_id").limit(0)
-              // survivors keep every wire column (plus n_tokens — the
-              // stat downstream samplers/packers want); a deterministic
-              // stratified sample (q41) applies at READ time, keeping the
-              // curated store complete
-              val curated = clean.join(flaggedIds, Seq("doc_id"), "left_anti")
-                .drop("n_distinct")
-              if (!curated.isEmpty)
-                CheckpointStream.appendDiffs(curated, curatedDir, batchId)
-            } finally { clean.unpersist(); () }
-          } finally { verdicts.unpersist(); () }
-        } finally {
-          lmVerdicts.foreach(_.unpersist())
-          langVerdicts.foreach(_.unpersist())
-          stats.unpersist(); ()
-        }
+          val verdicts = use(DedupOps.contaminationScore(gated, evalCached, shingleN)
+            .persist())
+          if (!verdicts.isEmpty)
+            CheckpointStream.appendDiffs(verdicts, decontamDir, batchId)
+          val clean = use(gated
+            .join(verdicts.filter(col("overlap_bp") <= maxOverlapBp)
+              .select("doc_id"), Seq("doc_id"))
+            .persist())
+          // 3. near-dup guard: flags committed + batch ingested
+          StreamNearDup.processBatch(clean, batchId, flagsDir, indexDir,
+            threshold, minhashK, bands, rowsPerBand, bandBuckets, setsBuckets)
+          // curated = clean minus THIS batch's committed flags — read
+          // back rather than recomputed, so a replay (whose index
+          // already holds the batch) writes the identical survivors
+          val fs = new Path(flagsDir)
+            .getFileSystem(sp.sparkContext.hadoopConfiguration)
+          val batchFlagDir = s"$flagsDir/batch_id=$batchId"
+          val flaggedIds =
+            if (fs.exists(new Path(batchFlagDir, "_SUCCESS")))
+              sp.read.parquet(batchFlagDir).select("doc_id").distinct()
+            else clean.select("doc_id").limit(0)
+          // survivors keep every wire column (plus n_tokens — the
+          // stat downstream samplers/packers want); a deterministic
+          // stratified sample (q41) applies at READ time, keeping the
+          // curated store complete
+          val curated = clean.join(flaggedIds, Seq("doc_id"), "left_anti")
+            .drop("n_distinct")
+          if (!curated.isEmpty)
+            CheckpointStream.appendDiffs(curated, curatedDir, batchId)
+        }.get
       }
     val query =
       (if (availableNow) writer.trigger(Trigger.AvailableNow())

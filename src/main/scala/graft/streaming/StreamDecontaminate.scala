@@ -1,9 +1,11 @@
 package graft.streaming
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.operators.DedupOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.util.Using
 
 /** Streaming benchmark decontamination — the ingest-time counterpart of the
   * batch guard (q40, `DedupOps.decontaminate`): every document entering the
@@ -70,15 +72,14 @@ object StreamDecontaminate {
         // persist: the isEmpty probe and the parquet write would otherwise
         // each run the full shingle-explode + broadcast join (same
         // discipline as CheckpointStream.run's foreachBatch)
-        val flagged = (primed match {
+        Using.resource((primed match {
           case Some((evalSh, blob)) =>
             DedupOps.decontaminateBloomPrimed(batch, evalSh, blob, n)
           case None => DedupOps.decontaminate(batch, evalCached, n)
-        }).persist()
-        try {
+        }).persist()) { flagged =>
           if (!flagged.isEmpty)
             CheckpointStream.appendDiffs(flagged, sinkDir, batchId)
-        } finally { flagged.unpersist(); () }
+        }
       }
     val query =
       (if (availableNow) writer.trigger(Trigger.AvailableNow())

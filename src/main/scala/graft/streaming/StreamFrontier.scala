@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.operators.{FeedOps, RobotsOps, SitemapOps}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -7,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.util.Using
 
 /** The streaming FRONTIER lane: q154's fetch scheduler run as a
   * discovery stream — URLs arrive in micro-batches and leave as a
@@ -367,7 +369,7 @@ object StreamFrontier {
         // no broadcast hint on the offsets join: at spec scale AQE
         // broadcasts it; at web-host cardinality it shuffles by h —
         // the same key the ranking window already exchanged on
-        val scheduled = gated
+        Using.resource(gated
           .join(prevState.toDF("h", "host_offset"), Seq("h"), "left")
           .withColumn("rn", rn + coalesce(col("host_offset"), lit(0L)))
           .drop("host_offset")
@@ -387,8 +389,7 @@ object StreamFrontier {
             when(col("allowed"), (col("rn") - 1) * col("crawl_delay") /
               graft.operators.FrontierOps.WaveSeconds + 1)
               .otherwise(lit(-1)).cast("long").as("time_wave"))
-          .persist()
-        try {
+          .persist()) { scheduled =>
           if (!scheduled.isEmpty)
             CheckpointStream.appendDiffs(scheduled.drop("h"), scheduleDir, batchId)
           // state DELTA for this batch: the batch's own allowed counts
@@ -416,7 +417,7 @@ object StreamFrontier {
           // anchor) and the deltas newer than that predecessor
           gcState(fs, stateDir)
           gcState(fs, s"$stateDir/seen")
-        } finally { scheduled.unpersist(); () }
+        }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime("1 second"))).start()

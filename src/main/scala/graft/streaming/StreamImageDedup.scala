@@ -1,11 +1,13 @@
 package graft.streaming
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.operators.MultimodalOps
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.util.Using
 
 /** Streaming IMAGE ingest guard — the multimodal counterpart of
   * `StreamNearDup`'s text guard: every arriving image is checked against
@@ -61,7 +63,7 @@ object StreamImageDedup {
       batch: DataFrame, batchId: Long, flagsDir: String, indexDir: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val sigs = batch.select(col("asset_id"), col("payload"))
+    Using.resource(batch.select(col("asset_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, p) =>
@@ -74,8 +76,7 @@ object StreamImageDedup {
         }
       }
       .toDF("asset_id", "dhash", "digest", "decodable")
-      .persist()
-    try {
+      .persist()) { sigs =>
       val ok = sigs.where(col("decodable"))
       // STRICTLY-EARLIER generations only: a crash between this batch's
       // index write and the checkpoint commit leaves its own generation
@@ -112,9 +113,6 @@ object StreamImageDedup {
       ok.select(col("asset_id"), col("dhash"), col("digest"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$indexDir/batch_id=$batchId")
-    } finally {
-      sigs.unpersist()
-      ()
     }
   }
 
@@ -128,11 +126,7 @@ object StreamImageDedup {
     */
   private[streaming] def readIndexBefore(
       spark: SparkSession, indexDir: String, batchId: Long): DataFrame = {
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("batch_id="))
-    if (hasData)
+    if (CheckpointStream.hasBatches(spark.sparkContext.hadoopConfiguration, indexDir))
       spark.read.parquet(indexDir)
         .filter(col("batch_id") < batchId)
         .select(col("asset_id"), col("dhash"), col("digest"))

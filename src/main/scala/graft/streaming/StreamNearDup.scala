@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.CacheLifecycle.unpersistOnRelease
 import graft.operators.DedupOps
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -8,6 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
+import scala.util.Using
 
 /** Streaming NEAR-dup detection at ingest — the MinHash-LSH counterpart of
   * `StreamDedup`'s exact hash dedup: every arriving document is checked
@@ -368,16 +370,10 @@ object StreamNearDup {
       return Seq.empty[(Long, Long, Double)].toDF("doc_id", "dup_of", "jac")
     ensureBandsTable(spark, indexDir, bandBuckets)
     val bandsDf = DedupOps.bandedDocIds(hashed, minhashK, bands, rowsPerBand)
-    // persisted: the candidate set is consulted twice (touched-bucket list
-    // + verification join) and is tiny (pairs, not corpus). Unlike q36's
-    // standing pair set, the pin is RELEASED before returning: distinct
-    // probe inputs would otherwise accumulate distinct plan-keyed cache
-    // entries for the session. The flags result (smaller still — the
-    // above-threshold subset) is materialized via an eager local
-    // checkpoint first, which cuts its lineage off `cand`; its blocks are
-    // executor-stored and GC-collected once the caller drops the frame.
-    val cand = indexCandidates(spark, indexDir, bandsDf).persist()
-    try {
+    // pinned: the candidate set is consulted twice (touched-bucket list
+    // + verification join) and is tiny (pairs, not corpus); the flags
+    // (the above-threshold subset) are checkpointed before its release
+    Using.resource(indexCandidates(spark, indexDir, bandsDf).persist()) { cand =>
       cand
         .join(hashed.select(col("doc_id"), col("hs").as("hs_b")), Seq("doc_id"))
         .join(prunedSets(spark, fs, indexDir, cand, setsBuckets)
@@ -386,7 +382,7 @@ object StreamNearDup {
         .filter(col("jac") >= threshold)
         .select(col("doc_id"), col("dup_of"), col("jac"))
         .localCheckpoint(true)
-    } finally { cand.unpersist(); () }
+    }
   }
 
   /** Retention GC for the standing index: drop the OLDEST committed
@@ -561,55 +557,52 @@ object StreamNearDup {
     val sinkFs = new Path(sinkDir).getFileSystem(hconf)
     // shared head with the batch operator: same shingles, same hashes,
     // same signature/band derivation
-    val hashed = DedupOps.hashedShingleSets(batch).persist()
-    try {
-      val bandsDf = DedupOps.bandedDocIds(hashed, minhashK, bands, rowsPerBand)
-        .persist()
-      try {
-        // the marker gates the WHOLE flags step: a replayed batch must
-        // neither recompute flags against an index that already holds
-        // its own entries (jaccard-1.0 self-duplicates) nor pay the
-        // candidate join again
-        if (!sinkFs.exists(flagsMarker(sinkDir, batchId))) {
-          // earlier-seen candidates (bucketed index scan — no shuffle
-          // on the standing side) + earlier-in-batch candidates
-          val seenCand = indexCandidates(sp, indexDir, bandsDf)
-          val withinCand = bandsDf.as("a")
-            .join(bandsDf.as("b"),
-              col("a.band_key") === col("b.band_key") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("dup_of"), col("b.doc_id").as("doc_id"))
-          // persisted: consulted twice (touched-bucket list + join);
-          // bounded by the candidate count, not the corpus
-          val cand = seenCand.unionByName(withinCand).distinct().persist()
-          try {
-            // verification reads ONLY the candidates' doc_buckets of
-            // the committed sets store (prunedSets), plus the arriving
-            // batch's own in-memory sets; the candidate side is tiny
-            // (AQE broadcasts it), so the heavy shingle-set rows are
-            // neither fully scanned nor shuffled
-            val setsAll = prunedSets(sp, fs, indexDir, cand, setsBuckets)
-              .unionByName(hashed.select(col("doc_id"), col("hs")))
-            val flagged = cand
-              .join(hashed.select(col("doc_id"), col("hs").as("hs_b")), Seq("doc_id"))
-              .join(setsAll.select(col("doc_id").as("dup_of"), col("hs").as("hs_a")),
-                Seq("dup_of"))
-              .withColumn("jac", DedupOps.jaccard(col("hs_a"), col("hs_b")))
-              .filter(col("jac") >= threshold)
-              .select(col("doc_id"), col("dup_of"), col("jac"))
-              .persist()
-            try {
-              // commit order is load-bearing — see the replay discipline
-              if (!flagged.isEmpty)
-                CheckpointStream.appendDiffs(flagged, sinkDir, batchId)
-              commitFlagsMarker(sinkFs, sinkDir, batchId)
-            } finally { flagged.unpersist(); () }
-          } finally { cand.unpersist(); () }
+    Using.Manager { use =>
+      val hashed = use(DedupOps.hashedShingleSets(batch).persist())
+      val bandsDf = use(DedupOps.bandedDocIds(hashed, minhashK, bands, rowsPerBand)
+        .persist())
+      // the marker gates the WHOLE flags step: a replayed batch must
+      // neither recompute flags against an index that already holds
+      // its own entries (jaccard-1.0 self-duplicates) nor pay the
+      // candidate join again
+      if (!sinkFs.exists(flagsMarker(sinkDir, batchId))) {
+        // earlier-seen candidates (bucketed index scan — no shuffle
+        // on the standing side) + earlier-in-batch candidates
+        val seenCand = indexCandidates(sp, indexDir, bandsDf)
+        val withinCand = bandsDf.as("a")
+          .join(bandsDf.as("b"),
+            col("a.band_key") === col("b.band_key") &&
+              col("a.doc_id") < col("b.doc_id"))
+          .select(col("a.doc_id").as("dup_of"), col("b.doc_id").as("doc_id"))
+        // persisted: consulted twice (touched-bucket list + join);
+        // bounded by the candidate count, not the corpus. Released
+        // with the flags step, before the batch's sets are appended
+        Using.resource(seenCand.unionByName(withinCand).distinct().persist()) { cand =>
+          // verification reads ONLY the candidates' doc_buckets of
+          // the committed sets store (prunedSets), plus the arriving
+          // batch's own in-memory sets; the candidate side is tiny
+          // (AQE broadcasts it), so the heavy shingle-set rows are
+          // neither fully scanned nor shuffled
+          val setsAll = prunedSets(sp, fs, indexDir, cand, setsBuckets)
+            .unionByName(hashed.select(col("doc_id"), col("hs")))
+          Using.resource(cand
+            .join(hashed.select(col("doc_id"), col("hs").as("hs_b")), Seq("doc_id"))
+            .join(setsAll.select(col("doc_id").as("dup_of"), col("hs").as("hs_a")),
+              Seq("dup_of"))
+            .withColumn("jac", DedupOps.jaccard(col("hs_a"), col("hs_b")))
+            .filter(col("jac") >= threshold)
+            .select(col("doc_id"), col("dup_of"), col("jac"))
+            .persist()) { flagged =>
+            // commit order is load-bearing — see the replay discipline
+            if (!flagged.isEmpty)
+              CheckpointStream.appendDiffs(flagged, sinkDir, batchId)
+            commitFlagsMarker(sinkFs, sinkDir, batchId)
+          }
         }
-        appendSets(hashed, indexDir, batchId, setsBuckets)
-        appendBands(sp, bandsDf, indexDir, batchId, bandBuckets)
-      } finally { bandsDf.unpersist(); () }
-    } finally { hashed.unpersist(); () }
+      }
+      appendSets(hashed, indexDir, batchId, setsBuckets)
+      appendBands(sp, bandsDf, indexDir, batchId, bandBuckets)
+    }.get
   }
 
   /** Run-start preconditions shared by `run` and composed callers: verify

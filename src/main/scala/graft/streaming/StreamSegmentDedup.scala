@@ -1,10 +1,12 @@
 package graft.streaming
 
+import graft.CacheLifecycle.unpersistOnRelease
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import scala.util.Using
 
 /** Streaming SEGMENT-level dedup — q121's passage-grain dedup at ingest
   * time, the third standing guard beside the text near-dup
@@ -57,7 +59,7 @@ object StreamSegmentDedup {
       batch: DataFrame, batchId: Long, outDir: String, indexDir: String,
       segWords: Int): Unit = {
     val spark = batch.sparkSession
-    val segs = batch
+    Using.resource(batch
       .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
       .select(col("doc_id"),
         posexplode(expr(
@@ -65,8 +67,7 @@ object StreamSegmentDedup {
             s"i -> concat_ws(' ', slice(w, (i - 1) * $segWords + 1, $segWords)))")))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("seg_idx"),
         col("col").as("seg"), md5(col("col").cast("binary")).as("h"))
-      .persist()
-    try {
+      .persist()) { segs =>
       // strictly-earlier generations only (the replay-safe probe view —
       // see StreamImageDedup.readIndexBefore's rationale)
       val standing = readIndexBefore(spark, indexDir, batchId)
@@ -99,7 +100,7 @@ object StreamSegmentDedup {
         .join(standing, Seq("h"), "left_anti")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$indexDir/batch_id=$batchId")
-    } finally { segs.unpersist(); () }
+    }
   }
 
   /** The standing digest index (empty frame before the first commit). */
@@ -109,11 +110,7 @@ object StreamSegmentDedup {
   /** Generations strictly before `batchId` — the replay-safe probe view. */
   private[streaming] def readIndexBefore(
       spark: SparkSession, indexDir: String, batchId: Long): DataFrame = {
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("batch_id="))
-    if (hasData)
+    if (CheckpointStream.hasBatches(spark.sparkContext.hadoopConfiguration, indexDir))
       spark.read.parquet(indexDir)
         .filter(col("batch_id") < batchId)
         .select(col("h"))

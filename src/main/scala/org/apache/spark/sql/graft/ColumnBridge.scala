@@ -13,3 +13,9 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** The cache manager's `private[sql]` entry count (public: `isEmpty`). */
+object CacheBridge {
+  def entries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
+}

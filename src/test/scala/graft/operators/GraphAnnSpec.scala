@@ -51,7 +51,7 @@ class GraphAnnSpec extends AnyFunSuite {
       val recall = approx.intersect(exact).size.toDouble / exact.size
       assert(recall >= 0.9, s"graph recall $recall < 0.9")
       assert(entries.length == 16 && inv.count() > 0)
-    } finally { edges.unpersist(); cNv.unpersist(); () }
+    } finally { cNv.unpersist(); () }
   }
 
   private def graphEntriesOf(
@@ -98,11 +98,9 @@ class GraphAnnSpec extends AnyFunSuite {
     val c = corpus(sf)
     val cents = SimilarityOps.trainIvfCentroids(c, 16)
     val edges = SimilarityOps.buildNeighborGraph(c, cents, m = 10)
-    try {
-      val maxDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .agg(max(col("d"))).collect()(0).getLong(0)
-      assert(maxDeg <= 20, s"degree $maxDeg exceeds 2m")
-    } finally { edges.unpersist(); () }
+    val maxDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      .agg(max(col("d"))).collect()(0).getLong(0)
+    assert(maxDeg <= 20, s"degree $maxDeg exceeds 2m")
   }
 
   test("clustered corpus: guided probe finds true neighbors with a TINY beam") {
@@ -137,7 +135,7 @@ class GraphAnnSpec extends AnyFunSuite {
       }
       val recall = approx.count(exact.contains).toDouble / approx.size
       assert(recall >= 0.9, s"clustered recall $recall")
-    } finally { edges.unpersist(); cNv.unpersist(); () }
+    } finally { cNv.unpersist(); () }
   }
 
   test("fused multi-leg beam == standalone per-leg runs, bit-for-bit") {
@@ -166,7 +164,7 @@ class GraphAnnSpec extends AnyFunSuite {
       assert(rows(fused.filter(col("leg") === "b").drop("leg")) == soloB)
       assert(soloA != soloB, "legs should differ for the parity to mean anything")
       fused.unpersist()
-    } finally { edgesA.unpersist(); edgesB.unpersist(); cNv.unpersist(); () }
+    } finally { cNv.unpersist(); () }
   }
 
   test("standing == in-query is deterministic across runs") {

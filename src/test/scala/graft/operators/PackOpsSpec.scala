@@ -27,30 +27,36 @@ class PackOpsSpec extends AnyFunSuite {
   test("prefix sum plan: one range shuffle of the data, no pid re-shuffle, no global window") {
     import spark.implicits._
     val df = (1 to 100).map(i => (i.toLong, 1L)).toDF("k", "v")
-    val plan = PackOps.exclusivePrefixSum(df, "k", "v", "off", partitions = 8)
+    // the running-sum pass (checkpointed inside exclusivePrefixSum, so
+    // its plan is read before the checkpoint): one range shuffle, then
+    // the iterator pass
+    val pass = PackOps.runningSum(df, Seq("k"), "v", partitions = 8)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"), plan)
+    assert(pass.contains("rangepartitioning"), pass)
     // the defeat case: a Window.partitionBy(spark_partition_id()) running
     // sum demands a SECOND full-data exchange on __pid right after the
-    // range shuffle (measured before the mapPartitions rewrite). The only
-    // allowed hashpartitioning(__pid) exchange is the totals aggregate's,
-    // which ships one partial-sum row per (partition, task) — assert the
-    // running sum is the iterator pass and no window is keyed on __pid
-    assert(plan.contains("MapPartitions"), plan)
+    // range shuffle (measured before the mapPartitions rewrite) — assert
+    // the running sum is the iterator pass and no window is keyed on __pid
+    assert(pass.contains("MapPartitions") && !pass.contains("windowspecdefinition"), pass)
+    val out = PackOps.exclusivePrefixSum(df, "k", "v", "off", partitions = 8)
+    val plan = out.queryExecution.executedPlan.toString
     // no data-sized window at all: the only window is the
     // O(partitions)-row offsets shift, which sums __t — a pid-keyed
-    // running sum over the data (the full-re-shuffle defeat case) would
-    // show a windowspecdefinition over v ordered by k
+    // running sum over the data would show a windowspecdefinition over
+    // v ordered by k
     val windows = plan.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
     assert(windows.nonEmpty && windows.forall(w => w.contains("__t") && !w.contains("k#")),
       s"unexpected data-sized window:\n$plan")
     // offsets come back via broadcast: the stream side keeps its layout
     assert(plan.contains("BroadcastHashJoin"), plan)
-    // both consumers (stream side + offsets aggregate) read the persisted
-    // materialization of the pid-stamped stream — the guarantee that one
-    // range-boundary sample backs both __pid reads (a re-executed exchange
-    // could sample different boundaries if reuse were disabled)
-    assert(plan.linesIterator.count(_.contains("InMemoryTableScan")) >= 2, plan)
+    // both consumers (stream side + offsets aggregate) scan the ONE
+    // checkpointed materialization of the pid-stamped stream — the
+    // guarantee that one range-boundary sample backs both __pid reads (a
+    // re-executed exchange could sample different boundaries)
+    val scans = SparkTestSession.finalPlan(out).collect {
+      case s: org.apache.spark.sql.execution.RDDScanExec => s.rdd.id
+    }
+    assert(scans.size >= 2 && scans.distinct.size == 1, plan)
   }
 
   test("packChunks invariants: spans tile each doc, chunks respect capacity") {

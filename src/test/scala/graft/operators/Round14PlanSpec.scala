@@ -83,8 +83,9 @@ class Round14PlanSpec extends AnyFunSuite {
     // against. That single parity leg is inherently all-pairs
     // (BroadcastNestedLoopJoin); the pin here is that it stays the ONLY
     // one — the clustered production leg must never contribute a second.
-    // semanticDedup persists its verdict frame, so the BNLJ lives in
-    // the CACHED plan — traverse into InMemoryRelations to find it
+    // semanticDedup checkpoints its verdicts, so the pin reads the lazy
+    // verdict plan under q126's parameters; the clustered corpus is
+    // cached there — traverse into InMemoryRelations too
     def deep(p: org.apache.spark.sql.execution.SparkPlan):
         Seq[org.apache.spark.sql.execution.SparkPlan] = {
       val nodes = p.collect { case x => x }
@@ -101,13 +102,15 @@ class Round14PlanSpec extends AnyFunSuite {
         case _ => Nil
       }
     }
-    val q126 = SimilarityOps.q126SemanticDedup(spark, sf)
-    val bnlj = deep(plan(q126)).collect {
-      case j: BroadcastNestedLoopJoinExec => j
-      case j: CartesianProductExec => j
+    SimilarityOps.semanticDedupWith(SimilarityOps.corpus(spark, sf),
+        threshold = 0.4, nClusters = 16, trainSampleMod = 1) { q126 =>
+      val bnlj = deep(plan(q126)).collect {
+        case j: BroadcastNestedLoopJoinExec => j
+        case j: CartesianProductExec => j
+      }
+      assert(bnlj.size == 1,
+        s"q126 expects exactly the declared exact-parity BNLJ, got ${bnlj.size}:\n${plan(q126)}")
     }
-    assert(bnlj.size == 1,
-      s"q126 expects exactly the declared exact-parity BNLJ, got ${bnlj.size}:\n${plan(q126)}")
   }
 
   test("q128/q129/q131 plan no cartesian; q129's only hash exchange is the canonical-key window") {

@@ -93,34 +93,36 @@ class Round15PlanSpec extends AnyFunSuite {
     // must read documents.parquet ONLY through InMemoryTableScans
     // (each cache = one tokenize pass). A bare parquet scan of
     // documents outside a cache means a consumer regressed to its own
-    // tokenize pass.
-    val df = SearchOps.q116DecontaminateRetrieval(spark, sf)
-    df.collect()
-    // traversal across AQE stages WITHOUT descending into cached
-    // relations: scans inside an InMemoryTableScan are the cache's ONE
-    // build pass
-    def outsideCaches(p: SparkPlan): Seq[SparkPlan] = {
-      val nodes = p.collect { case x => x }
-      nodes ++ nodes.flatMap {
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          outsideCaches(s.plan)
-        case _ => Nil
+    // tokenize pass. q116 checkpoints its result and releases the pins,
+    // so the pin reads the lazy plan while they live.
+    SearchOps.q116With(spark, sf) { df =>
+      df.collect()
+      // traversal across AQE stages WITHOUT descending into cached
+      // relations: scans inside an InMemoryTableScan are the cache's ONE
+      // build pass
+      def outsideCaches(p: SparkPlan): Seq[SparkPlan] = {
+        val nodes = p.collect { case x => x }
+        nodes ++ nodes.flatMap {
+          case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+            outsideCaches(s.plan)
+          case _ => Nil
+        }
       }
+      val top = outsideCaches(plan(df))
+      val bareDocScans = top.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains("documents.parquet")) => s
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if s.toString.contains("documents") => s
+      }
+      assert(bareDocScans.isEmpty,
+        s"q116 scans documents outside the pinned token caches:\n${plan(df)}")
+      val cached = deep(plan(df)).collect {
+        case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => c
+      }
+      assert(cached.nonEmpty,
+        s"q116 lost its pinned token frame:\n${plan(df)}")
     }
-    val top = outsideCaches(plan(df))
-    val bareDocScans = top.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
-        if s.relation.location.rootPaths.exists(_.toString.contains("documents.parquet")) => s
-      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-        if s.toString.contains("documents") => s
-    }
-    assert(bareDocScans.isEmpty,
-      s"q116 scans documents outside the pinned token caches:\n${plan(df)}")
-    val cached = deep(plan(df)).collect {
-      case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => c
-    }
-    assert(cached.nonEmpty,
-      s"q116 lost its pinned token frame:\n${plan(df)}")
   }
 
   // ------------------------------------------------- session-2 newcomers

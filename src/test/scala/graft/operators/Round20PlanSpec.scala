@@ -83,63 +83,66 @@ class Round20PlanSpec extends AnyFunSuite {
   test("q205 importance scoring: no cartesian beyond the 1-row totals " +
     "broadcasts, the 4096-row weight table broadcasts, no window, " +
     "bounded hash exchanges") {
-    val df = CurateOps.q205ImportanceSample(spark, sf)
-    df.collect()
-    val nodes = deep(plan(df))
-    val cart = nodes.collect {
-      case j: CartesianProductExec => j
-      case j: BroadcastNestedLoopJoinExec => j
-    }
-    // the tot/agg 1-row cross joins legitimately plan as BNLJ over a
-    // broadcast single row; anything joining real row streams may not
-    def hasBroadcast(p: SparkPlan): Boolean =
-      p.collectFirst {
-        case b: org.apache.spark.sql.execution.exchange
-          .BroadcastExchangeExec => b
-        case b: org.apache.spark.sql.execution.adaptive
-          .BroadcastQueryStageExec => b
-        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-          if r.child.isInstanceOf[
-            org.apache.spark.sql.execution.exchange.BroadcastExchangeExec] => r
-      }.isDefined
-    assert(cart.forall(j => j.children.exists(hasBroadcast)),
-      s"non-broadcast cartesian:\n${plan(df)}")
-    val windows = nodes.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
-    }
-    assert(windows.isEmpty, s"q205 must not window:\n${plan(df)}")
-    // the feature counts (dc) and per-doc scores are PERSISTED — each
-    // cached subtree's exchanges execute once at materialization no
-    // matter how many consumers scan it, so the executed-work pin is
-    // the TOP-LEVEL plan (cached scans excluded): the documents-to-
-    // scores left join + the output sort, nothing else
-    def deepNoCache(p: SparkPlan): Seq[SparkPlan] = {
-      val nodes = p.collect { case x => x }
-      nodes ++ nodes.flatMap {
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          deepNoCache(s.plan)
-        case _ => Nil
+    // q205 checkpoints its result and releases its two pins, so the pin
+    // reads the lazy plan while they live
+    CurateOps.importanceSampleWith(spark, sf) { df =>
+      df.collect()
+      val nodes = deep(plan(df))
+      val cart = nodes.collect {
+        case j: CartesianProductExec => j
+        case j: BroadcastNestedLoopJoinExec => j
       }
+      // the tot/agg 1-row cross joins legitimately plan as BNLJ over a
+      // broadcast single row; anything joining real row streams may not
+      def hasBroadcast(p: SparkPlan): Boolean =
+        p.collectFirst {
+          case b: org.apache.spark.sql.execution.exchange
+            .BroadcastExchangeExec => b
+          case b: org.apache.spark.sql.execution.adaptive
+            .BroadcastQueryStageExec => b
+          case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+            if r.child.isInstanceOf[
+              org.apache.spark.sql.execution.exchange.BroadcastExchangeExec] => r
+        }.isDefined
+      assert(cart.forall(j => j.children.exists(hasBroadcast)),
+        s"non-broadcast cartesian:\n${plan(df)}")
+      val windows = nodes.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+      assert(windows.isEmpty, s"q205 must not window:\n${plan(df)}")
+      // the feature counts (dc) and per-doc scores are PERSISTED — each
+      // cached subtree's exchanges execute once at materialization no
+      // matter how many consumers scan it, so the executed-work pin is
+      // the TOP-LEVEL plan (cached scans excluded): the documents-to-
+      // scores left join + the output sort, nothing else
+      def deepNoCache(p: SparkPlan): Seq[SparkPlan] = {
+        val nodes = p.collect { case x => x }
+        nodes ++ nodes.flatMap {
+          case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+            deepNoCache(s.plan)
+          case _ => Nil
+        }
+      }
+      val topHash = deepNoCache(plan(df))
+        .collect { case s: ShuffleExchangeExec
+          // input-widening repartitions (Tables.widen / WarcOps.widenRecords,
+          // r21 guide-2.5 unsplittable-input repair) are deliberate and
+          // scale-conditional; the pin guards exchanges the OPERATOR induces
+          if !Seq(org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL,
+              org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM)
+            .contains(s.shuffleOrigin) => s }
+        .count(_.outputPartitioning.toString.toLowerCase.contains("hash"))
+      assert(topHash <= 3,
+        s"q205's final pass expects only the doc_id join exchanges:\n${plan(df)}")
+      // and both standing intermediates are genuinely cached (one
+      // materialization serving the weight fit, the mean, and the join)
+      val cachedScans = deep(plan(df)).collect {
+        case c: org.apache.spark.sql.execution.columnar
+          .InMemoryTableScanExec => c
+      }
+      assert(cachedScans.nonEmpty,
+        s"q205 must reuse its materialized intermediates:\n${plan(df)}")
     }
-    val topHash = deepNoCache(plan(df))
-      .collect { case s: ShuffleExchangeExec
-        // input-widening repartitions (Tables.widen / WarcOps.widenRecords,
-        // r21 guide-2.5 unsplittable-input repair) are deliberate and
-        // scale-conditional; the pin guards exchanges the OPERATOR induces
-        if !Seq(org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL,
-            org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM)
-          .contains(s.shuffleOrigin) => s }
-      .count(_.outputPartitioning.toString.toLowerCase.contains("hash"))
-    assert(topHash <= 3,
-      s"q205's final pass expects only the doc_id join exchanges:\n${plan(df)}")
-    // and both standing intermediates are genuinely cached (one
-    // materialization serving the weight fit, the mean, and the join)
-    val cachedScans = deep(plan(df)).collect {
-      case c: org.apache.spark.sql.execution.columnar
-        .InMemoryTableScanExec => c
-    }
-    assert(cachedScans.nonEmpty,
-      s"q205 must reuse its materialized intermediates:\n${plan(df)}")
   }
 
   test("q195 with dictionary training: plan shape UNCHANGED from the " +

@@ -188,8 +188,8 @@ class SearchOpsSpec extends AnyFunSuite {
     val evalSet = docs.filter(col("doc_id") === 100L)
       .select(col("doc_id").as("eval_id"), col("text"))
     val out = SearchOps.decontaminateByRetrieval(spark, docs, evalSet,
-      k = 3, maxQueryTerms = 4, minScoreFp = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      k = 3, maxQueryTerms = 4, minScoreFp = 0L)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // the paraphrase ranks FIRST; the eval doc itself is excluded
     assert(out.nonEmpty && out.head == (100L, 1L, 1L),
       s"paraphrase not retrieved first: ${out.mkString("; ")}")
@@ -216,8 +216,8 @@ class SearchOpsSpec extends AnyFunSuite {
     val evalSet = docs.filter(col("doc_id") === 100L)
       .select(col("doc_id").as("eval_id"), col("text"))
     val out = SearchOps.decontaminateByRetrieval(spark, docs, evalSet,
-      k = 5, maxQueryTerms = 2, minScoreFp = 0L)
-      .collect().map(_.getLong(2)).toSet
+      k = 5, maxQueryTerms = 2, minScoreFp = 0L)(_.collect())
+      .map(_.getLong(2)).toSet
     assert(out.contains(1L), s"rare-term match missing: $out")
     assert(!out.contains(2L), s"capped-out term still retrieved: $out")
   }
@@ -230,15 +230,15 @@ class SearchOpsSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val evalSet = docs.where(col("doc_id") % 7 === 0)
       .select(col("doc_id").as("eval_id"), col("text"))
-    val inline = SearchOps.decontaminateByRetrieval(spark, docs, evalSet,
-      vocabInlineMax = Int.MaxValue)
-    val joined = SearchOps.decontaminateByRetrieval(spark, docs, evalSet,
-      vocabInlineMax = 8)
-    val a = inline.collect().map(_.toSeq).toSeq
-    val b = joined.collect().map(_.toSeq).toSeq
+    val a = SearchOps.decontaminateByRetrieval(spark, docs, evalSet,
+      vocabInlineMax = Int.MaxValue)(_.collect().map(_.toSeq).toSeq)
+    // the join regime's lazy plan is read before `finish` returns
+    val (b, plan) = SearchOps.decontaminateByRetrieval(spark, docs, evalSet,
+      vocabInlineMax = 8) { df =>
+      (df.collect().map(_.toSeq).toSeq, df.queryExecution.executedPlan.toString)
+    }
     assert(a.nonEmpty && a == b, s"regimes disagree: ${a.length} vs ${b.length} rows")
     // the vocab stays OUT of the plan string in the join regime
-    val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains(" IN ("), s"literal IN-list leaked into join-regime plan")
   }
 
